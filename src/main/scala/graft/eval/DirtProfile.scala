@@ -100,8 +100,7 @@ object DirtProfile {
           s"output=${s.output.map(_.name).mkString(",")}")
       }
 
-      tr.unpersist()
-      mi.unpersist()
+      graft.util.CacheRelease.release(tr, mi)
       spark.catalog.clearCache()
     }
     spark.stop()

@@ -184,7 +184,7 @@ object Evaluate {
         (rankedPairs(deduped.join(broadcast(labeledDf),
           Seq("path1", "path2"), "left_semi")),
           deduped.count().toInt)
-      } finally deduped.unpersist()
+      } finally graft.util.CacheRelease.release(deduped)
     val best = sweep(ranked, pos, neg)
     val threshold = if (best.threshold <= 0) 0.01 else best.threshold
     val scoreMap = ranked.toMap

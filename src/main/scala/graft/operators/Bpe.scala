@@ -92,10 +92,10 @@ object Bpe {
         .limit(1)
         .as[(String, String, Long)]
         .collect() // materializes `hist`'s lazy checkpoint
-      // Dataset.unpersist would be a no-op here (checkpoint blocks live
-      // on the underlying RDD) — free the grandparent explicitly or
-      // every merge round leaks its histogram into storage memory
-      if (prev != null) { graft.util.Checkpoints.free(prev); prev = null }
+      // free the grandparent checkpoint (CacheRelease.release unpersists
+      // the RDD behind it) or every merge round leaks its histogram into
+      // storage memory
+      if (prev != null) { graft.util.CacheRelease.release(prev); prev = null }
       top.headOption match {
         case None => exhausted = true // every word is one symbol already
         case Some((l, r, c)) =>
@@ -112,8 +112,8 @@ object Bpe {
           rank += 1
       }
     }
-    if (prev != null) graft.util.Checkpoints.free(prev)
-    graft.util.Checkpoints.free(hist)
+    if (prev != null) graft.util.CacheRelease.release(prev)
+    graft.util.CacheRelease.release(hist)
     merges.result().toDF("rank", "left", "right", "pair_count")
   }
 

@@ -98,7 +98,7 @@ object Classifier {
         w = next
       }
       w
-    } finally { data.unpersist(); () }
+    } finally graft.util.CacheRelease.release(data)
   }
 
   /** Map-only scoring with FROZEN quantized weights (binary presence

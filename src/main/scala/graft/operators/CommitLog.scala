@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, input_file_name, max => fmax, min => fmin}
 import org.apache.spark.sql.types.StructType
+import graft.util.CacheRelease
 
 /** Minimal transactional table format: a versioned commit log over
   * plain parquet — snapshot isolation, time-travel reads, ACID MERGE,
@@ -1416,50 +1417,52 @@ object GraftTable {
       maxBatch = Some(math.max(batchId, p.maxBatch.getOrElse(-1L))),
       txns = p.txns + (appId -> batchId),
       txnStamps = p.txnStamps + (appId -> System.currentTimeMillis()))
-    var attempts = 0
-    while (true) {
-      val latest = latestVersion(spark, root)
-      try {
-        if (latest == -1L) {
-          val emptyBase = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            dataShape.schema)
-          // a stats-creating first batch is range-laid on the head
-          // stats column so the layout starts prunable, exactly like
-          // createPartitioned (later merges preserve it)
-          val merged0 =
-            Cdc.latestWinsMerge(emptyBase, changes, key, ordering, op)
-          val merged = statsColumns.headOption match {
-            case Some(k) => merged0.repartitionByRange(col(k))
-            case None => merged0
+    try {
+      var attempts = 0
+      while (true) {
+        val latest = latestVersion(spark, root)
+        try {
+          if (latest == -1L) {
+            val emptyBase = spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              dataShape.schema)
+            // a stats-creating first batch is range-laid on the head
+            // stats column so the layout starts prunable, exactly like
+            // createPartitioned (later merges preserve it)
+            val merged0 =
+              Cdc.latestWinsMerge(emptyBase, changes, key, ordering, op)
+            val merged = statsColumns.headOption match {
+              case Some(k) => merged0.repartitionByRange(col(k))
+              case None => merged0
+            }
+            commitVersion(merged, root, stamp(Pending("CREATE", -1L,
+              statsKeys = statsColumns)))
+          } else {
+            val parent = readManifest(spark, root, latest)
+            if (parent.txns.get(appId).exists(batchId <= _)) return false
+            require(schemaKey(dataShape.schema) ==
+              schemaKey(StructType.fromDDL(parent.schemaDdl)),
+              s"schema mismatch: table has [${parent.schemaDdl}], batch " +
+                s"$batchId has [${dataShape.schema.toDDL}]")
+            require(statsColumns.isEmpty || statsColumns == parent.statsCols,
+              s"statsColumns ${statsColumns} differs from the table's " +
+                s"committed stats layout ${parent.statsCols} — stats " +
+                "columns are fixed at table creation")
+            if (parent.statsCols.contains(key))
+              mergePrunedImpl(root, changes, key, ordering, latest, op,
+                stamp, useDvs = deletionVectors)
+            else
+              mergeImpl(root, changes, key, ordering, latest, op, stamp)
           }
-          commitVersion(merged, root, stamp(Pending("CREATE", -1L,
-            statsKeys = statsColumns)))
-        } else {
-          val parent = readManifest(spark, root, latest)
-          if (parent.txns.get(appId).exists(batchId <= _)) return false
-          require(schemaKey(dataShape.schema) ==
-            schemaKey(StructType.fromDDL(parent.schemaDdl)),
-            s"schema mismatch: table has [${parent.schemaDdl}], batch " +
-              s"$batchId has [${dataShape.schema.toDDL}]")
-          require(statsColumns.isEmpty || statsColumns == parent.statsCols,
-            s"statsColumns ${statsColumns} differs from the table's " +
-              s"committed stats layout ${parent.statsCols} — stats " +
-              "columns are fixed at table creation")
-          if (parent.statsCols.contains(key))
-            mergePrunedImpl(root, changes, key, ordering, latest, op,
-              stamp, useDvs = deletionVectors)
-          else
-            mergeImpl(root, changes, key, ordering, latest, op, stamp)
+          return true
+        } catch {
+          case e: ConflictException =>
+            attempts += 1
+            if (attempts >= 5) throw e
         }
-        return true
-      } catch {
-        case e: ConflictException =>
-          attempts += 1
-          if (attempts >= 5) throw e
       }
-    }
-    false // unreachable
+      false // unreachable
+    } finally CacheRelease.release(changes)
   }
 
   /** Small-file compaction (OPTIMIZE): rewrite the snapshot at
@@ -1750,7 +1753,8 @@ object GraftTable {
     * merge-materialize-source step exists for exactly this. The base
     * side needs no pinning: it is a scan of immutable committed
     * parquet. Cost: one pass over the changelog into block storage —
-    * bounded by the changelog, never the table.
+    * bounded by the changelog, never the table. The checkpoint is freed
+    * once the commit returns or throws.
     */
   def merge(root: String, changes: DataFrame, key: String,
       ordering: Seq[String], expectedVersion: Long,
@@ -1765,16 +1769,18 @@ object GraftTable {
     val parent = readManifest(spark, root, expectedVersion)
     val base = snapshotOf(spark, root, parent)
     val staged = changes.localCheckpoint(true)
-    val merged = Cdc.latestWinsMerge(base, staged, key, ordering, op)
-    commitVersion(merged, root, mod(Pending("MERGE", expectedVersion,
-      maxBatch = parent.maxBatch, txns = parent.txns,
-      txnStamps = parent.txnStamps,
-      schemaDdl = Some(parent.schemaDdl),
-      statsKeys = parent.statsCols,
-      cdf = Some(Cdc.latestWinsChanges(base, staged, key, ordering,
-        op)),
-      tsFloor = parent.ts.getOrElse(0L),
-      checks = parent.checks)))
+    try {
+      val merged = Cdc.latestWinsMerge(base, staged, key, ordering, op)
+      commitVersion(merged, root, mod(Pending("MERGE", expectedVersion,
+        maxBatch = parent.maxBatch, txns = parent.txns,
+        txnStamps = parent.txnStamps,
+        schemaDdl = Some(parent.schemaDdl),
+        statsKeys = parent.statsCols,
+        cdf = Some(Cdc.latestWinsChanges(base, staged, key, ordering,
+          op)),
+        tsFloor = parent.ts.getOrElse(0L),
+        checks = parent.checks)))
+    } finally CacheRelease.release(staged)
   }
 
   /** File-pruned ACID MERGE (the Delta data-skipping recipe, VERDICT
@@ -1849,121 +1855,123 @@ object GraftTable {
     // re-evaluated per job could prune against one key set and merge
     // another (see [[merge]]'s scaladoc)
     val changes = changes0.localCheckpoint(true)
-    val bounds = changes.agg(fmin(col(key)).cast("long"),
-      fmax(col(key)).cast("long")).head()
-    if (bounds.isNullAt(0)) {
-      // empty changelog: nothing to do but commit an identical version
-      // (with an explicitly empty change feed)
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      return commitVersion(empty,
-        root, mod(Pending("MERGE", expectedVersion,
-          carryFiles = parent.files, carryRanges = parent.ranges,
+    try {
+      val bounds = changes.agg(fmin(col(key)).cast("long"),
+        fmax(col(key)).cast("long")).head()
+      if (bounds.isNullAt(0)) {
+        // empty changelog: nothing to do but commit an identical version
+        // (with an explicitly empty change feed)
+        val empty = spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        return commitVersion(empty,
+          root, mod(Pending("MERGE", expectedVersion,
+            carryFiles = parent.files, carryRanges = parent.ranges,
+            maxBatch = parent.maxBatch, txns = parent.txns,
+            txnStamps = parent.txnStamps,
+            schemaDdl = Some(parent.schemaDdl),
+            statsKeys = parent.statsCols,
+            cdf = Some(withChangeType(empty)),
+            tsFloor = parent.ts.getOrElse(0L),
+            carryDvs = parent.dvs,
+            checks = parent.checks)))
+      }
+      val (cmin, cmax) = (bounds.getLong(0), bounds.getLong(1))
+      // stage 1: range-disjoint files can't hold a change key; files
+      // without a recorded range FOR THIS KEY stay candidates (sound,
+      // unprunable)
+      val (candidates, disjoint) = parent.files.partition { pth =>
+        parent.ranges.get(pth).flatMap(_.get(key)).forall {
+          case (mn, mx) => mx >= cmin && mn <= cmax
+        }
+      }
+      // stage 2: exact touch set — key-only scan of candidates,
+      // semi-join against distinct change keys, per-file matched-row
+      // counts (bounded by the candidate file count)
+      val matchedPerFile: Map[String, Long] =
+        if (candidates.isEmpty) Map.empty
+        else {
+          val cand = spark.read.schema(schema)
+            .parquet(candidates.map(p => s"$root/$p"): _*)
+            .select(col(key), input_file_name().as("__f"))
+          val hits = cand.join(changes.select(col(key)).distinct(), key)
+            .groupBy("__f").count()
+            .collect().map(r => (r.getString(0), r.getLong(1)))
+          hits.flatMap { case (abs, n) =>
+            candidates.find(abs.endsWith(_)).map(_ -> n)
+          }.toMap
+        }
+      val touched: Set[String] = matchedPerFile.keySet
+      val carried = disjoint ++ candidates.filterNot(touched)
+      // DV-filtered pre-image of the touched files: both the merge and
+      // the change feed must see only LIVE rows — a previously DV'd row
+      // must neither resurrect nor emit a second pre-image
+      val base = scanMinusDvs(spark, root, schema,
+        touched.toSeq.sorted, parent.dvs)
+      val keepSet = carried.toSet
+      val totalMatched = matchedPerFile.values.sum
+      val cdf = Cdc.latestWinsChanges(base, changes, key, ordering, op)
+      if (useDvs && totalMatched <= DvMaxRowsPerCommit) {
+        // DELETION-VECTOR shape: keep every touched file, mask its
+        // matched rows by row index, append only the winning images.
+        // newRows = latestWinsMerge into an EMPTY base = exactly the
+        // collapsed non-delete winner images (inserts included)
+        val emptyBase = spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        val newRows =
+          Cdc.latestWinsMerge(emptyBase, changes, key, ordering, op)
+            .repartitionByRange(1, col(key))
+        // matched (file, row_index) pairs — the new DV entries; bounded
+        // by totalMatched <= DvMaxRowsPerCommit
+        import org.apache.spark.sql.functions.regexp_extract
+        val newDvIds: Map[String, Seq[Long]] =
+          if (touched.isEmpty) Map.empty
+          else spark.read.schema(schema)
+            .parquet(touched.toSeq.sorted.map(p => s"$root/$p"): _*)
+            .select(col(key),
+              regexp_extract(col("_metadata.file_path"),
+                "(data/v\\d{8}-[^/]+/[^/]+)$", 1).as("__f"),
+              col("_metadata.row_index").as("__ri"))
+            .join(changes.select(col(key)).distinct(), key)
+            .select("__f", "__ri")
+            .collect()
+            .groupBy(_.getString(0))
+            .view.mapValues(_.map(_.getLong(1)).toSeq).toMap
+        val updatedDvs = parent.dvs.view.filterKeys(keepSet).toMap ++
+          newDvIds.map { case (pth, ids) =>
+            pth -> unionDvRanges(parent.dvs.getOrElse(pth, Nil),
+              idsToRanges(ids))
+          }
+        commitVersion(newRows, root, mod(Pending("MERGE", expectedVersion,
+          carryFiles = carried ++ touched.toSeq.sorted,
+          carryRanges = parent.ranges.filter(r =>
+            keepSet.contains(r._1) || touched.contains(r._1)),
           maxBatch = parent.maxBatch, txns = parent.txns,
           txnStamps = parent.txnStamps,
           schemaDdl = Some(parent.schemaDdl),
           statsKeys = parent.statsCols,
-          cdf = Some(withChangeType(empty)),
+          cdf = Some(cdf),
           tsFloor = parent.ts.getOrElse(0L),
-          carryDvs = parent.dvs,
+          carryDvs = updatedDvs,
           checks = parent.checks)))
-    }
-    val (cmin, cmax) = (bounds.getLong(0), bounds.getLong(1))
-    // stage 1: range-disjoint files can't hold a change key; files
-    // without a recorded range FOR THIS KEY stay candidates (sound,
-    // unprunable)
-    val (candidates, disjoint) = parent.files.partition { pth =>
-      parent.ranges.get(pth).flatMap(_.get(key)).forall {
-        case (mn, mx) => mx >= cmin && mn <= cmax
+      } else {
+        val merged = Cdc.latestWinsMerge(base, changes, key, ordering, op)
+          .repartitionByRange(math.max(1, touched.size), col(key))
+        // the carried files provably hold no change key (stage 2 is
+        // exact), so the change feed computed against ONLY the touched
+        // files is the table's complete change set for this commit
+        commitVersion(merged, root, mod(Pending("MERGE", expectedVersion,
+          carryFiles = carried,
+          carryRanges = parent.ranges.filter(r => keepSet.contains(r._1)),
+          maxBatch = parent.maxBatch, txns = parent.txns,
+          txnStamps = parent.txnStamps,
+          schemaDdl = Some(parent.schemaDdl),
+          statsKeys = parent.statsCols,
+          cdf = Some(cdf),
+          tsFloor = parent.ts.getOrElse(0L),
+          carryDvs = parent.dvs.view.filterKeys(keepSet).toMap,
+          checks = parent.checks)))
       }
-    }
-    // stage 2: exact touch set — key-only scan of candidates,
-    // semi-join against distinct change keys, per-file matched-row
-    // counts (bounded by the candidate file count)
-    val matchedPerFile: Map[String, Long] =
-      if (candidates.isEmpty) Map.empty
-      else {
-        val cand = spark.read.schema(schema)
-          .parquet(candidates.map(p => s"$root/$p"): _*)
-          .select(col(key), input_file_name().as("__f"))
-        val hits = cand.join(changes.select(col(key)).distinct(), key)
-          .groupBy("__f").count()
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-        hits.flatMap { case (abs, n) =>
-          candidates.find(abs.endsWith(_)).map(_ -> n)
-        }.toMap
-      }
-    val touched: Set[String] = matchedPerFile.keySet
-    val carried = disjoint ++ candidates.filterNot(touched)
-    // DV-filtered pre-image of the touched files: both the merge and
-    // the change feed must see only LIVE rows — a previously DV'd row
-    // must neither resurrect nor emit a second pre-image
-    val base = scanMinusDvs(spark, root, schema,
-      touched.toSeq.sorted, parent.dvs)
-    val keepSet = carried.toSet
-    val totalMatched = matchedPerFile.values.sum
-    val cdf = Cdc.latestWinsChanges(base, changes, key, ordering, op)
-    if (useDvs && totalMatched <= DvMaxRowsPerCommit) {
-      // DELETION-VECTOR shape: keep every touched file, mask its
-      // matched rows by row index, append only the winning images.
-      // newRows = latestWinsMerge into an EMPTY base = exactly the
-      // collapsed non-delete winner images (inserts included)
-      val emptyBase = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      val newRows =
-        Cdc.latestWinsMerge(emptyBase, changes, key, ordering, op)
-          .repartitionByRange(1, col(key))
-      // matched (file, row_index) pairs — the new DV entries; bounded
-      // by totalMatched <= DvMaxRowsPerCommit
-      import org.apache.spark.sql.functions.regexp_extract
-      val newDvIds: Map[String, Seq[Long]] =
-        if (touched.isEmpty) Map.empty
-        else spark.read.schema(schema)
-          .parquet(touched.toSeq.sorted.map(p => s"$root/$p"): _*)
-          .select(col(key),
-            regexp_extract(col("_metadata.file_path"),
-              "(data/v\\d{8}-[^/]+/[^/]+)$", 1).as("__f"),
-            col("_metadata.row_index").as("__ri"))
-          .join(changes.select(col(key)).distinct(), key)
-          .select("__f", "__ri")
-          .collect()
-          .groupBy(_.getString(0))
-          .view.mapValues(_.map(_.getLong(1)).toSeq).toMap
-      val updatedDvs = parent.dvs.view.filterKeys(keepSet).toMap ++
-        newDvIds.map { case (pth, ids) =>
-          pth -> unionDvRanges(parent.dvs.getOrElse(pth, Nil),
-            idsToRanges(ids))
-        }
-      commitVersion(newRows, root, mod(Pending("MERGE", expectedVersion,
-        carryFiles = carried ++ touched.toSeq.sorted,
-        carryRanges = parent.ranges.filter(r =>
-          keepSet.contains(r._1) || touched.contains(r._1)),
-        maxBatch = parent.maxBatch, txns = parent.txns,
-        txnStamps = parent.txnStamps,
-        schemaDdl = Some(parent.schemaDdl),
-        statsKeys = parent.statsCols,
-        cdf = Some(cdf),
-        tsFloor = parent.ts.getOrElse(0L),
-        carryDvs = updatedDvs,
-        checks = parent.checks)))
-    } else {
-      val merged = Cdc.latestWinsMerge(base, changes, key, ordering, op)
-        .repartitionByRange(math.max(1, touched.size), col(key))
-      // the carried files provably hold no change key (stage 2 is
-      // exact), so the change feed computed against ONLY the touched
-      // files is the table's complete change set for this commit
-      commitVersion(merged, root, mod(Pending("MERGE", expectedVersion,
-        carryFiles = carried,
-        carryRanges = parent.ranges.filter(r => keepSet.contains(r._1)),
-        maxBatch = parent.maxBatch, txns = parent.txns,
-        txnStamps = parent.txnStamps,
-        schemaDdl = Some(parent.schemaDdl),
-        statsKeys = parent.statsCols,
-        cdf = Some(cdf),
-        tsFloor = parent.ts.getOrElse(0L),
-        carryDvs = parent.dvs.view.filterKeys(keepSet).toMap,
-        checks = parent.checks)))
-    }
+    } finally CacheRelease.release(changes)
   }
 
   /** ACID DELETE WHERE: commit a new version whose snapshot is the

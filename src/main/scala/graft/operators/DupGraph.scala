@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.util.Ids
+import graft.util.{CacheRelease, Ids}
 
 /** Connected components over a near-duplicate pair graph: the step that
   * turns pairwise dedup output (q32/q33/q34/q45 emit PAIRS) into the
@@ -39,7 +39,9 @@ object DupGraph {
     * `component` is the minimum id reachable in the undirected graph.
     * Docs with no near-dup pair are absent (each is its own singleton
     * cluster by definition — callers join with a coalesce, see
-    * [[dropNearDups]]).
+    * [[dropNearDups]]). Each round frees the previous round's checkpoint;
+    * the final round's backs the returned frame and is the one block set
+    * left resident.
     */
   def components(pairs: DataFrame, id1Col: String = "id1",
       id2Col: String = "id2", maxIter: Int = 30): DataFrame = {
@@ -88,7 +90,7 @@ object DupGraph {
         // per components() call, only ever at the fixed point.
         converged = next.toDF("u", "v").except(edges.toDF("u", "v")).isEmpty
       }
-      freeCheckpoint(edges)
+      CacheRelease.release(edges)
       edges = next
       fp = nfp
       it += 1
@@ -147,12 +149,6 @@ object DupGraph {
       .distinct()
       .as[(Long, Long)]
   }
-
-  /** Frees a localCheckpoint's storage blocks — see
-    * [[graft.util.Checkpoints.free]] (shared with [[Bpe.trainMerges]]).
-    */
-  private def freeCheckpoint(ds: Dataset[_]): Unit =
-    graft.util.Checkpoints.free(ds)
 
   /** Corpus minus near-duplicates: keeps every doc that is its own
     * cluster minimum (including all docs with no pair at all — absent
@@ -253,12 +249,15 @@ object DupGraph {
         // blocks), then free that previous checkpoint — only ever a
         // frame that localCheckpoint actually produced
         val ck = next.localCheckpoint(true)
-        freeCheckpoint(lastCkpt)
+        CacheRelease.release(lastCkpt)
         lastCkpt = ck
         pr = ck
         sinceCkpt = 0
       } else pr = next
     }
+    // pr is an eager checkpoint: nothing reads the edge and degree
+    // tables any more, so its blocks are the one set left resident
+    CacheRelease.release(edges, deg)
     pr
   }
 

@@ -457,24 +457,28 @@ object Multimodal {
   }
 
   /** Image near-duplicate pairs by perceptual-hash Hamming distance ≤
-    * `maxDist`: one map-only decode+hash pass (localCheckpoint'ed so
-    * both sides of the candidate join reuse it), then the shared
-    * pigeonhole pairer [[Dedup.hammingPairs]].
+    * `maxDist`: one map-only decode+hash pass (persisted so both sides
+    * of the candidate join reuse it, released after the returned
+    * frame's first action), then the shared pigeonhole pairer
+    * [[Dedup.hammingPairs]].
     */
   def imageDupPairs(media: DataFrame, maxDist: Int = 6,
       idCol: String = "doc_id",
-      payloadCol: String = "payload"): DataFrame = {
+      payloadCol: String = "payload"): DataFrame =
+    hashDupPairs(media, maxDist, idCol, payloadCol)(perceptualHash)
+
+  private def hashDupPairs(media: DataFrame, maxDist: Int, idCol: String,
+      payloadCol: String)(hash: Array[Byte] => Option[Long]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     val hashes = media
       .select(col(idCol).cast("long"), col(payloadCol))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) =>
-        perceptualHash(bytes).map(id -> _)
-      })
+      .mapPartitions(_.flatMap { case (id, bytes) => hash(bytes).map(id -> _) })
       .toDF("id", "hash")
-      .localCheckpoint(true)
-    Dedup.hammingPairs(hashes, maxDist)
+      .persist()
+    graft.util.CacheRelease.afterFirstAction(
+      Dedup.hammingPairs(hashes, maxDist), Seq(hashes))
   }
 
   /** 64-bit audio fingerprint: the energy-envelope hash (the shape a
@@ -529,19 +533,8 @@ object Multimodal {
     */
   def audioDupPairs(media: DataFrame, maxDist: Int = 6,
       idCol: String = "doc_id",
-      payloadCol: String = "payload"): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val hashes = media
-      .select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) =>
-        audioFingerprint(bytes).map(id -> _)
-      })
-      .toDF("id", "hash")
-      .localCheckpoint(true)
-    Dedup.hammingPairs(hashes, maxDist)
-  }
+      payloadCol: String = "payload"): DataFrame =
+    hashDupPairs(media, maxDist, idCol, payloadCol)(audioFingerprint)
 
   /** 16-bit mono PCM wave with a per-frame amplitude ENVELOPE (64
     * frames of `frameLen` samples; frame f's square-wave amplitude =

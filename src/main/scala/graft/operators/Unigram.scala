@@ -145,42 +145,42 @@ object Unigram {
     val spark = docs.sparkSession
     import spark.implicits._
     val hist = wordHistogram(docs, textCol).as[(String, Long)].persist()
+    try {
+      // seed: substring fan-out per DISTINCT word (bounded by
+      // |vocab|·len·maxPieceLen), two-phase aggregated
+      val subCounts = hist.flatMap { case (w, c) =>
+        // code-point spans, like sequentialTrain and segmentWord
+        val offs = graft.text.SqlText.cpOffsets(w)
+        val n = offs.length - 1
+        for {
+          i <- 0 until n
+          l <- 1 to math.min(maxPieceLen, n - i)
+        } yield (w.substring(offs(i), offs(i + l)), c * l)
+      }.toDF("piece", "score").groupBy("piece").agg(sum("score").as("score"))
+      val chars = subCounts.filter(length(col("piece")) === 1)
+      val multi = subCounts.filter(length(col("piece")) > 1)
+        .orderBy(col("score").desc, col("piece")).limit(seedSize)
+      val charSet = chars.select("piece").as[String].collect().toSet
+      var logp = normalize(
+        chars.unionByName(multi).select("piece").as[String].collect()
+          .map(_ -> 1L).toMap)
 
-    // seed: substring fan-out per DISTINCT word (bounded by
-    // |vocab|·len·maxPieceLen), two-phase aggregated
-    val subCounts = hist.flatMap { case (w, c) =>
-      // code-point spans, like sequentialTrain and segmentWord
-      val offs = graft.text.SqlText.cpOffsets(w)
-      val n = offs.length - 1
-      for {
-        i <- 0 until n
-        l <- 1 to math.min(maxPieceLen, n - i)
-      } yield (w.substring(offs(i), offs(i + l)), c * l)
-    }.toDF("piece", "score").groupBy("piece").agg(sum("score").as("score"))
-    val chars = subCounts.filter(length(col("piece")) === 1)
-    val multi = subCounts.filter(length(col("piece")) > 1)
-      .orderBy(col("score").desc, col("piece")).limit(seedSize)
-    val charSet = chars.select("piece").as[String].collect().toSet
-    var logp = normalize(
-      chars.unionByName(multi).select("piece").as[String].collect()
-        .map(_ -> 1L).toMap)
-
-    for (_ <- 1 to iters) {
-      val bc = spark.sparkContext.broadcast(logp)
-      val counts = hist.flatMap { case (w, c) =>
-        segmentWord(w, bc.value, maxPieceLen).map(p => (p, c))
-      }.toDF("piece", "cnt").groupBy("piece").agg(sum("cnt").as("cnt"))
-        .as[(String, Long)].collect().toMap // ≤ |pieces| rows
-      bc.destroy()
-      val keptChars = charSet.toSeq.sorted.map(c => c -> counts.getOrElse(c, 0L))
-      val keptMulti = counts.toSeq
-        .filter(t => graft.text.SqlText.cpLength(t._1) > 1)
-        .sortBy { case (p, n) => (-n, p) }
-        .take(math.max(0, vocabSize - keptChars.size))
-      logp = normalize((keptChars ++ keptMulti).toMap)
-    }
-    hist.unpersist()
-    logp.toSeq.sortBy(_._1).toDF("piece", "logp")
+      for (_ <- 1 to iters) {
+        val bc = spark.sparkContext.broadcast(logp)
+        val counts = hist.flatMap { case (w, c) =>
+          segmentWord(w, bc.value, maxPieceLen).map(p => (p, c))
+        }.toDF("piece", "cnt").groupBy("piece").agg(sum("cnt").as("cnt"))
+          .as[(String, Long)].collect().toMap // ≤ |pieces| rows
+        bc.destroy()
+        val keptChars = charSet.toSeq.sorted.map(c => c -> counts.getOrElse(c, 0L))
+        val keptMulti = counts.toSeq
+          .filter(t => graft.text.SqlText.cpLength(t._1) > 1)
+          .sortBy { case (p, n) => (-n, p) }
+          .take(math.max(0, vocabSize - keptChars.size))
+        logp = normalize((keptChars ++ keptMulti).toMap)
+      }
+      logp.toSeq.sortBy(_._1).toDF("piece", "logp")
+    } finally graft.util.CacheRelease.release(hist)
   }
 
   /** Apply a trained table: map-only (table collected once —

@@ -127,7 +127,7 @@ object WordPiece {
         .select("l", "r", "pair_count")
         .as[(String, String, Long)]
         .collect() // materializes hist's lazy checkpoint
-      if (prev != null) { graft.util.Checkpoints.free(prev); prev = null }
+      if (prev != null) { graft.util.CacheRelease.release(prev); prev = null }
       top.headOption match {
         case None => exhausted = true
         case Some((l, r, c)) =>
@@ -140,8 +140,8 @@ object WordPiece {
           rank += 1
       }
     }
-    if (prev != null) graft.util.Checkpoints.free(prev)
-    graft.util.Checkpoints.free(hist)
+    if (prev != null) graft.util.CacheRelease.release(prev)
+    graft.util.CacheRelease.release(hist)
     merges.result().toDF("rank", "left", "right", "merged", "pair_count")
   }
 

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.{PathInstance, Sentence, Triple}
 import graft.text.{BiarcParser, PathExtractor, PhrasePaths}
+import graft.util.CacheRelease
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -143,15 +144,15 @@ object DirtPipeline {
     * path has >= 1 MI feature (the reference emits 0.0-scored pairs —
     * SURVEY.md §7.5.5); pairs whose two paths are identical score 0.0
     * (their features all land in the reference's v1 map, `:890-893`).
+    * The pair list is test-set sized and is collected to the driver;
+    * pairs with a null path are dropped.
     */
   def similarity(
       mi: DataFrame,
       sumMi: DataFrame,
       pairs: DataFrame): DataFrame = {
     val spark = mi.sparkSession
-
-    val members = pairs
-      .select(explode(array(col("p1"), col("p2"))).as("path"), col("p1"), col("p2"))
+    import spark.implicits._
 
     // Bounded path dictionary (guide §2.3 — shuffle narrower types): the
     // pair member list is 2·|pairs| rows and ALREADY broadcast into both
@@ -163,21 +164,16 @@ object DirtPipeline {
     // where the dictionary is broadcast-bounded: the corpus-wide variant
     // was rejected because its vocab-sized dictionaries would shuffle
     // the triple table to attach; this one attaches in the joins the
-    // plan already runs. row_number over the distinct member list is a
-    // deterministic bijection (bounded partition-less window, the
-    // q76/q133 discipline), so every broadcast rebuild assigns the same
-    // ids; materialized once, like `sm` below.
-    val pairsI = {
-      val memberIdx = members.select("path").distinct()
-        .withColumn("__pid", row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy("path")))
-      pairs
-        .join(broadcast(memberIdx
-          .select(col("path").as("p1"), col("__pid").as("__p1id"))), Seq("p1"))
-        .join(broadcast(memberIdx
-          .select(col("path").as("p2"), col("__pid").as("__p2id"))), Seq("p2"))
-        .localCheckpoint(true)
-    }
+    // plan already runs. The test set is driver-sized (the reference
+    // loads it on the driver, `:828-850`), so the ids are assigned there
+    // over the sorted distinct member paths: no window, no exchange, and
+    // nothing to materialize or release.
+    val pairList = pairs.select("p1", "p2").as[(String, String)].collect()
+      .filter { case (a, b) => a != null && b != null }.distinct.toSeq
+    val pid = pairList.flatMap { case (a, b) => Seq(a, b) }
+      .distinct.sorted.zipWithIndex.toMap
+    val pairsI = pairList.map { case (a, b) => (a, b, pid(a), pid(b)) }
+      .toDF("p1", "p2", "__p1id", "__p2id")
 
     // Feature intersection (Job 3 reduce `:896-905`) as a relational
     // self-equi-join on (slot, word), restricted to the broadcast pair
@@ -198,7 +194,12 @@ object DirtPipeline {
     // precisely the joinable set. On the adversarial planted corpus
     // every path is a member (no local effect); on a real corpus the
     // test set is tiny and this keeps the big side's shuffle
-    // proportional to |pairs|, not |mi|.
+    // proportional to |pairs|, not |mi|. The p2 list is deduplicated in
+    // Spark, not on the driver: its exchange delays this broadcast, so
+    // AQE usually sees f1's shuffle finish first and turns the
+    // intersection into a broadcast join that never shuffles f2
+    // (measured on a 100k-line Zipf corpus: 1,914 shuffle records in
+    // the similarity phase instead of 3,705).
     val f2 = mi.select(
       col("path").as("p2"), col("slot"), col("word"), col("mi").as("mi2"))
       .join(broadcast(pairsI.select(col("p2"), col("__p2id")).distinct()),
@@ -212,9 +213,7 @@ object DirtPipeline {
           .as("numX"),
         sum(when(col("slot") === "Y", col("mi1") + col("mi2")).otherwise(0.0))
           .as("numY"))
-      .join(broadcast(pairsI
-        .select("p1", "p2", "__p1id", "__p2id").distinct()),
-        Seq("__p1id", "__p2id"))
+      .join(broadcast(pairsI), Seq("__p1id", "__p2id"))
       .select("p1", "p2", "numX", "numY")
 
     // Four denominator lookups (Job 4 reduce `:967-970`), missing -> 0.0.
@@ -223,22 +222,20 @@ object DirtPipeline {
     // (`DirtDriver.java:924-953`). Same here: semi-join down to the
     // broadcast member list FIRST, so the later broadcast(s1)/broadcast(s2)
     // ships a table bounded by 2·|pairs|, not the corpus vocabulary.
-    val memberPaths = members.select("path").distinct()
-    // materialized ONCE: sm is the broadcast-build input of FOUR
-    // consumers (s1, s2, and the two activity semi-joins below), and
-    // broadcast builds run as independent jobs — without the eager
-    // checkpoint each of them would recompute the corpus-sized sumMi
-    // aggregation (measured: +4.7 s on the planted similarity phase
-    // when the activity derivation doubled the consumer count; with the
-    // checkpoint the aggregation runs once for all four). The table is
-    // bounded by 2·|pairs| — block-storage cost is trivial.
+    val memberPaths = pid.keys.toSeq.toDF("path")
+    // persisted: sm is the broadcast-build input of both s1 and s2, and
+    // broadcast builds run as independent jobs — uncached, each would
+    // recompute the corpus-sized sumMi aggregation (measured: +4.7 s on
+    // the planted similarity phase). The table is bounded by 2·|pairs|
+    // — block-storage cost is trivial — and it is released after the
+    // returned frame's first action, so a later action recomputes it.
     val sm = sumMi
       .join(broadcast(memberPaths), Seq("path"), "left_semi")
       .groupBy("path")
       .agg(
         sum(when(col("slot") === "X", col("sum_mi")).otherwise(0.0)).as("smX"),
         sum(when(col("slot") === "Y", col("sum_mi")).otherwise(0.0)).as("smY"))
-      .localCheckpoint(true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     val s1 = sm.select(col("path").as("p1"),
       col("smX").as("s1X"), col("smY").as("s1Y"))
@@ -247,21 +244,15 @@ object DirtPipeline {
 
     // Pairs active in the corpus: at least one member path has features.
     // sm's key set IS memberPaths ∩ mi.paths (sumMi carries every mi
-    // path; the semi-join keeps the members), so deriving activity from
-    // the already-computed bounded slice saves a whole extra pass over
-    // the corpus-sized mi table (round 19; guide §1.2 "don't compute
-    // things you throw away" — the old shape scanned mi a fourth time
-    // just to mark activity).
-    val activePairs = pairs
-      .join(broadcast(s1.select("p1")), Seq("p1"), "left_semi")
-      .unionByName(pairs
-        .join(broadcast(s2.select("p2")), Seq("p2"), "left_semi"))
-      .distinct()
-
-    activePairs
-      .join(numerators, Seq("p1", "p2"), "left")
+    // path; the semi-join keeps the members), so the two denominator
+    // lookups also mark activity — a matched side is non-null — with no
+    // extra pass over the corpus-sized mi table (guide §1.2 "don't
+    // compute things you throw away") and no extra broadcast of sm.
+    val scored = pairsI.select("p1", "p2")
       .join(broadcast(s1), Seq("p1"), "left")
       .join(broadcast(s2), Seq("p2"), "left")
+      .filter(col("s1X").isNotNull || col("s2X").isNotNull)
+      .join(numerators, Seq("p1", "p2"), "left")
       .select(
         col("p1"), col("p2"),
         coalesce(col("numX"), lit(0.0)).as("numX"),
@@ -278,12 +269,14 @@ object DirtPipeline {
           col("numY") / (col("s1Y") + col("s2Y"))).otherwise(0.0))
       .select(col("p1").as("path1"), col("p2").as("path2"),
         sqrt(col("simX") * col("simY")).as("score"))
+    CacheRelease.afterFirstAction(scored, Seq(sm))
   }
 
   /** End-to-end: corpus lines + test-set lines -> scored pairs.
-    * The instance DF is persisted once and feeds triples; triples persist
-    * once and feed margins, N, and MI — the reference's inter-job S3
-    * round-trips become in-memory scan sharing (SURVEY.md §4).
+    * Triples persist once and feed margins, N, and MI; MI persists once
+    * and feeds sumMi and both feature sides — the reference's inter-job
+    * S3 round-trips become in-memory scan sharing (SURVEY.md §4). Both
+    * are released after the returned frame's first action.
     */
   def run(
       spark: SparkSession,
@@ -298,6 +291,7 @@ object DirtPipeline {
     val mi = miFeatures(tr, swMargins(tr), psMargins(tr), n)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val pairsDf = testPairs(testSetLines).toDF("p1", "p2")
-    similarity(mi, sumMi(mi), pairsDf)
+    CacheRelease.afterFirstAction(similarity(mi, sumMi(mi), pairsDf),
+      Seq(tr, mi))
   }
 }

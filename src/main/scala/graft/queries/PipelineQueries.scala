@@ -1223,17 +1223,22 @@ object PipelineQueries {
     // kept == n − (pair-graph nodes − components) — derived from the
     // pair graph itself, it holds at any SF and any threshold.
     // One agg job computes both graph counts (was two separate counts).
-    val n = emb.count()
-    val k = kept.count()
-    val g = comps.agg(count(lit(1)), countDistinct(col("component"))).head()
-    val (nodes, nComp) = (g.getLong(0), g.getLong(1))
-    require(nodes > nComp,
-      s"semantic pair graph is edgeless ($nodes nodes, $nComp components)")
-    require(k == n - (nodes - nComp),
-      s"keeper-drop broke the component invariant: kept $k of $n, " +
-        s"graph $nodes nodes in $nComp components")
-    // the returned frame's anti-join still reads the cached labels; the
-    // cache is released after the caller's first action (q136 idiom)
+    // a failed gate releases the labels before rethrowing; otherwise the
+    // returned frame's anti-join still reads them, so the cache is
+    // released after the caller's first action (q136 idiom)
+    try {
+      val n = emb.count()
+      val k = kept.count()
+      val g = comps.agg(count(lit(1)), countDistinct(col("component"))).head()
+      val (nodes, nComp) = (g.getLong(0), g.getLong(1))
+      require(nodes > nComp,
+        s"semantic pair graph is edgeless ($nodes nodes, $nComp components)")
+      require(k == n - (nodes - nComp),
+        s"keeper-drop broke the component invariant: kept $k of $n, " +
+          s"graph $nodes nodes in $nComp components")
+    } catch {
+      case e: Throwable => graft.util.CacheRelease.release(comps); throw e
+    }
     graft.util.CacheRelease.afterFirstAction(kept.orderBy("vec_id"), Seq(comps))
   }
 

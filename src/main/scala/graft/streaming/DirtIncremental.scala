@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.pipeline.DirtPipeline
-import graft.util.Checkpoints
+import graft.util.CacheRelease
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -147,10 +147,9 @@ object DirtIncremental {
         .localCheckpoint(true)
     }
 
-    Seq(state.triples, state.swMargins, state.psMargins, state.features)
-      .foreach(Checkpoints.free)
-    member.foreach { case (mf, _) => Checkpoints.free(mf) }
-    Checkpoints.free(deltaTr)
+    CacheRelease.release(state.triples, state.swMargins, state.psMargins,
+      state.features, deltaTr)
+    member.foreach { case (mf, _) => CacheRelease.release(mf) }
 
     (State(triples2, sw2, ps2, features2, state.n + deltaN,
       state.batches + 1), member2)
@@ -259,8 +258,8 @@ object DirtIncremental {
 
   /** Free every checkpoint a [[SimState]] holds. */
   def release(sim: SimState): Unit = {
-    Seq(sim.inner.triples, sim.inner.swMargins, sim.inner.psMargins,
-      sim.inner.features, sim.pairs, sim.memberPaths, sim.memberFeatures)
-      .foreach(Checkpoints.free)
+    CacheRelease.release(sim.inner.triples, sim.inner.swMargins,
+      sim.inner.psMargins, sim.inner.features, sim.pairs, sim.memberPaths,
+      sim.memberFeatures)
   }
 }

@@ -1,29 +1,29 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.lang.ref.WeakReference
 import java.util.concurrent.atomic.AtomicBoolean
 
-/** Scoped release for persisted intermediates inside a lazily-returned
-  * plan.
+/** The one release idiom for materialized intermediates. The rule:
+  *   - an operator that returns a LAZY frame holds only `persist`ed
+  *     intermediates and hands them to [[afterFirstAction]]: the
+  *     caller's first action reads the cache, a later one recomputes
+  *     from lineage (a freed checkpoint could not be recomputed);
+  *   - an EAGER function frees what it materialized with [[release]] in
+  *     a `finally`, on success and on failure;
+  *   - `localCheckpoint` stays only where lineage truncation is the
+  *     point (iterative operators; the merge changelog pinned so a
+  *     non-deterministic plan is evaluated once). The final round behind
+  *     an iterative operator's returned frame is the one leftover.
   *
-  * Operators like the prefix-filtered Jaccard join persist intermediates
-  * (token table, doc profiles) that several branches of ONE returned plan
-  * consume. The operator cannot unpersist before returning — the caller
-  * has not executed anything yet — and leaving the persists in place
-  * leaks session-lifetime cached blocks per invocation (callers without
-  * a `clearCache()` harness accumulate them).
-  *
-  * This registers a one-shot [[QueryExecutionListener]] that unpersists
-  * the given datasets as soon as ANY action whose analyzed plan contains
-  * the returned plan completes (success or failure), then unregisters
-  * itself. Until then the caches serve every branch of that first
-  * action; afterwards re-executing the same DataFrame recomputes from
-  * source (correct, just uncached) — the documented contract for
-  * operators that hand back a lazy result.
+  * Several branches of ONE returned plan consume the intermediates, so
+  * the operator cannot release them before returning. [[afterFirstAction]]
+  * registers a one-shot [[QueryExecutionListener]] that releases them as
+  * soon as ANY action whose analyzed plan contains the returned plan
+  * completes (success or failure), then unregisters itself.
   *
   * If the caller never runs an action, nothing was ever materialized
   * (persist is lazy), so no cached DATA leaks — but the listener itself
@@ -36,7 +36,21 @@ import java.util.concurrent.atomic.AtomicBoolean
   */
 object CacheRelease {
 
-  /** Returns `result` unchanged, with `cached` scheduled for unpersist
+  /** Frees each frame's materialized blocks now. A frame whose own
+    * analyzed plan is a `LogicalRDD` is a checkpoint: its blocks live on
+    * that RDD (`Dataset.unpersist` would be a no-op), so the RDD is
+    * unpersisted. Any other frame drops its cache entry. Only the root
+    * is inspected — a persisted frame built over a caller's checkpoint
+    * leaves that checkpoint readable.
+    */
+  def release(ds: Dataset[_]*): Unit = ds.foreach { d =>
+    d.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => d.unpersist(blocking = false)
+    }
+  }
+
+  /** Returns `result` unchanged, with `cached` scheduled for [[release]]
     * after the first completed action that consumes `result`'s plan.
     */
   def afterFirstAction(result: DataFrame, cached: Seq[Dataset[_]]): DataFrame = {
@@ -47,14 +61,14 @@ object CacheRelease {
     val targetRef = new WeakReference(result.queryExecution.analyzed)
     val done = new AtomicBoolean(false)
     val listener: QueryExecutionListener = new QueryExecutionListener {
-      private def release(): Unit =
+      private def releaseOnce(): Unit =
         if (done.compareAndSet(false, true)) {
-          cached.foreach(_.unpersist(blocking = false))
+          release(cached: _*)
           spark.listenerManager.unregister(this)
         }
       private def maybeRelease(qe: QueryExecution): Unit = {
         targetRef.get match {
-          case null => release() // frame collected: nobody can match now
+          case null => releaseOnce() // frame collected: nobody can match now
           case target =>
             // listener-bus exceptions would poison unrelated listeners;
             // any failure here just means "keep the cache" (the
@@ -62,7 +76,7 @@ object CacheRelease {
             val hit =
               try qe.analyzed.exists(_.sameResult(target))
               catch { case scala.util.control.NonFatal(_) => false }
-            if (hit) release()
+            if (hit) releaseOnce()
         }
       }
       override def onSuccess(funcName: String, qe: QueryExecution,
