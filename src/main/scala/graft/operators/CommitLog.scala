@@ -39,12 +39,24 @@ import graft.util.CacheRelease
   *      demonstrated empirically in VERDICT r14 "what's wrong" #1). On
   *      HDFS, where `FileSystem.rename` does honor the no-overwrite
   *      contract, the exists+rename path is kept as the fallback. Of
-  *      two writers racing version N, exactly one publish wins; the
-  *      loser's data stays orphaned-and-invisible and it gets a
-  *      [[GraftTable.ConflictException]] to retry against the new
-  *      latest version. The win is adjudicated by the filesystem
-  *      primitive itself — `CommitLogSpec` races two true threads
-  *      through the full write path hundreds of times to pin this.
+  *      two writers racing version N, exactly one publish wins. The win
+  *      is adjudicated by the filesystem primitive itself —
+  *      `CommitLogSpec` races two true threads through the full write
+  *      path hundreds of times to pin this.
+  *
+  * Every operation commits through ONE optimistic loop, [[commit]]
+  * (Delta's single commit path with a per-operation conflict check):
+  * the op derives a [[Pending]] from its parent manifest by the one
+  * inherit rule ([[Pending.inherit]]) and hands the loop a `replan` —
+  * its own conflict rule. Whenever the latest version has moved past
+  * the parent (checked once before any data is staged, and after every
+  * lost CAS), `replan` decides against the winners: a blind append
+  * re-parents (the stage is renamed to the new version, never
+  * rewritten), a streaming sink adjudicates a replay as already
+  * applied, and every other op — the default — surfaces a
+  * [[GraftTable.ConflictException]] to retry against the new latest
+  * version, its stage discarded. A surfacing op reads no winner
+  * manifest.
   *
   * Scale shape: the log is O(versions) tiny text files handled on the
   * driver — data never moves through it. `_latest` makes the common
@@ -658,7 +670,50 @@ object GraftTable {
       // false on the deliberately-laid commits (createPartitioned /
       // COMPACT / mergePruned's range rewrites): their file count IS
       // the operation's contract, [[rightSized]] must not touch it
-      sized: Boolean = true)
+      sized: Boolean = true) {
+
+    /** A rewrite of the snapshot (MERGE, DELETE, COMPACT): none of the
+      * parent's files, ranges or deletion vectors are carried.
+      */
+    def rewriting: Pending =
+      copy(carryFiles = Nil, carryRanges = Map.empty, carryDvs = Map.empty)
+
+    /** Records streaming writer `appId`'s `batchId` — the replay guard
+      * both sinks publish.
+      */
+    def stamped(appId: String, batchId: Long): Pending = copy(
+      batch = Some(batchId),
+      maxBatch = Some(math.max(batchId, maxBatch.getOrElse(-1L))),
+      txns = txns + (appId -> batchId),
+      txnStamps = txnStamps + (appId -> System.currentTimeMillis()))
+  }
+
+  private object Pending {
+    /** The one inherit rule: a version derived from `parent` carries its
+      * files, ranges, deletion vectors, `maxBatch`, writer txns and their
+      * stamps, schema, stats columns and CHECKs, and never stamps a `ts`
+      * before the parent's. Each op `copy`s only what it changes.
+      */
+    def inherit(op: String, parent: Commit): Pending = Pending(op,
+      parent.version, carryFiles = parent.files,
+      carryRanges = parent.ranges, carryDvs = parent.dvs,
+      maxBatch = parent.maxBatch, txns = parent.txns,
+      txnStamps = parent.txnStamps, schemaDdl = Some(parent.schemaDdl),
+      statsKeys = parent.statsCols, tsFloor = parent.ts.getOrElse(0L),
+      checks = parent.checks)
+  }
+
+  /** An empty frame of `schema`. */
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
+  /** The root-relative data file (`data/v<N>-<token>/<part>`) a scanned
+    * row came from, decoded from `_metadata.file_path`.
+    */
+  private def relPathCol: Column =
+    org.apache.spark.sql.functions.regexp_extract(
+      col("_metadata.file_path"), "(data/v\\d{8}-[^/]+/[^/]+)$", 1)
 
   /** Per-file min/max of every stats column over freshly staged
     * files — ONE column-pruned scan of only those files computes all
@@ -851,18 +906,18 @@ object GraftTable {
     val spark = df.sparkSession
     val f = fs(spark, root)
     val token = java.util.UUID.randomUUID.toString.take(8)
+    // write `rows` under `rel`; its part files, root-relative and sorted
+    def written(rows: DataFrame, rel: String): Seq[String] = {
+      rows.write.parquet(s"$root/$rel")
+      f.listStatus(new Path(s"$root/$rel"))
+        .map(_.getPath.getName)
+        .filter(_.startsWith("part-"))
+        .sorted
+        .map(n => s"$rel/$n")
+        .toSeq
+    }
     val dataRel = f"data/v$next%08d-$token"
-    val staged =
-      if (!writeData) Nil
-      else {
-        df.write.parquet(s"$root/$dataRel")
-        f.listStatus(new Path(s"$root/$dataRel"))
-          .map(_.getPath.getName)
-          .filter(_.startsWith("part-"))
-          .sorted
-          .map(n => s"$dataRel/$n")
-          .toSeq
-      }
+    val staged = if (writeData) written(df, dataRel) else Nil
     // on a stats-carrying table, zero-row part files (one per empty
     // write task) are dropped from the manifest — see [[fileRanges]]
     val (newRanges, parts) =
@@ -879,19 +934,11 @@ object GraftTable {
     // manifest — one atomic publish covers both (an empty change set
     // still records its directory, so readers can tell "no changes"
     // from "written before CDF existed")
-    val cdfRel = cdf.map { rows0 =>
+    val cdfRel = cdf.map { rows =>
       // change-feed rows are never deliberately laid out — always
       // eligible for the small-commit coalesce
-      val rows = rightSized(rows0)
       val rel = f"cdf/v$next%08d-$token"
-      rows.write.parquet(s"$root/$rel")
-      val cdfParts = f.listStatus(new Path(s"$root/$rel"))
-        .map(_.getPath.getName)
-        .filter(_.startsWith("part-"))
-        .sorted
-        .map(n => s"$rel/$n")
-        .toSeq
-      (rel, cdfParts)
+      (rel, written(rightSized(rows), rel))
     }
     StagedData(token, dataRel, parts, newRanges, cdfRel)
   }
@@ -902,7 +949,7 @@ object GraftTable {
     * path-encoded `_commit_version` exact after a rebase.
     */
   private def renameStage(f: FileSystem, root: String, s: StagedData,
-      from: Long, to: Long): StagedData = {
+      to: Long): StagedData = {
     def repoint(rel: String, sub: String): String = {
       val newRel = f"$sub/v$to%08d-${s.token}"
       require(f.rename(new Path(s"$root/$rel"), new Path(s"$root/$newRel")),
@@ -1010,36 +1057,6 @@ object GraftTable {
     }
   }
 
-  /** Stage `df` as parquet and atomically publish it as version
-    * `expected + 1`. Returns the new version; throws
-    * [[ConflictException]] when another writer got there first.
-    */
-  private def commitVersion(df: DataFrame, root: String,
-      p: Pending): Long = {
-    val spark = df.sparkSession
-    val f = fs(spark, root)
-    val next = p.expected + 1
-    // cheap fast-fail before any data is written; the atomic publish
-    // below is the authoritative check
-    val seen = latestVersion(spark, root)
-    if (seen != p.expected) throw new ConflictException(p.expected, seen)
-    // COMPACT re-lays and DELETE subsets rows a prior commit already
-    // validated — re-scanning them would put an O(snapshot) constraint
-    // job on every maintenance pass for rows that cannot be new
-    if (!p.dataless && p.op != "COMPACT" && p.op != "DELETE")
-      enforceChecks(df, p.checks)
-    val body = if (p.sized && !p.dataless) rightSized(df) else df
-    val staged = stageData(body, root, next, p.statsKeys, p.cdf,
-      writeData = !p.dataless)
-    if (!tryPublish(spark, root, p, staged, df.schema.toDDL)) {
-      discardStage(f, root, staged)
-      throw new ConflictException(p.expected, latestVersion(spark, root))
-    }
-    writeHint(f, root, next)
-    maybeWriteCheckpoint(spark, root, next)
-    next
-  }
-
   /** What a loser of the version CAS should do next, decided by the
     * operation's own conflict rules against the NEW latest commit and
     * the ops that won in between.
@@ -1049,80 +1066,86 @@ object GraftTable {
   private case object SurfaceConflict extends RebaseDecision
   private case object AlreadyApplied extends RebaseDecision
 
-  /** Commit with automatic REBASE across non-conflicting winners
-    * (Delta's logical conflict check for blind appends: an append
-    * reads nothing, so a concurrent commit that only ADDED files can
-    * never invalidate it — re-parent and re-publish instead of
-    * surfacing a retry to the caller; VERDICT r16 "what's missing"
-    * #3). The data is staged ONCE; each rebase renames the staged
-    * directory to the new target version (driver metadata op) and
-    * re-derives the manifest from the new parent via `replan`, which
-    * applies the operation's own rules: surface genuine conflicts,
-    * adjudicate idempotent replays ([[AlreadyApplied]] → None).
+  /** The versions published since a losing writer's parent, read only
+    * when a `replan` asks: the new latest commit, and the ops of every
+    * winner.
+    */
+  private final class Winners(spark: SparkSession, root: String,
+      since: Long, latest: Long) {
+    lazy val newParent: Commit = readManifest(spark, root, latest)
+    lazy val ops: Seq[String] =
+      (since + 1 until latest).map(readManifest(spark, root, _).op) :+
+        newParent.op
+  }
+
+  /** The one commit path: stage `df` once and atomically publish it as
+    * version `p.expected + 1`. Whenever the latest version has moved
+    * past the parent — checked before any data is staged (no data write
+    * against a known-stale parent), and after each lost CAS — the op's
+    * `replan` decides against the winners:
+    *   - [[Rebase]] re-parents: the Pending is re-derived from the new
+    *     parent and the staged directories are renamed to the new target
+    *     version (a driver metadata op; the rows are never rewritten).
+    *     Blind appends do this across winners that cannot invalidate
+    *     them (Delta's logical conflict check; VERDICT r16 "what's
+    *     missing" #3);
+    *   - [[AlreadyApplied]] discards the stage and returns None (a
+    *     streaming replay adjudicated against the new parent);
+    *   - [[SurfaceConflict]], the default, discards the stage and throws
+    *     [[ConflictException]] — reading no winner manifest.
     * Attempts are bounded — a pathological commit storm surfaces as a
     * [[ConflictException]] rather than a livelock.
     */
-  private def commitRebasing(df: DataFrame, root: String, p0: Pending,
-      replan: (Commit, Seq[String]) => RebaseDecision,
+  private def commit(df: DataFrame, root: String, p0: Pending,
+      replan: Winners => RebaseDecision = _ => SurfaceConflict,
       maxAttempts: Int = 20): Option[Long] = {
-    require(p0.cdf.isEmpty,
-      "the rebase path is append-shaped (no change-feed re-derivation)")
     val spark = df.sparkSession
     val f = fs(spark, root)
     var p = p0
+    var staged: Option[StagedData] = None
     var attempts = 0
-    def decide(latest: Long): RebaseDecision = {
-      val winnerOps =
-        (p.expected + 1 to latest).map(readManifest(spark, root, _).op)
-      replan(readManifest(spark, root, latest), winnerOps)
-    }
-    // pre-staging replan: don't waste a data write on a known-stale
-    // parent
-    var seen = latestVersion(spark, root)
-    while (seen != p.expected) {
+    // true: go on with the re-parented `p`; false: already applied
+    def replanned(latest: Long): Boolean = {
       attempts += 1
-      if (attempts > maxAttempts)
-        throw new ConflictException(p.expected, seen)
-      decide(seen) match {
-        case Rebase(np) => p = np
-        case AlreadyApplied => return None
-        case SurfaceConflict =>
-          throw new ConflictException(p.expected, seen)
-      }
-      seen = latestVersion(spark, root)
-    }
-    // checks are stable across the rebase loop: the append whitelist
-    // only re-parents across APPEND/CREATE winners, which never alter
-    // the constraint set (an ALTER winner surfaces a conflict)
-    enforceChecks(df, p.checks)
-    val body = if (p0.sized) rightSized(df) else df
-    var staged = stageData(body, root, p.expected + 1, p.statsKeys, None)
-    while (true) {
-      if (tryPublish(spark, root, p, staged, df.schema.toDDL)) {
-        writeHint(f, root, p.expected + 1)
-        maybeWriteCheckpoint(spark, root, p.expected + 1)
-        return Some(p.expected + 1)
-      }
-      attempts += 1
-      val latest = latestVersion(spark, root)
-      if (attempts > maxAttempts) {
-        discardStage(f, root, staged)
-        throw new ConflictException(p.expected, latest)
-      }
-      decide(latest) match {
+      val decision =
+        if (attempts > maxAttempts) SurfaceConflict
+        else replan(new Winners(spark, root, p.expected, latest))
+      decision match {
         case Rebase(np) =>
-          staged = renameStage(f, root, staged, p.expected + 1,
-            np.expected + 1)
+          require(p.cdf.isEmpty, "a change feed is derived from its " +
+            "parent snapshot and cannot be rebased")
+          staged = staged.map(renameStage(f, root, _, np.expected + 1))
           p = np
+          true
         case AlreadyApplied =>
-          discardStage(f, root, staged)
-          return None
+          staged.foreach(discardStage(f, root, _))
+          false
         case SurfaceConflict =>
-          discardStage(f, root, staged)
+          staged.foreach(discardStage(f, root, _))
           throw new ConflictException(p.expected, latest)
       }
     }
-    None // unreachable
+    var seen = latestVersion(spark, root)
+    while (seen != p.expected) {
+      if (!replanned(seen)) return None
+      seen = latestVersion(spark, root)
+    }
+    // checks are stable across rebases: appends re-parent only across
+    // APPEND/CREATE winners, which never alter the constraint set (an
+    // ALTER winner surfaces). COMPACT re-lays and DELETE subsets rows a
+    // prior commit already validated — re-scanning them would put an
+    // O(snapshot) constraint job on every maintenance pass for rows that
+    // cannot be new
+    if (!p.dataless && p.op != "COMPACT" && p.op != "DELETE")
+      enforceChecks(df, p.checks)
+    val body = if (p.sized && !p.dataless) rightSized(df) else df
+    staged = Some(stageData(body, root, p.expected + 1, p.statsKeys, p.cdf,
+      writeData = !p.dataless))
+    while (!tryPublish(spark, root, p, staged.get, df.schema.toDDL))
+      if (!replanned(latestVersion(spark, root))) return None
+    writeHint(f, root, p.expected + 1)
+    maybeWriteCheckpoint(spark, root, p.expected + 1)
+    Some(p.expected + 1)
   }
 
   /** Create the table as version 0 from `df`. The root must hold no
@@ -1131,7 +1154,7 @@ object GraftTable {
   def create(df: DataFrame, root: String): Long = {
     val seen = latestVersion(df.sparkSession, root)
     require(seen == -1L, s"table already exists at $root (version $seen)")
-    commitVersion(df, root, Pending("CREATE", -1L))
+    commit(df, root, Pending("CREATE", -1L)).get
   }
 
   /** Create the table range-partitioned on `keys.head` (numeric
@@ -1150,8 +1173,8 @@ object GraftTable {
     require(keys.nonEmpty, "at least one stats column is required")
     val seen = latestVersion(df.sparkSession, root)
     require(seen == -1L, s"table already exists at $root (version $seen)")
-    commitVersion(df.repartitionByRange(numFiles, col(keys.head)), root,
-      Pending("CREATE", -1L, statsKeys = keys, sized = false))
+    commit(df.repartitionByRange(numFiles, col(keys.head)), root,
+      Pending("CREATE", -1L, statsKeys = keys, sized = false)).get
   }
 
   /** Single-key convenience overload. */
@@ -1176,24 +1199,17 @@ object GraftTable {
       schemaKey(StructType.fromDDL(parent.schemaDdl)),
       s"schema mismatch: table has [${parent.schemaDdl}], append has " +
         s"[${df.schema.toDDL}] — use appendEvolve to add columns")
-    def pendingFrom(par: Commit) = Pending("APPEND", par.version,
-      carryFiles = par.files, carryRanges = par.ranges,
-      maxBatch = par.maxBatch, txns = par.txns,
-      txnStamps = par.txnStamps,
-      schemaDdl = Some(par.schemaDdl), statsKeys = par.statsCols,
-      tsFloor = par.ts.getOrElse(0L), carryDvs = par.dvs,
-      checks = par.checks)
     // AUTO-REBASE (Delta's append-vs-append rule): an append reads
     // nothing, so winners that only ADDED files (CREATE/APPEND with an
     // unchanged schema — an interleaved appendEvolve widens it and
     // must surface) can never invalidate it; re-parent silently.
     // MERGE/DELETE/COMPACT winners rewrote files the caller may have
     // reasoned about — those stay a surfaced ConflictException.
-    commitRebasing(df, root, pendingFrom(parent), (newParent, winnerOps) =>
-      if (winnerOps.forall(op => op == "APPEND" || op == "CREATE") &&
+    commit(df, root, Pending.inherit("APPEND", parent), w =>
+      if (w.ops.forall(op => op == "APPEND" || op == "CREATE") &&
         schemaKey(df.schema) ==
-          schemaKey(StructType.fromDDL(newParent.schemaDdl)))
-        Rebase(pendingFrom(newParent))
+          schemaKey(StructType.fromDDL(w.newParent.schemaDdl)))
+        Rebase(Pending.inherit("APPEND", w.newParent))
       else SurfaceConflict).get
   }
 
@@ -1230,14 +1246,32 @@ object GraftTable {
     // the optimizer would be free to prune IsNotNull on a column that
     // IS null for most of the table
     val evolved = StructType(p.fields ++ added.map(_.copy(nullable = true)))
-    commitVersion(ordered, root, Pending("APPEND", expectedVersion,
-      carryFiles = parent.files, carryRanges = parent.ranges,
-      maxBatch = parent.maxBatch, txns = parent.txns,
-      txnStamps = parent.txnStamps,
-      schemaDdl = Some(evolved.toDDL),
-      statsKeys = parent.statsCols,
-      tsFloor = parent.ts.getOrElse(0L), carryDvs = parent.dvs,
-      checks = parent.checks))
+    commit(ordered, root, Pending.inherit("APPEND", parent)
+      .copy(schemaDdl = Some(evolved.toDDL))).get
+  }
+
+  /** A streaming writer id names manifest `txn:` lines. */
+  private def requireAppId(appId: String): Unit =
+    require(appId.nonEmpty && !appId.exists(c => c == '\t' || c == '\n'),
+      s"appId must be non-empty and tab/newline-free: '$appId'")
+
+  /** A sink batch must match the table it lands in. `statsColumns`
+    * applies when the batch creates the table (the first batch of a
+    * stream writing to a fresh root): without it a sink-created table has
+    * no per-file stats, so range pruning, pruned merges, and deletion
+    * vectors are all unavailable to every consumer forever. On an
+    * existing table the committed layout is the contract — a differing
+    * option is refused, never silently ignored.
+    */
+  private def requireSinkFits(par: Commit, schema: StructType,
+      batchId: Long, statsColumns: Seq[String]): Unit = {
+    require(schemaKey(schema) == schemaKey(StructType.fromDDL(par.schemaDdl)),
+      s"schema mismatch: table has [${par.schemaDdl}], batch " +
+        s"$batchId has [${schema.toDDL}]")
+    require(statsColumns.isEmpty || statsColumns == par.statsCols,
+      s"statsColumns ${statsColumns} differs from the table's " +
+        s"committed stats layout ${par.statsCols} — stats columns " +
+        "are fixed at table creation")
   }
 
   /** Exactly-once streaming sink primitive: append a micro-batch as a
@@ -1296,52 +1330,22 @@ object GraftTable {
   def appendBatchIdempotent(df: DataFrame, batchId: Long,
       root: String, appId: String,
       statsColumns: Seq[String] = Nil): Boolean = {
-    require(appId.nonEmpty && !appId.exists(c => c == '\t' || c == '\n'),
-      s"appId must be non-empty and tab/newline-free: '$appId'")
+    requireAppId(appId)
     val spark = df.sparkSession
-    // `statsColumns` applies when THIS call creates the table (the
-    // first batch of a stream writing to a fresh root): without it a
-    // sink-created table has no per-file stats, so range pruning,
-    // pruned merges, and deletion vectors are all unavailable to every
-    // consumer forever. On an existing table the committed layout is
-    // the contract — a differing option is refused, never silently
-    // ignored.
-    def checkStats(par: Commit): Unit =
-      require(statsColumns.isEmpty || statsColumns == par.statsCols,
-        s"statsColumns ${statsColumns} differs from the table's " +
-          s"committed stats layout ${par.statsCols} — stats columns " +
-          "are fixed at table creation")
     def decideFrom(par: Commit): RebaseDecision =
       if (par.txns.get(appId).exists(batchId <= _)) AlreadyApplied
       else if (!par.txnAware && par.txns.isEmpty &&
         par.maxBatch.exists(batchId <= _))
         AlreadyApplied // legacy pre-txn manifest: unscoped check once
       else {
-        require(schemaKey(df.schema) ==
-          schemaKey(StructType.fromDDL(par.schemaDdl)),
-          s"schema mismatch: table has [${par.schemaDdl}], batch " +
-            s"$batchId has [${df.schema.toDDL}]")
-        checkStats(par)
-        Rebase(Pending("APPEND", par.version,
-          carryFiles = par.files, carryRanges = par.ranges,
-          batch = Some(batchId),
-          maxBatch = Some(math.max(batchId,
-            par.maxBatch.getOrElse(-1L))),
-          txns = par.txns + (appId -> batchId),
-          txnStamps = par.txnStamps +
-            (appId -> System.currentTimeMillis()),
-          schemaDdl = Some(par.schemaDdl),
-          statsKeys = par.statsCols,
-          tsFloor = par.ts.getOrElse(0L), carryDvs = par.dvs,
-          checks = par.checks))
+        requireSinkFits(par, df.schema, batchId, statsColumns)
+        Rebase(Pending.inherit("APPEND", par).stamped(appId, batchId))
       }
     val latest = latestVersion(spark, root)
     val p0 =
       if (latest == -1L)
-        Pending("CREATE", -1L, batch = Some(batchId),
-          maxBatch = Some(batchId), txns = Map(appId -> batchId),
-          txnStamps = Map(appId -> System.currentTimeMillis()),
-          statsKeys = statsColumns)
+        Pending("CREATE", -1L, statsKeys = statsColumns)
+          .stamped(appId, batchId)
       else decideFrom(readManifest(spark, root, latest)) match {
         case Rebase(p) => p
         case AlreadyApplied => return false
@@ -1351,8 +1355,7 @@ object GraftTable {
     // the sink rebases across ANY winner op: a blind append cannot be
     // invalidated by a merge/compact either (its rows are new
     // regardless), and the decide re-check keeps idempotence exact
-    commitRebasing(df, root, p0, (newParent, _) =>
-      decideFrom(newParent)).isDefined
+    commit(df, root, p0, w => decideFrom(w.newParent)).isDefined
   }
 
   /** Exactly-once streaming UPSERT primitive — the MERGE twin of
@@ -1381,8 +1384,7 @@ object GraftTable {
       ordering: Seq[String], opCol: Option[String] = None,
       deletionVectors: Boolean = false,
       statsColumns: Seq[String] = Nil): Boolean = {
-    require(appId.nonEmpty && !appId.exists(c => c == '\t' || c == '\n'),
-      s"appId must be non-empty and tab/newline-free: '$appId'")
+    requireAppId(appId)
     require(ordering.nonEmpty,
       "mergeBatchIdempotent needs ordering columns to collapse " +
         "same-key duplicates within a batch deterministically")
@@ -1412,42 +1414,29 @@ object GraftTable {
       case Some(_) => batch0
       case None => batch0.withColumn(op, lit("U"))
     }).localCheckpoint(true)
-    def stamp(p: Pending): Pending = p.copy(
-      batch = Some(batchId),
-      maxBatch = Some(math.max(batchId, p.maxBatch.getOrElse(-1L))),
-      txns = p.txns + (appId -> batchId),
-      txnStamps = p.txnStamps + (appId -> System.currentTimeMillis()))
+    val stamp = (p: Pending) => p.stamped(appId, batchId)
     try {
       var attempts = 0
       while (true) {
         val latest = latestVersion(spark, root)
         try {
           if (latest == -1L) {
-            val emptyBase = spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              dataShape.schema)
             // a stats-creating first batch is range-laid on the head
             // stats column so the layout starts prunable, exactly like
             // createPartitioned (later merges preserve it)
-            val merged0 =
-              Cdc.latestWinsMerge(emptyBase, changes, key, ordering, op)
+            val merged0 = Cdc.latestWinsMerge(
+              emptyFrame(spark, dataShape.schema), changes, key, ordering, op)
             val merged = statsColumns.headOption match {
               case Some(k) => merged0.repartitionByRange(col(k))
               case None => merged0
             }
-            commitVersion(merged, root, stamp(Pending("CREATE", -1L,
-              statsKeys = statsColumns)))
+            commit(merged, root,
+              stamp(Pending("CREATE", -1L, statsKeys = statsColumns)))
           } else {
             val parent = readManifest(spark, root, latest)
             if (parent.txns.get(appId).exists(batchId <= _)) return false
-            require(schemaKey(dataShape.schema) ==
-              schemaKey(StructType.fromDDL(parent.schemaDdl)),
-              s"schema mismatch: table has [${parent.schemaDdl}], batch " +
-                s"$batchId has [${dataShape.schema.toDDL}]")
-            require(statsColumns.isEmpty || statsColumns == parent.statsCols,
-              s"statsColumns ${statsColumns} differs from the table's " +
-                s"committed stats layout ${parent.statsCols} — stats " +
-                "columns are fixed at table creation")
+            requireSinkFits(parent, dataShape.schema, batchId,
+              statsColumns)
             if (parent.statsCols.contains(key))
               mergePrunedImpl(root, changes, key, ordering, latest, op,
                 stamp, useDvs = deletionVectors)
@@ -1543,14 +1532,10 @@ object GraftTable {
       else System.currentTimeMillis() - txnRetentionMs
     val kept = parent.txns.keySet.filter(app =>
       parent.txnStamps.getOrElse(app, 0L) >= cutoff)
-    commitVersion(laid, root, Pending("COMPACT", expectedVersion,
-      maxBatch = parent.maxBatch,
+    commit(laid, root, Pending.inherit("COMPACT", parent).rewriting.copy(
       txns = parent.txns.view.filterKeys(kept).toMap,
       txnStamps = parent.txnStamps.view.filterKeys(kept).toMap,
-      schemaDdl = Some(parent.schemaDdl),
-      statsKeys = parent.statsCols,
-      tsFloor = parent.ts.getOrElse(0L),
-      checks = parent.checks, sized = false))
+      sized = false)).get
   }
 
   /** RESTORE (Delta's RESTORE TABLE ... TO VERSION recipe): re-commit
@@ -1610,15 +1595,13 @@ object GraftTable {
     // the pair frame is driver-small (masks live in the manifest)
     def rowsAt(pairs: Seq[(String, Long)]): Option[DataFrame] = {
       if (pairs.isEmpty) return None
-      import org.apache.spark.sql.functions.{broadcast, regexp_extract}
+      import org.apache.spark.sql.functions.broadcast
       import spark.implicits._
       val wanted = pairs.toDF("__graft_dv_file", "__graft_dv_ri")
       val files = pairs.map(_._1).distinct
       Some(spark.read.schema(schema)
         .parquet(files.map(p => s"$root/$p"): _*)
-        .withColumn("__graft_dv_file",
-          regexp_extract(col("_metadata.file_path"),
-            "(data/v\\d{8}-[^/]+/[^/]+)$", 1))
+        .withColumn("__graft_dv_file", relPathCol)
         .withColumn("__graft_dv_ri", col("_metadata.row_index"))
         .join(broadcast(wanted),
           Seq("__graft_dv_file", "__graft_dv_ri"), "left_semi")
@@ -1634,8 +1617,7 @@ object GraftTable {
     val deleteCand = (wholeRows(removedWhole, parent.dvs) ++
       rowsAt(maskDiffs.flatMap { case (f, _, rem) => rem.map(f -> _) }))
       .reduceOption(_.unionByName(_))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val empty = emptyFrame(spark, schema)
     // EXCEPT ALL cancels rewrite overlap: a row that merely moved
     // files is in both candidate sets and must not feed at all
     val inserts = (insertCand, deleteCand) match {
@@ -1650,18 +1632,11 @@ object GraftTable {
     }
     val cdf = withChangeType(inserts, "insert")
       .unionByName(withChangeType(deletes, "delete"))
-    commitVersion(empty, root, Pending("RESTORE", expectedVersion,
-      carryFiles = target.files,
-      carryRanges = target.ranges,
-      carryDvs = target.dvs,
-      maxBatch = parent.maxBatch,
-      txns = parent.txns, txnStamps = parent.txnStamps,
-      schemaDdl = Some(target.schemaDdl),
-      statsKeys = target.statsCols,
-      cdf = Some(cdf),
-      tsFloor = parent.ts.getOrElse(0L),
-      dataless = true,
-      checks = target.checks))
+    commit(empty, root, Pending.inherit("RESTORE", parent).copy(
+      carryFiles = target.files, carryRanges = target.ranges,
+      carryDvs = target.dvs, schemaDdl = Some(target.schemaDdl),
+      statsKeys = target.statsCols, checks = target.checks,
+      cdf = Some(cdf), dataless = true)).get
   }
 
   /** [[restore]] to [[versionAtTimestamp]]'s resolution — Delta's
@@ -1697,18 +1672,9 @@ object GraftTable {
     // add-time validation over the whole snapshot (Delta refuses too)
     enforceChecks(snapshotOf(spark, root, parent),
       Map(name -> exprSql))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType.fromDDL(parent.schemaDdl))
-    commitVersion(empty, root, Pending("ALTER", expectedVersion,
-      carryFiles = parent.files, carryRanges = parent.ranges,
-      maxBatch = parent.maxBatch, txns = parent.txns,
-      txnStamps = parent.txnStamps,
-      schemaDdl = Some(parent.schemaDdl),
-      statsKeys = parent.statsCols,
-      tsFloor = parent.ts.getOrElse(0L), carryDvs = parent.dvs,
-      dataless = true,
-      checks = parent.checks + (name -> exprSql)))
+    commit(emptyFrame(spark, StructType.fromDDL(parent.schemaDdl)), root,
+      Pending.inherit("ALTER", parent).copy(dataless = true,
+        checks = parent.checks + (name -> exprSql))).get
   }
 
   /** Drop a CHECK constraint — the metadata-only ALTER twin. */
@@ -1718,18 +1684,9 @@ object GraftTable {
     require(parent.checks.contains(name),
       s"no such constraint '$name' (table has: " +
         s"${parent.checks.keys.toSeq.sorted.mkString(", ")})")
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType.fromDDL(parent.schemaDdl))
-    commitVersion(empty, root, Pending("ALTER", expectedVersion,
-      carryFiles = parent.files, carryRanges = parent.ranges,
-      maxBatch = parent.maxBatch, txns = parent.txns,
-      txnStamps = parent.txnStamps,
-      schemaDdl = Some(parent.schemaDdl),
-      statsKeys = parent.statsCols,
-      tsFloor = parent.ts.getOrElse(0L), carryDvs = parent.dvs,
-      dataless = true,
-      checks = parent.checks - name))
+    commit(emptyFrame(spark, StructType.fromDDL(parent.schemaDdl)), root,
+      Pending.inherit("ALTER", parent).copy(dataless = true,
+        checks = parent.checks - name)).get
   }
 
   /** ACID MERGE: apply a changelog (op I/U/D, latest-wins by
@@ -1771,15 +1728,9 @@ object GraftTable {
     val staged = changes.localCheckpoint(true)
     try {
       val merged = Cdc.latestWinsMerge(base, staged, key, ordering, op)
-      commitVersion(merged, root, mod(Pending("MERGE", expectedVersion,
-        maxBatch = parent.maxBatch, txns = parent.txns,
-        txnStamps = parent.txnStamps,
-        schemaDdl = Some(parent.schemaDdl),
-        statsKeys = parent.statsCols,
-        cdf = Some(Cdc.latestWinsChanges(base, staged, key, ordering,
-          op)),
-        tsFloor = parent.ts.getOrElse(0L),
-        checks = parent.checks)))
+      commit(merged, root, mod(Pending.inherit("MERGE", parent).rewriting
+        .copy(cdf = Some(Cdc.latestWinsChanges(base, staged, key, ordering,
+          op))))).get
     } finally CacheRelease.release(staged)
   }
 
@@ -1803,14 +1754,8 @@ object GraftTable {
     * `merge(all files) ≡ merge(touched) ∪ carried` row-for-row. The
     * rewritten output is range-repartitioned on the key with fresh
     * per-file stats, so pruned merges compose.
-    */
-  def mergePruned(root: String, changes0: DataFrame, key: String,
-      ordering: Seq[String], expectedVersion: Long,
-      op: String = "op"): Long =
-    mergePrunedImpl(root, changes0, key, ordering, expectedVersion, op,
-      identity)
-
-  /** `deletionVectors = true` switches the pruned merge's WRITE SHAPE
+    *
+    * `deletionVectors = true` switches the pruned merge's WRITE SHAPE
     * from rewrite-the-touched-files to record-deletion-vectors (VERDICT
     * r17 next-round #3, Delta's DV recipe): instead of rewriting every
     * file that contains a matched key — a 1-row update into a 1 GB file
@@ -1829,7 +1774,7 @@ object GraftTable {
     */
   def mergePruned(root: String, changes0: DataFrame, key: String,
       ordering: Seq[String], expectedVersion: Long,
-      op: String, deletionVectors: Boolean): Long =
+      op: String = "op", deletionVectors: Boolean = false): Long =
     mergePrunedImpl(root, changes0, key, ordering, expectedVersion, op,
       identity, useDvs = deletionVectors)
 
@@ -1842,8 +1787,7 @@ object GraftTable {
 
   private def mergePrunedImpl(root: String, changes0: DataFrame,
       key: String, ordering: Seq[String], expectedVersion: Long,
-      op: String, mod: Pending => Pending,
-      useDvs: Boolean = false): Long = {
+      op: String, mod: Pending => Pending, useDvs: Boolean): Long = {
     val spark = changes0.sparkSession
     val parent = readManifest(spark, root, expectedVersion)
     require(parent.statsCols.contains(key),
@@ -1861,19 +1805,9 @@ object GraftTable {
       if (bounds.isNullAt(0)) {
         // empty changelog: nothing to do but commit an identical version
         // (with an explicitly empty change feed)
-        val empty = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        return commitVersion(empty,
-          root, mod(Pending("MERGE", expectedVersion,
-            carryFiles = parent.files, carryRanges = parent.ranges,
-            maxBatch = parent.maxBatch, txns = parent.txns,
-            txnStamps = parent.txnStamps,
-            schemaDdl = Some(parent.schemaDdl),
-            statsKeys = parent.statsCols,
-            cdf = Some(withChangeType(empty)),
-            tsFloor = parent.ts.getOrElse(0L),
-            carryDvs = parent.dvs,
-            checks = parent.checks)))
+        val empty = emptyFrame(spark, schema)
+        return commit(empty, root, mod(Pending.inherit("MERGE", parent)
+          .copy(cdf = Some(withChangeType(empty))))).get
       }
       val (cmin, cmax) = (bounds.getLong(0), bounds.getLong(1))
       // stage 1: range-disjoint files can't hold a change key; files
@@ -1915,21 +1849,16 @@ object GraftTable {
         // matched rows by row index, append only the winning images.
         // newRows = latestWinsMerge into an EMPTY base = exactly the
         // collapsed non-delete winner images (inserts included)
-        val emptyBase = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        val newRows =
-          Cdc.latestWinsMerge(emptyBase, changes, key, ordering, op)
+        val newRows = Cdc.latestWinsMerge(emptyFrame(spark, schema),
+          changes, key, ordering, op)
             .repartitionByRange(1, col(key))
         // matched (file, row_index) pairs — the new DV entries; bounded
         // by totalMatched <= DvMaxRowsPerCommit
-        import org.apache.spark.sql.functions.regexp_extract
         val newDvIds: Map[String, Seq[Long]] =
           if (touched.isEmpty) Map.empty
           else spark.read.schema(schema)
             .parquet(touched.toSeq.sorted.map(p => s"$root/$p"): _*)
-            .select(col(key),
-              regexp_extract(col("_metadata.file_path"),
-                "(data/v\\d{8}-[^/]+/[^/]+)$", 1).as("__f"),
+            .select(col(key), relPathCol.as("__f"),
               col("_metadata.row_index").as("__ri"))
             .join(changes.select(col(key)).distinct(), key)
             .select("__f", "__ri")
@@ -1941,35 +1870,22 @@ object GraftTable {
             pth -> unionDvRanges(parent.dvs.getOrElse(pth, Nil),
               idsToRanges(ids))
           }
-        commitVersion(newRows, root, mod(Pending("MERGE", expectedVersion,
+        commit(newRows, root, mod(Pending.inherit("MERGE", parent).copy(
           carryFiles = carried ++ touched.toSeq.sorted,
           carryRanges = parent.ranges.filter(r =>
             keepSet.contains(r._1) || touched.contains(r._1)),
-          maxBatch = parent.maxBatch, txns = parent.txns,
-          txnStamps = parent.txnStamps,
-          schemaDdl = Some(parent.schemaDdl),
-          statsKeys = parent.statsCols,
-          cdf = Some(cdf),
-          tsFloor = parent.ts.getOrElse(0L),
-          carryDvs = updatedDvs,
-          checks = parent.checks)))
+          carryDvs = updatedDvs, cdf = Some(cdf)))).get
       } else {
         val merged = Cdc.latestWinsMerge(base, changes, key, ordering, op)
           .repartitionByRange(math.max(1, touched.size), col(key))
         // the carried files provably hold no change key (stage 2 is
         // exact), so the change feed computed against ONLY the touched
         // files is the table's complete change set for this commit
-        commitVersion(merged, root, mod(Pending("MERGE", expectedVersion,
+        commit(merged, root, mod(Pending.inherit("MERGE", parent).copy(
           carryFiles = carried,
           carryRanges = parent.ranges.filter(r => keepSet.contains(r._1)),
-          maxBatch = parent.maxBatch, txns = parent.txns,
-          txnStamps = parent.txnStamps,
-          schemaDdl = Some(parent.schemaDdl),
-          statsKeys = parent.statsCols,
-          cdf = Some(cdf),
-          tsFloor = parent.ts.getOrElse(0L),
           carryDvs = parent.dvs.view.filterKeys(keepSet).toMap,
-          checks = parent.checks)))
+          cdf = Some(cdf)))).get
       }
     } finally CacheRelease.release(changes)
   }
@@ -1994,14 +1910,8 @@ object GraftTable {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val kept = snap.filter(not(coalesce(condition, lit(false))))
     val gone = snap.filter(coalesce(condition, lit(false)))
-    commitVersion(kept, root, Pending("DELETE", expectedVersion,
-      maxBatch = parent.maxBatch, txns = parent.txns,
-      txnStamps = parent.txnStamps,
-      schemaDdl = Some(parent.schemaDdl),
-      statsKeys = parent.statsCols,
-      cdf = Some(withChangeType(gone, "delete")),
-      tsFloor = parent.ts.getOrElse(0L),
-      checks = parent.checks))
+    commit(kept, root, Pending.inherit("DELETE", parent).rewriting
+      .copy(cdf = Some(withChangeType(gone, "delete")))).get
   }
 
   /** `df` + a constant `_change_type` column — the stored CDF shape. */
@@ -2024,22 +1934,18 @@ object GraftTable {
   private def scanMinusDvs(spark: SparkSession, root: String,
       schema: StructType, files: Seq[String],
       dvs: Map[String, Seq[(Long, Long)]]): DataFrame = {
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    if (files.isEmpty) return emptyFrame(spark, schema)
     val base =
       spark.read.schema(schema).parquet(files.map(p => s"$root/$p"): _*)
     val relevant = dvs.view.filterKeys(files.toSet).toMap
     if (relevant.isEmpty) return base
-    import org.apache.spark.sql.functions.{broadcast, regexp_extract}
+    import org.apache.spark.sql.functions.broadcast
     import spark.implicits._
     val deleted = relevant.toSeq.flatMap { case (pth, rs) =>
       rs.flatMap { case (lo, hi) => (lo to hi).map(pth -> _) }
     }.toDF("__graft_dv_file", "__graft_dv_ri")
     base
-      .withColumn("__graft_dv_file",
-        regexp_extract(col("_metadata.file_path"),
-          "(data/v\\d{8}-[^/]+/[^/]+)$", 1))
+      .withColumn("__graft_dv_file", relPathCol)
       .withColumn("__graft_dv_ri", col("_metadata.row_index"))
       .join(broadcast(deleted),
         Seq("__graft_dv_file", "__graft_dv_ri"), "left_anti")
@@ -2379,8 +2285,7 @@ object GraftTable {
       case (None, Some(b)) => b
       case _ =>
         // e.g. a compact-only range: a legitimately empty feed
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], shape)
+        emptyFrame(spark, shape)
     }
   }
 

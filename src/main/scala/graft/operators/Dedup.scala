@@ -442,9 +442,9 @@ object Dedup {
     // Floor the projected (id, text) pairs' parallelism before the
     // CPU-heavy signature map: input splits track bytes, not compute,
     // and a single split must not serialize the whole corpus through
-    // one task. cpuBoundDs (not an unconditional repartition): on a
+    // one task. cpuBound (not an unconditional repartition): on a
     // many-partition cluster table this is a structural no-op.
-    val sigs = graft.util.Spread.cpuBoundDs(docs
+    val sigs = graft.util.Spread.cpuBound(docs
       .select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
       .as[(Long, String)])
       .map { case (id, t) =>

@@ -237,7 +237,7 @@ object Multimodal {
   def syntheticWavTable(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBound(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>
@@ -350,7 +350,7 @@ object Multimodal {
   def syntheticPngTable(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBound(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>
@@ -768,7 +768,7 @@ object Multimodal {
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBound(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>
@@ -935,7 +935,7 @@ object Multimodal {
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBound(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>
@@ -1296,7 +1296,7 @@ object Multimodal {
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBound(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>
@@ -1475,7 +1475,7 @@ object Multimodal {
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.util.Spread.cpuBoundDs(docs
+    graft.util.Spread.cpuBound(docs
       .select(col(idCol).cast("long").as("doc_id"))
       .as[Long])
       .mapPartitions { ids =>

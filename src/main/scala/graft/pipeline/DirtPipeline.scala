@@ -108,9 +108,20 @@ object DirtPipeline {
     // AQE/auto-broadcast promote it when the stats say it is small; the
     // flag stays for callers that know their vocabulary is tiny.
     val sw = if (broadcastMargins) broadcast(swMargins) else swMargins
-    triples
+    miOfCounts(triples
       .join(sw, Seq("slot", "word"), "inner")
-      .join(psMargins, Seq("path", "slot"), "inner")
+      .join(psMargins, Seq("path", "slot"), "inner"), n)
+  }
+
+  /** The read-time MI map over joined counts `(path, slot, word, cnt,
+    * ps_cnt, sw_cnt)`: `mi = ln(cnt·N / (ps_cnt·sw_cnt))` with the
+    * reference's filter and its 0→1 N fallback (`:1159`). Map-only, so
+    * an incrementally maintained join ([[graft.streaming.DirtIncremental]])
+    * gets the same expression tree as a batch run.
+    */
+  def miOfCounts(counts: DataFrame, n0: Long): DataFrame = {
+    val n = if (n0 == 0L) 1L else n0
+    counts
       .withColumn("mi",
         log(col("cnt").cast("double") * lit(n.toDouble) /
           (col("ps_cnt").cast("double") * col("sw_cnt").cast("double"))))

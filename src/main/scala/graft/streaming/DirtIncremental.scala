@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   * on the GLOBAL N (`ln(cnt·N / (ps·sw))`), which moves every batch and
   * would invalidate every stored value. [[miFeatures]] instead applies
   * the log expression at read time over the maintained join — map-only,
-  * no shuffle — using the IDENTICAL expression tree as the batch
-  * `DirtPipeline.miFeatures`, so the view is bit-identical to a
+  * no shuffle — through the batch pipeline's own map
+  * (`DirtPipeline.miOfCounts`), so the view is bit-identical to a
   * from-scratch batch run after every batch (asserted exactly, not
   * within-epsilon, by `DirtIncrementalSpec`). Similarity then composes
   * the unchanged batch `DirtPipeline.similarity` over the view.
@@ -106,11 +106,9 @@ object DirtIncremental {
 
     val triples2 = mergeCounts(state.triples, deltaTr,
       Seq("path", "slot", "word"), "cnt").localCheckpoint(true)
-    val sw2 = mergeCounts(state.swMargins,
-      deltaTr.groupBy("slot", "word").agg(sum("cnt").as("sw_cnt")),
+    val sw2 = mergeCounts(state.swMargins, DirtPipeline.swMargins(deltaTr),
       Seq("slot", "word"), "sw_cnt").localCheckpoint(true)
-    val ps2 = mergeCounts(state.psMargins,
-      deltaTr.groupBy("path", "slot").agg(sum("cnt").as("ps_cnt")),
+    val ps2 = mergeCounts(state.psMargins, DirtPipeline.psMargins(deltaTr),
       Seq("path", "slot"), "ps_cnt").localCheckpoint(true)
 
     // the three staleness key sets, all bounded by the batch vocabulary
@@ -155,28 +153,13 @@ object DirtIncremental {
       state.batches + 1), member2)
   }
 
-  /** The MI view over the maintained join — the same expression tree as
-    * `DirtPipeline.miFeatures` (including the 0→1 N fallback,
-    * `DirtDriver.java:1159`), applied map-only at read time, so the
-    * result is bit-identical to a from-scratch batch run.
+  /** The MI view over the maintained join — `DirtPipeline.miOfCounts`,
+    * the map the batch `DirtPipeline.miFeatures` applies (including the
+    * 0→1 N fallback, `DirtDriver.java:1159`), applied map-only at read
+    * time, so the result is bit-identical to a from-scratch batch run.
     */
   def miFeatures(state: State): DataFrame =
-    miView(state.features, state.n)
-
-  /** The shared N-dependent read-time map — ONE definition, so the
-    * full-snapshot view ([[miFeatures]]) and the member-slice view
-    * ([[scoredPairs]]) can never drift expression-wise.
-    */
-  private def miView(features: DataFrame, n0: Long): DataFrame = {
-    val n = if (n0 == 0L) 1L else n0
-    features
-      .withColumn("mi",
-        log(col("cnt").cast("double") * lit(n.toDouble) /
-          (col("ps_cnt").cast("double") * col("sw_cnt").cast("double"))))
-      .filter(col("cnt") > 0 && col("ps_cnt") * col("sw_cnt") > 0 &&
-        col("mi") > 0.001)
-      .select("path", "slot", "word", "mi")
-  }
+    DirtPipeline.miOfCounts(state.features, state.n)
 
   /** Scored test pairs from the maintained state — batch
     * `DirtPipeline.similarity` composed over the incremental MI view.
@@ -252,7 +235,7 @@ object DirtIncremental {
     * sums are gated by `DirtIncrementalSpec` / the bench probe).
     */
   def scoredPairs(sim: SimState): DataFrame = {
-    val mi = miView(sim.memberFeatures, sim.inner.n)
+    val mi = DirtPipeline.miOfCounts(sim.memberFeatures, sim.inner.n)
     DirtPipeline.similarity(mi, DirtPipeline.sumMi(mi), sim.pairs)
   }
 

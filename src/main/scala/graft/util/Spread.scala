@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join,
   LogicalPlan, Sort, Window}
 
@@ -52,17 +52,10 @@ object Spread {
         "for post-exchange stages")
   }
 
-  /** `df` repartitioned up to the cluster's default parallelism when its
+  /** `ds` repartitioned up to the cluster's default parallelism when its
     * current scan parallelism is below it; unchanged otherwise.
     */
-  def cpuBound(df: DataFrame): DataFrame = {
-    assertProbeSafe(df.queryExecution.analyzed)
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
-
-  /** [[cpuBound]] for typed Datasets. */
-  def cpuBoundDs[T](ds: Dataset[T]): Dataset[T] = {
+  def cpuBound[T](ds: Dataset[T]): Dataset[T] = {
     assertProbeSafe(ds.queryExecution.analyzed)
     val target = ds.sparkSession.sparkContext.defaultParallelism
     if (ds.rdd.getNumPartitions >= target) ds else ds.repartition(target)

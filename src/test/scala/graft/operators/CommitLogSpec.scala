@@ -17,7 +17,50 @@ object CommitLogSpecCounter {
   def next(): Double = c.incrementAndGet().toDouble
 }
 
+/** Publishes a copy of the parent manifest as `version` from inside a
+  * Spark task, so the commit whose rows the task is writing loses its
+  * CAS after it has staged data. At most one copy lands.
+  */
+object CommitLogSpecRace {
+  import java.nio.charset.StandardCharsets.UTF_8
+  import java.nio.file.{FileAlreadyExistsException, Files, Paths,
+    StandardOpenOption}
+
+  def publishOnce(root: String, version: Long): Boolean = {
+    val log = Paths.get(root, "_graft_log")
+    val parent = new String(
+      Files.readAllBytes(log.resolve(f"v${version - 1}%08d.commit")), UTF_8)
+    val body = parent.split("\n").map {
+      case l if l.startsWith("version:") => s"version:$version"
+      case l if l.startsWith("parent:") => s"parent:${version - 1}"
+      case l => l
+    }.mkString("", "\n", "\n")
+    try Files.write(log.resolve(f"v$version%08d.commit"),
+      body.getBytes(UTF_8), StandardOpenOption.CREATE_NEW)
+    catch { case _: FileAlreadyExistsException => () }
+    true
+  }
+}
+
+object CommitLogSpec {
+  /** What a new version inherits from its parent, stamps aside. */
+  final case class Carry(txns: Map[String, Long],
+      maxBatch: Option[Long], checks: Map[String, String],
+      statsCols: Seq[String], schemaDdl: String)
+
+  def carryOf(c: GraftTable.Commit): Carry =
+    Carry(c.txns, c.maxBatch, c.checks, c.statsCols, c.schemaDdl)
+
+  /** One commit of an op against the version it is given; `stamped` is
+    * the writer whose txn stamp it refreshes and `change` the inherited
+    * fields it is meant to change.
+    */
+  final case class Step(name: String, run: Long => Long,
+      stamped: Option[String] = None, change: Carry => Carry = identity)
+}
+
 class CommitLogSpec extends AnyFunSuite {
+  import CommitLogSpec._
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -1516,5 +1559,179 @@ class CommitLogSpec extends AnyFunSuite {
       assert(GraftTable.read(spark, root).count() == 51L)
       assert(GraftTable.readVersion(spark, root, 7L).count() == 8L)
     } finally spark.conf.unset("graft.checkpoint.indexWindow")
+  }
+
+  private def kRows(ks: Seq[Long]) = {
+    import spark.implicits._
+    ks.map(k => (k, s"n$k", k * 1.0)).toDF("k", "name", "bal")
+  }
+
+  private def kChanges(ks: Seq[Long]) = {
+    import spark.implicits._
+    ks.map(k => (k, s"m$k", k * 2.0, "U", 1L))
+      .toDF("k", "name", "bal", "op", "seq")
+  }
+
+  /** Version 0 range-laid on `k` with per-file stats, version 1 a batch of
+    * streaming writer `w1`.
+    */
+  private def seedTable(root: String): Long = {
+    GraftTable.createPartitioned(kRows(1L to 20L), root, "k", 2)
+    assert(GraftTable.appendBatchIdempotent(kRows(Seq(21L)), 0L, root, "w1"))
+    1L
+  }
+
+  /** One no-conflict commit of every op that derives a version from a
+    * parent, in an order that lets them chain on one seeded table.
+    */
+  private def opSteps(root: String): Seq[Step] = {
+    import spark.implicits._
+    var constrained = -1L
+    Seq(
+      Step("append", v => GraftTable.append(kRows(Seq(30L)), root, v)),
+      Step("appendBatchIdempotent", { v =>
+        assert(GraftTable.appendBatchIdempotent(kRows(Seq(31L)), 1L, root,
+          "w1"))
+        v + 1
+      }, Some("w1"),
+        c => c.copy(txns = c.txns + ("w1" -> 1L), maxBatch = Some(1L))),
+      Step("mergeBatchIdempotent", { v =>
+        assert(GraftTable.mergeBatchIdempotent(kRows(Seq(2L, 40L)), 0L,
+          root, "w2", "k", Seq("bal")))
+        v + 1
+      }, Some("w2"), c => c.copy(txns = c.txns + ("w2" -> 0L))),
+      Step("addCheckConstraint", { v =>
+        constrained =
+          GraftTable.addCheckConstraint(spark, root, v, "pos", "bal >= 0")
+        constrained
+      }, change = c => c.copy(checks = c.checks + ("pos" -> "bal >= 0"))),
+      Step("merge", v =>
+        GraftTable.merge(root, kChanges(Seq(3L)), "k", Seq("seq"), v)),
+      Step("mergePruned rewrite", v =>
+        GraftTable.mergePruned(root, kChanges(Seq(4L)), "k", Seq("seq"), v)),
+      Step("mergePruned deletion vectors", v =>
+        GraftTable.mergePruned(root, kChanges(Seq(5L)), "k", Seq("seq"), v,
+          "op", true)),
+      Step("mergePruned empty changelog", v =>
+        GraftTable.mergePruned(root, kChanges(Nil), "k", Seq("seq"), v)),
+      Step("deleteWhere", v =>
+        GraftTable.deleteWhere(spark, root, col("k") === 6L, v)),
+      Step("dropCheckConstraint", v =>
+        GraftTable.dropCheckConstraint(spark, root, v, "pos"),
+        change = c => c.copy(checks = c.checks - "pos")),
+      Step("compact", v => GraftTable.compact(spark, root, v, numFiles = 2)),
+      Step("restore", v => GraftTable.restore(spark, root, v, constrained),
+        change = { c =>
+          val t = GraftTable.manifest(spark, root, constrained)
+          c.copy(checks = t.checks, statsCols = t.statsCols,
+            schemaDdl = t.schemaDdl)
+        }),
+      Step("appendEvolve", v => GraftTable.appendEvolve(
+        Seq((50L, "n50", 50.0, "t")).toDF("k", "name", "bal", "tag"), root,
+        v), change = c => c.copy(schemaDdl = org.apache.spark.sql.types
+          .StructType(org.apache.spark.sql.types.StructType
+            .fromDDL(c.schemaDdl).fields :+
+            org.apache.spark.sql.types.StructField("tag",
+              org.apache.spark.sql.types.StringType)).toDDL)))
+  }
+
+  test("every op carries txns, stamps, CHECKs, stats columns and schema from its parent, changing only its own fields; ts never goes backwards") {
+    val root = freshRoot()
+    var v = seedTable(root)
+    opSteps(root).foreach { s =>
+      val parent = GraftTable.manifest(spark, root, v)
+      val next = s.run(v)
+      assert(next == v + 1, s.name)
+      val child = GraftTable.manifest(spark, root, next)
+      assert(child.parent == v, s.name)
+      assert(carryOf(child) == s.change(carryOf(parent)), s.name)
+      val fresh = s.stamped.toSet
+      assert(child.txnStamps -- fresh == parent.txnStamps -- fresh, s.name)
+      fresh.foreach(app => assert(
+        child.txnStamps(app) >= parent.txnStamps.getOrElse(app, 0L), s.name))
+      assert(child.ts.get >= parent.ts.get, s.name)
+      v = next
+    }
+    assert(GraftTable.manifest(spark, root, v).txns ==
+      Map("w1" -> 1L, "w2" -> 0L))
+  }
+
+  test("a stale appendEvolve, deleteWhere, compact or addCheckConstraint surfaces the conflict and leaves no stage behind") {
+    import spark.implicits._
+    val root = freshRoot()
+    GraftTable.create(table3(Seq((1L, "a", 1.0), (2L, "b", 2.0))), root)
+    GraftTable.append(table3(Seq((3L, "c", 3.0))), root, 0L)
+    def stages(): Set[String] = Seq("data", "cdf").flatMap { sub =>
+      Option(new java.io.File(s"$root/$sub").list()).toSeq.flatten
+        .map(d => s"$sub/$d")
+    }.toSet
+    val before = stages()
+    def evolved = Seq((4L, "d", 4.0, "t")).toDF("k", "name", "bal", "tag")
+    // stale before staging: the fast-fail check refuses
+    Seq[(String, () => Long)](
+      "appendEvolve" -> (() => GraftTable.appendEvolve(evolved, root, 0L)),
+      "deleteWhere" -> (() =>
+        GraftTable.deleteWhere(spark, root, col("k") === 1L, 0L)),
+      "compact" -> (() => GraftTable.compact(spark, root, 0L)),
+      "addCheckConstraint" -> (() =>
+        GraftTable.addCheckConstraint(spark, root, 0L, "pos", "bal > 0"))
+    ).foreach { case (name, op) =>
+      val e = intercept[GraftTable.ConflictException](op())
+      assert(e.expected == 0L && e.actual == 1L, name)
+      assert(stages() == before, s"$name left a stage behind")
+    }
+    // stale after staging: a winner lands while the rows are written, the
+    // CAS is lost, and the data (and change feed) stages are discarded
+    def raceTo(version: Long) =
+      udf((_: Long) => CommitLogSpecRace.publishOnce(root, version))
+        .asNondeterministic()
+    val e1 = intercept[GraftTable.ConflictException] {
+      GraftTable.appendEvolve(evolved.filter(raceTo(2L)(col("k"))), root, 1L)
+    }
+    assert(e1.expected == 1L && e1.actual == 2L)
+    assert(stages() == before, "a lost appendEvolve left its stage behind")
+    val e2 = intercept[GraftTable.ConflictException] {
+      GraftTable.deleteWhere(spark, root,
+        raceTo(3L)(col("k")) && col("k") === 1L, 2L)
+    }
+    assert(e2.expected == 2L && e2.actual == 3L)
+    assert(stages() == before, "a lost deleteWhere left its stage behind")
+    assert(GraftTable.read(spark, root).count() == 3L)
+  }
+
+  test("manifest reads of one no-conflict commit of each op are pinned") {
+    def reads(body: => Any): Long = {
+      GraftTable.manifestReadCount.set(0L)
+      body
+      GraftTable.manifestReadCount.get()
+    }
+    val got = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    got("create") = reads(GraftTable.create(kRows(Seq(1L)), freshRoot()))
+    got("appendBatchIdempotent creating") = reads(
+      GraftTable.appendBatchIdempotent(kRows(Seq(1L)), 0L, freshRoot(), "w"))
+    got("mergeBatchIdempotent creating") = reads(
+      GraftTable.mergeBatchIdempotent(kRows(Seq(1L)), 0L, freshRoot(), "w",
+        "k", Seq("bal")))
+    val root = freshRoot()
+    got("createPartitioned") =
+      reads(GraftTable.createPartitioned(kRows(1L to 20L), root, "k", 2))
+    got("appendBatchIdempotent first batch") = reads(
+      GraftTable.appendBatchIdempotent(kRows(Seq(21L)), 0L, root, "w1"))
+    var v = 1L
+    opSteps(root).foreach(s => got(s.name) = reads { v = s.run(v) })
+    // measured before the commit paths were unified: a no-conflict
+    // commit reads its parent (restore also its target, the merge sink
+    // the latest version before its merge reads it again), never more
+    val pinned = Map[String, Long](
+      "create" -> 0L, "appendBatchIdempotent creating" -> 0L,
+      "mergeBatchIdempotent creating" -> 0L, "createPartitioned" -> 0L,
+      "appendBatchIdempotent first batch" -> 1L, "append" -> 1L,
+      "appendBatchIdempotent" -> 1L, "mergeBatchIdempotent" -> 2L,
+      "addCheckConstraint" -> 1L, "merge" -> 1L, "mergePruned rewrite" -> 1L,
+      "mergePruned deletion vectors" -> 1L,
+      "mergePruned empty changelog" -> 1L, "deleteWhere" -> 1L,
+      "dropCheckConstraint" -> 1L, "compact" -> 1L, "restore" -> 2L,
+      "appendEvolve" -> 1L)
+    assert(got.toMap == pinned, got.mkString(", "))
   }
 }
