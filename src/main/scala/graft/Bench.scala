@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.DirtPipeline
+import graft.util.Json.quote
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import java.nio.file.{Files, Paths}
@@ -201,14 +202,6 @@ object Bench {
     }.toDF("vec_id", "embedding")
   }
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   /** Per-query seconds from a bench JSON line (our own single-line
     * format; keys are plain identifiers, values plain doubles) — used to
     * read the pinned committed `bench_baseline.json`.
@@ -252,7 +245,7 @@ object Bench {
     * FUTURE sub-2 s entry not yet assigned to a composite; on this
     * committed set every entry calibrates to k = 1. Members are
     * published in the JSON `composites` map; an isolated member rerun
-    * is still one `BenchOne <member>` away, and Verify's correctness
+    * is still one `Profile <member>` away, and Verify's correctness
     * surface (one declared query per operator) is unchanged.
     */
   val composites: Seq[(String, Seq[String])] = Seq(
@@ -386,9 +379,9 @@ object Bench {
   /** Every composite as a named runnable body — the `composites` groups
     * (members run back-to-back inside the ONE timed region, with the
     * same per-execution cache lifetime the amortized loop used) plus
-    * the shared-graph `cx_dedup_graph`. Shared verbatim with BenchOne so
-    * an isolated composite rerun times exactly what the full bench
-    * timed.
+    * the shared-graph `cx_dedup_graph`. Shared verbatim with
+    * [[Profile]] so an isolated composite rerun times exactly what the
+    * full bench timed.
     */
   def compositeRunners(spark: SparkSession,
       sfDir: String): Seq[(String, () => Unit)] =
@@ -416,7 +409,7 @@ object Bench {
   }
 
   /** The synthetic bench entries as named runnable bodies, shared
-    * verbatim with BenchOne — an isolated rerun must time EXACTLY what
+    * verbatim with [[Profile]] — an isolated rerun must time EXACTLY what
     * the full bench timed (the lifecycle entry is pipeline + persist +
     * TSV sink + evaluation sweep, not just the pipeline), or the
     * isolated-vs-in-sequence comparison diagnoses nothing.
@@ -481,8 +474,8 @@ object Bench {
     // 4M probe — caught while sizing this entry).
     s"dedup_lsh_adversarial_${jacDocs * 16}" -> (() => {
       val n = jacDocs * 16 // 16x the jaccard corpus: clears the 2 s
-      // floor with margin on a WARM in-bench JVM (the isolated BenchOne
-      // number is ~2.5x the in-bench one; sizing used the latter)
+      // floor with margin on a WARM in-bench JVM (an isolated `Profile`
+      // rerun measures ~2.5x the in-bench number; sizing used the latter)
       val nBits = 64 - java.lang.Long.numberOfLeadingZeros(n).toInt + 4
       val got = graft.operators.Dedup.embeddingPairsLsh(
         adversarialEmbeddings(spark, n), threshold = 0.9,
@@ -926,17 +919,26 @@ object Bench {
       pin: Double): Boolean =
     confirmRegression(iso1, pin) && confirmRegression(iso2, pin)
 
+  /** The fixture directory read when `SPARK_GRAFT_SF_DIR` is unset. */
+  val DefaultSfDir = "/root/testdata/sf0.1"
+
+  /** One untimed run to absorb session/codegen warmup, so per-query
+    * numbers reflect steady state rather than JVM startup order; and
+    * the once-per-JVM frozen-quantizer drift gates, which are
+    * verification, not query work — run untimed so the retrain isn't
+    * charged to whichever ann-family entry happens to execute first.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    try SparkEntry.queries("q01_agg_sum_groupby")(spark, sfDir).count()
+    catch { case _: Throwable => () }
+    try graft.queries.PipelineQueries.warmFrozenQuantizers(spark, sfDir)
+    catch { case _: Throwable => () }
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
     val dirtRows = sys.env.getOrElse("SPARK_GRAFT_DIRT_ROWS", "200000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.fromEnv()
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
       .max(1)
@@ -1010,15 +1012,7 @@ object Bench {
       }
     }
 
-    // one untimed run to absorb session/codegen warmup, so per-query
-    // numbers reflect steady state rather than JVM startup order
-    try SparkEntry.queries("q01_agg_sum_groupby")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    // the once-per-JVM frozen-quantizer drift gates are verification,
-    // not query work — run them untimed so the retrain isn't charged to
-    // whichever ann-family entry happens to execute first
-    try graft.queries.PipelineQueries.warmFrozenQuantizers(spark, sfDir)
-    catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
 
     // committed-partition sanity: every composite member must be a
     // declared query and appear in exactly one composite — a renamed or
@@ -1100,31 +1094,31 @@ object Bench {
     val regressions = adjudications.collect {
       case (name, flaggedRatio, _, _, _, true) => name -> flaggedRatio
     }
-    val rs = regressions.map { case (k, r) => s""""${esc(k)}":$r""" }
+    val rs = regressions.map { case (k, r) => s"""${quote(k)}:$r""" }
       .mkString("{", ",", "}")
     val adj = adjudications.map {
       case (name, fr, iso1, iso2, pin, confirmed) =>
         def d(v: Option[Double]): String =
           v.fold("null")(x => (math.rint(x * 1000) / 1000).toString)
-        s""""${esc(name)}":{"flagged_ratio":$fr,"isolated_sec":${d(iso1)},""" +
+        s"""${quote(name)}:{"flagged_ratio":$fr,"isolated_sec":${d(iso1)},""" +
           s""""isolated2_sec":${d(iso2)},"pin_sec":$pin,""" +
           s""""confirmed":$confirmed}"""
     }.mkString("{", ",", "}")
 
-    val qs = timings.map { case (k, v) => s""""${esc(k)}":$v""" }
+    val qs = timings.map { case (k, v) => s"""${quote(k)}:$v""" }
       .mkString("{", ",", "}")
-    val ik = inner.map { case (k, v) => s""""${esc(k)}":$v""" }
+    val ik = inner.map { case (k, v) => s"""${quote(k)}:$v""" }
       .mkString("{", ",", "}")
     val sp = spreads.map { case (k, (lo, hi)) =>
-      s""""${esc(k)}":[$lo,$hi]"""
+      s"""${quote(k)}:[$lo,$hi]"""
     }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
+    val es = errors.map { case (k, v) => s"""${quote(k)}:${quote(v)}""" }
       .mkString("{", ",", "}")
     val total = timings.values.sum
     val loadR = math.rint(load * 1000) / 1000
     val cx = (composites :+ ("cx_dedup_graph" -> dedupGraphMembers))
       .map { case (k, ms) =>
-        s""""${esc(k)}":[${ms.map(m => s""""${esc(m)}"""").mkString(",")}]"""
+        s"""${quote(k)}:[${ms.map(quote).mkString(",")}]"""
       }
       .mkString("{", ",", "}")
     // exonerated flags stay visible at summary level (ADVICE r13): the
@@ -1134,7 +1128,7 @@ object Bench {
     val nFlagged = adjudications.size
     val nExonerated = adjudications.count(!_._6)
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"load":$loadR,"queries":$qs,"spread":$sp,"inner":$ik,"composites":$cx,"errors":$es,"regressions":$rs,"adjudications":$adj,"n_flagged":$nFlagged,"n_exonerated":$nExonerated,"n_ok":${timings.size},"n_err":${errors.size},"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"load":$loadR,"queries":$qs,"spread":$sp,"inner":$ik,"composites":$cx,"errors":$es,"regressions":$rs,"adjudications":$adj,"n_flagged":$nFlagged,"n_exonerated":$nExonerated,"n_ok":${timings.size},"n_err":${errors.size},"sf":${quote(sfDir)}}"""
     Files.writeString(Paths.get("bench.json"), json + "\n")
     // a few-hundred-byte summary twin: the r13 official artifact's tail
     // window started mid-way through the full JSON line, so `parsed`
@@ -1142,7 +1136,7 @@ object Bench {
     // "what's wrong" #1). The compact line carries the headline fields
     // and, being tiny AND last, survives any tail window.
     val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","load":$loadR,"n_ok":${timings.size},"n_err":${errors.size},"n_flagged":$nFlagged,"n_exonerated":$nExonerated,"regressions":$rs,"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","load":$loadR,"n_ok":${timings.size},"n_err":${errors.size},"n_flagged":$nFlagged,"n_exonerated":$nExonerated,"regressions":$rs,"sf":${quote(sfDir)}}"""
     // stop Spark BEFORE printing: executor/shutdown log lines racing the
     // same stdout were the likeliest cause of the driver's two
     // unparseable official artifacts (BENCH_r11/r12 "parsed": null).

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regeneration path for [[graft.operators.FrozenCentroids]]: trains the
   * 16-cell coarse k-means quantizer (`Ivf.trainCentroids`, nList=16,
   * iters=2 — the q44/q86/q108/q109/q137 recipe) and the PQ codebooks
@@ -35,13 +33,7 @@ object FreezeCentroids {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
 
     val trained = dirs.map { dir =>
       val key = new java.io.File(dir).getName

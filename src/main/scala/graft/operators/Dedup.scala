@@ -484,7 +484,7 @@ object Dedup {
     // Exact-verify candidates with shingle Jaccard.
     val texts = docs.select(col(idCol).cast("long").as("id"),
       col(textCol).as("t"))
-    graft.util.Spread.cpuBoundPost(candidates
+    graft.util.Spread.cpuBound(candidates
       .join(texts.select(col("id").as("id1"), col("t").as("t1")), "id1")
       .join(texts.select(col("id").as("id2"), col("t").as("t2")), "id2")
       // using-column joins reorder columns (join key first) and
@@ -493,8 +493,8 @@ object Dedup {
       // verify is CPU-bound (two shingle sets + intersect per pair);
       // AQE coalesces the small post-join BYTES into one partition and
       // serializes it (measured: a 9.8 s single-task stage) — spread via
-      // cpuBoundPost, which never drops below the session's configured
-      // shuffle width on a cluster
+      // cpuBound, whose post-join spread never drops below the session's
+      // configured shuffle width on a cluster
       .as[(Long, Long, String, String)]
       .map { case (id1, id2, t1, t2) =>
         val s1 = shingles(t1, shingleK)
@@ -547,7 +547,7 @@ object Dedup {
       col(textCol).as("t1"))
     val baseTexts = base.select(col(idCol).cast("long").as("base_id"),
       col(textCol).as("t2"))
-    graft.util.Spread.cpuBoundPost(candidates
+    graft.util.Spread.cpuBound(candidates
       .join(batchTexts, "batch_id")
       .join(baseTexts, "base_id")
       // explicit select: using-column joins put the key first and the

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.eval.Evaluate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -25,14 +25,7 @@ object DirtCli {
     val corpusPath = args(0)
     val testSetFile = args(1)
     val outDir = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.fromEnv()
 
     val testLines = Files.readAllLines(Paths.get(testSetFile)).asScala.toSeq
     // persisted: consumed by the TSV sink and (optionally) the eval sweep

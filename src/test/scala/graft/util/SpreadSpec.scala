@@ -57,14 +57,26 @@ class SpreadSpec extends AnyFunSuite {
       s"column pruning lost through the spread: $readSchema")
   }
 
+  // cpuBound declines to probe such plans: it spreads them
+  // unconditionally, and building the spread frame runs no job
   test("cpuBound refuses exchange-bearing plans instead of probing them") {
-    import spark.implicits._
-    val a = (0 until 10).toDF("i")
-    val joined = a.join(a.withColumnRenamed("i", "j"), col("i") === col("j"))
-    val e = intercept[IllegalArgumentException](Spread.cpuBound(joined))
-    assert(e.getMessage.contains("cpuBoundPost"), e.getMessage)
-    val agg = a.groupBy("i").count()
-    intercept[IllegalArgumentException](Spread.cpuBound(agg))
+    val a = spark.range(64).toDF("i")
+    val inputs = Seq(
+      "join" -> a.join(a.withColumnRenamed("i", "j"), col("i") === col("j")),
+      "aggregate" -> a.groupBy("i").count(),
+      "distinct" -> a.distinct(),
+      "limit" -> a.limit(40))
+    val want = math.max(spark.sparkContext.defaultParallelism,
+      spark.sessionState.conf.numShufflePartitions)
+    val ledger = new graft.obs.Ledger(spark)
+    inputs.foreach { case (kind, in) =>
+      var out: org.apache.spark.sql.DataFrame = null
+      val built = ledger.region(kind) { out = Spread.cpuBound(in) }
+      assert(built.jobs == 0, s"$kind: building the frame ran ${built.jobs} jobs")
+      assert(out.rdd.getNumPartitions == want, kind)
+      assert(out.collect().map(_.toString).sorted.toSeq ==
+        in.collect().map(_.toString).sorted.toSeq, kind)
+    }
   }
 
   test("cpuBoundPost spreads to max(defaultParallelism, shuffle.partitions)") {

@@ -1,12 +1,12 @@
 #!/usr/bin/env python3
 """10x scale spot-check of the declared heavy family (round 12, VERDICT
-r11 #4): runs q32/q68/q78/q110/q151 via BenchOne on the committed sf0.1
+r11 #4): runs q32/q68/q78/q110/q151 via graft.Profile on the committed sf0.1
 fixture AND on the 10x sf1-equivalent fixture from tools/gen_sf1.py,
 plus the planted DIRT probe at its bench size and 10x that, and writes
 `tools/evidence/bench_sf1_spotcheck.json` with per-entry seconds and
 observed scaling exponents (ln(t10/t1)/ln(10)).
 
-Method notes recorded in the JSON: sf0.1 side uses BenchOne reps=3
+Method notes recorded in the JSON: sf0.1 side uses Profile reps=3
 (min); the sf1 side uses reps=1 for the pair-quadratic entries — at 10x
 this corpus family's near-dup DENSITY makes pair-producing operators'
 output cardinality ~100x (the fixture's word-salad docs make most
@@ -18,7 +18,6 @@ Usage: python3 tools/sf1_spotcheck.py  (from the repo root; ~30-60 min)
 """
 import json
 import math
-import re
 import subprocess
 import sys
 
@@ -86,18 +85,19 @@ def bench_one(sf_dir, names, reps, extra_env=None, cache_key=None):
         env.update(extra_env)
     import os
     full = dict(os.environ, **env)
-    cmd = ["sbt", "-batch", f"runMain graft.BenchOne {' '.join(names)}"]
+    cmd = ["sbt", "-batch", f"runMain graft.Profile {' '.join(names)}"]
     out = subprocess.run(cmd, capture_output=True, text=True, env=full)
     res = {}
-    for line in (out.stdout + out.stderr).splitlines():
-        m = re.match(r"BENCHONE (\S+) reps=\d+ min=([0-9.]+)", line)
-        if m:
-            res[m.group(1)] = float(m.group(2))
+    for line in out.stdout.splitlines():
+        if line.startswith('{"metric":"profile"'):
+            rec = json.loads(line)
+            if rec["error"] is None:
+                res[rec["name"]] = rec["min"]
     missing = [n for n in names if n not in res]
     if missing:
         print(out.stdout[-3000:])
         print(out.stderr[-3000:])
-        raise SystemExit(f"BenchOne missing entries: {missing}")
+        raise SystemExit(f"Profile missing entries: {missing}")
     if cache:
         json.dump(res, open(cache, "w"))
     return res
@@ -164,7 +164,7 @@ def main() -> None:
 
     doc = {
         "metric": "sf1_spotcheck",
-        "method": ("BenchOne local[32]; sf0.1 reps=3 min, sf1/10x reps=1 "
+        "method": ("graft.Profile local[32]; sf0.1 reps=3 min, sf1/10x reps=1 "
                    "single-shot for the minute-scale pair-heavy entries "
                    "and reps=2 for the round-14 lighter additions; "
                    "fixture from tools/gen_sf1.py (50k docs / 150k "
