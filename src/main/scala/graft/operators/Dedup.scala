@@ -85,11 +85,6 @@ object Dedup {
     else Set(w.mkString(" "))
   }
 
-  /** Doc id as long, failing fast on a lossy cast — see
-    * [[graft.util.Ids.longId]].
-    */
-  private def longId(idCol: String): Column = Ids.longId(idCol)
-
   /** (id, lang, blk, word) rows: one per distinct token per doc, with the
     * (lang, length-bucket) blocking key near-dups must share. n=1 stays
     * on the codegen'd split/explode path; n-grams take a typed flatMap.
@@ -98,7 +93,7 @@ object Dedup {
       textCol: String, idCol: String, ngram: Int): DataFrame =
     if (ngram <= 1)
       docs.select(
-        longId(idCol).as("id"),
+        Ids.longId(idCol).as("id"),
         col("lang"),
         floor(col("n_chars") / lenBucket.toDouble).cast("long").as("blk"),
         explode(array_distinct(filter(split(trim(col(textCol)), "\\s+"),
@@ -107,7 +102,7 @@ object Dedup {
       val spark = docs.sparkSession
       import spark.implicits._
       docs
-        .select(longId(idCol).as("id"), col("lang"),
+        .select(Ids.longId(idCol).as("id"), col("lang"),
           floor(col("n_chars") / lenBucket.toDouble).cast("long").as("blk"),
           col(textCol).as("t"))
         .as[(Long, String, Long, String)]
@@ -208,6 +203,13 @@ object Dedup {
       .distinct()
   }
 
+  /** `n_inter / (n1 + n2 - n_inter)` rounded to 6 places: the Jaccard
+    * column of both [[jaccardPairs]] routes.
+    */
+  private def jaccardRatio: Column =
+    round(col("n_inter").cast("double") /
+      (col("n1") + col("n2") - col("n_inter")).cast("double"), 6)
+
   /** PPJoin-side verification: candidates joined back to the profiles'
     * word arrays, one `array_intersect` per pair.
     */
@@ -219,9 +221,7 @@ object Dedup {
       .join(profiles.select(col("id").as("id2"), col("words").as("w2"),
         col("n_words").as("n2")), "id2")
       .withColumn("n_inter", size(array_intersect(col("w1"), col("w2"))))
-      .withColumn("jaccard",
-        round(col("n_inter").cast("double") /
-          (col("n1") + col("n2") - col("n_inter")).cast("double"), 6))
+      .withColumn("jaccard", jaccardRatio)
       .filter(col("jaccard") >= threshold)
       .select("id1", "id2", "jaccard")
 
@@ -244,9 +244,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_inter"))
       .join(sizes.select(col("id").as("id1"), col("n_words").as("n1")), "id1")
       .join(sizes.select(col("id").as("id2"), col("n_words").as("n2")), "id2")
-      .withColumn("jaccard",
-        round(col("n_inter").cast("double") /
-          (col("n1") + col("n2") - col("n_inter")).cast("double"), 6))
+      .withColumn("jaccard", jaccardRatio)
       .filter(col("jaccard") >= threshold)
       .select("id1", "id2", "jaccard")
   }
@@ -415,14 +413,6 @@ object Dedup {
     if (text == null || text.length < k) Set(if (text == null) "" else text)
     else (0 to text.length - k).view.map(i => text.substring(i, i + k)).toSet
 
-  /** Candidate near-dup pairs via banded MinHash LSH, verified with exact
-    * shingle Jaccard. `numPerm` = bands * rowsPerBand.
-    *
-    * Scale path: signatures are computed per-row (map-only); candidates
-    * come from a groupBy on (band, bandHash) — pairs are only formed
-    * within a bucket, and verification re-reads only candidate ids via a
-    * join back to the corpus (no N^2 stage anywhere).
-    */
   /** (id, band, bucket) LSH bucket keys for every doc: the banded MinHash
     * signature reduced to one hash per band. Shared by the self-join
     * ([[minhashPairs]]) and the batch-vs-base probe
@@ -459,42 +449,49 @@ object Dedup {
       }: _*)).as(Seq("band", "bucket")))
   }
 
-  def minhashPairs(
-      docs: DataFrame,
-      threshold: Double = 0.7,
-      bands: Int = 16,
-      rowsPerBand: Int = 4,
-      shingleK: Int = 5,
-      textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
+  /** `(id1, id2, p1, p2)`: each candidate `(id1, id2)` pair joined to
+    * its two payloads, `left` and `right` being `(id, payload)` frames.
+    * The explicit final select matters: using-column joins put the key
+    * first, and the tuple encoders downstream bind by ordinal.
+    */
+  private def withPayloads(pairs: DataFrame, left: DataFrame,
+      right: DataFrame): DataFrame =
+    pairs
+      .join(left.toDF("id1", "p1"), "id1")
+      .join(right.toDF("id2", "p2"), "id2")
+      .select(col("id1"), col("id2"), col("p1"), col("p2"))
+
+  /** Bucket self-join candidates with payloads: `(id1 < id2, p1, p2)` for
+    * every pair of ids sharing a bucket under the same `key` (band or
+    * table) in `(id, key, bucket)` rows, deduplicated on ids ONLY — a
+    * distinct over the payloads would shuffle them once per shared
+    * bucket — then joined to the `(id, payload)` frame once per side.
+    */
+  private def bucketCandidates(buckets: DataFrame, key: String,
+      payload: DataFrame): DataFrame = {
+    val l = buckets.select(col(key), col("bucket"), col("id").as("id1"))
+    val r = buckets.select(col(key), col("bucket"), col("id").as("id2"))
+    withPayloads(
+      l.join(r, Seq(key, "bucket"))
+        .filter(col("id1") < col("id2"))
+        .select("id1", "id2")
+        .distinct(),
+      payload, payload)
+  }
+
+  /** Exact shingle-Jaccard verify of `(id1, id2, t1, t2)` candidate rows:
+    * `(id1, id2, jaccard >= threshold)`, the ratio rounded to 6 places.
+    * The verify is CPU-bound (two shingle sets + intersect per pair), and
+    * AQE coalesces the small post-join BYTES into one partition and
+    * serializes it (measured: a 9.8 s single-task stage), so the rows are
+    * spread via cpuBound, whose post-join spread never drops below the
+    * session's configured shuffle width on a cluster.
+    */
+  private def shingleJaccardPairs(rows: DataFrame, shingleK: Int,
+      threshold: Double): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
-
-    val banded = bandedBuckets(docs, bands, rowsPerBand, shingleK,
-      textCol, idCol)
-
-    val l = banded.select(col("band"), col("bucket"), col("id").as("id1"))
-    val r = banded.select(col("band"), col("bucket"), col("id").as("id2"))
-    val candidates = l
-      .join(r, Seq("band", "bucket"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
-      .distinct()
-
-    // Exact-verify candidates with shingle Jaccard.
-    val texts = docs.select(col(idCol).cast("long").as("id"),
-      col(textCol).as("t"))
-    graft.util.Spread.cpuBound(candidates
-      .join(texts.select(col("id").as("id1"), col("t").as("t1")), "id1")
-      .join(texts.select(col("id").as("id2"), col("t").as("t2")), "id2")
-      // using-column joins reorder columns (join key first) and
-      // .as[Tuple] binds by ordinal — select explicitly or ids swap
-      .select(col("id1"), col("id2"), col("t1"), col("t2")))
-      // verify is CPU-bound (two shingle sets + intersect per pair);
-      // AQE coalesces the small post-join BYTES into one partition and
-      // serializes it (measured: a 9.8 s single-task stage) — spread via
-      // cpuBound, whose post-join spread never drops below the session's
-      // configured shuffle width on a cluster
+    graft.util.Spread.cpuBound(rows)
       .as[(Long, Long, String, String)]
       .map { case (id1, id2, t1, t2) =>
         val s1 = shingles(t1, shingleK)
@@ -507,6 +504,29 @@ object Dedup {
       }
       .toDF("id1", "id2", "jaccard")
       .filter(col("jaccard") >= threshold)
+  }
+
+  /** Candidate near-dup pairs via banded MinHash LSH, verified with exact
+    * shingle Jaccard. `numPerm` = bands * rowsPerBand.
+    *
+    * Scale path: signatures are computed per-row (map-only); candidates
+    * come from a join on (band, bandHash) — pairs are only formed
+    * within a bucket, and verification re-reads only candidate ids via a
+    * join back to the corpus (no N^2 stage anywhere).
+    */
+  def minhashPairs(
+      docs: DataFrame,
+      threshold: Double = 0.7,
+      bands: Int = 16,
+      rowsPerBand: Int = 4,
+      shingleK: Int = 5,
+      textCol: String = "text",
+      idCol: String = "doc_id"): DataFrame = {
+    val banded = bandedBuckets(docs, bands, rowsPerBand, shingleK,
+      textCol, idCol)
+    val texts = docs.select(col(idCol).cast("long"), col(textCol))
+    shingleJaccardPairs(bucketCandidates(banded, "band", texts), shingleK,
+      threshold)
   }
 
   // ----------------------------------------------- incremental dedup
@@ -528,45 +548,22 @@ object Dedup {
       shingleK: Int = 5,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-
     val baseBuckets = bandedBuckets(base, bands, rowsPerBand, shingleK,
         textCol, idCol)
-      .select(col("band"), col("bucket"), col("id").as("base_id"))
+      .select(col("band"), col("bucket"), col("id").as("id2"))
     val batchBuckets = bandedBuckets(batch, bands, rowsPerBand, shingleK,
         textCol, idCol)
-      .select(col("band"), col("bucket"), col("id").as("batch_id"))
-
+      .select(col("band"), col("bucket"), col("id").as("id1"))
     val candidates = batchBuckets
       .join(baseBuckets, Seq("band", "bucket"))
-      .select("batch_id", "base_id")
+      .select("id1", "id2")
       .distinct()
-
-    val batchTexts = batch.select(col(idCol).cast("long").as("batch_id"),
-      col(textCol).as("t1"))
-    val baseTexts = base.select(col(idCol).cast("long").as("base_id"),
-      col(textCol).as("t2"))
-    graft.util.Spread.cpuBound(candidates
-      .join(batchTexts, "batch_id")
-      .join(baseTexts, "base_id")
-      // explicit select: using-column joins put the key first and the
-      // tuple encoder binds by ordinal
-      .select(col("batch_id"), col("base_id"), col("t1"), col("t2")))
-      // CPU-bound verify: keep AQE's byte-based coalescing from
-      // funnelling it into one task (see minhashPairs)
-      .as[(Long, Long, String, String)]
-      .map { case (batchId, baseId, t1, t2) =>
-        val s1 = shingles(t1, shingleK)
-        val s2 = shingles(t2, shingleK)
-        val inter = s1.intersect(s2).size
-        val jac =
-          if (s1.isEmpty && s2.isEmpty) 1.0
-          else inter.toDouble / (s1.size + s2.size - inter)
-        (batchId, baseId, math.rint(jac * 1e6) / 1e6)
-      }
+    def texts(side: DataFrame) =
+      side.select(col(idCol).cast("long"), col(textCol))
+    shingleJaccardPairs(
+        withPayloads(candidates, texts(batch), texts(base)), shingleK,
+        threshold)
       .toDF("batch_id", "base_id", "jaccard")
-      .filter(col("jaccard") >= threshold)
   }
 
   /** Exact-hash incremental check of a NEW batch against the base corpus:
@@ -623,6 +620,23 @@ object Dedup {
 
   // ------------------------------------------- embedding-cosine near-dup
 
+  /** Exact cosine verify of `(id1, id2, v1, v2)` candidate rows:
+    * `(id1, id2, cos_sim >= threshold)`, with the rounded cosine of
+    * [[VectorSearch.finiteRoundedCosine]] (a pair with a non-finite
+    * cosine is dropped).
+    */
+  private def cosinePairs(rows: DataFrame, threshold: Double): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows
+      .as[(Long, Long, Array[Float], Array[Float])]
+      .flatMap { case (i1, i2, v1, v2) =>
+        VectorSearch.finiteRoundedCosine(v1, v2).map(c => (i1, i2, c))
+      }
+      .toDF("id1", "id2", "cos_sim")
+      .filter(col("cos_sim") >= threshold)
+  }
+
   /** Exact embedding-cosine near-dup pairs: all (id1 < id2) with rounded
     * cosine >= threshold. Quadratic — the correctness baseline for
     * [[embeddingPairsLsh]] and small-table use only.
@@ -632,60 +646,14 @@ object Dedup {
       threshold: Double,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val a = embeddings.select(col(idCol).cast("long").as("id1"),
       col(vecCol).as("v1"))
     val b = embeddings.select(col(idCol).cast("long").as("id2"),
       col(vecCol).as("v2"))
-    a.join(b, col("id1") < col("id2"))
-      .select(col("id1"), col("id2"), col("v1"), col("v2"))
-      .as[(Long, Long, Array[Float], Array[Float])]
-      .flatMap { case (i1, i2, v1, v2) =>
-        VectorSearch.finiteRoundedCosine(v1, v2).map(c => (i1, i2, c))
-      }
-      .toDF("id1", "id2", "cos_sim")
-      .filter(col("cos_sim") >= threshold)
-  }
-
-  /** Generic Hamming-distance pairing over 64-bit fingerprints by
-    * pigeonhole blocking: the bits split into `maxDist + 1` blocks, two
-    * hashes within distance k must agree on ≥ 1 whole block, so
-    * candidates come from a bucket-local equi-join on (block index,
-    * block value) — never a quadratic scan — and each is verified with
-    * an exact popcount. Shared by SimHash text dedup, perceptual-hash
-    * image dedup and audio-fingerprint dedup; input is any
-    * `(id: long, hash: long)` frame.
-    */
-  def hammingPairs(hashes: DataFrame, maxDist: Int,
-      idCol: String = "id", hashCol: String = "hash"): DataFrame = {
-    require(maxDist >= 0 && maxDist < 64, s"bad maxDist $maxDist")
-    val spark = hashes.sparkSession
-    import spark.implicits._
-    val nBlocks = maxDist + 1
-    val width = 64 / nBlocks
-    val blocks = hashes
-      .select(col(idCol).cast("long"), col(hashCol).cast("long"))
-      .as[(Long, Long)]
-      .flatMap { case (id, ph) =>
-        (0 until nBlocks).iterator.map { b =>
-          val lo = b * width
-          val hi = if (b == nBlocks - 1) 64 else lo + width
-          val mask = if (hi - lo == 64) -1L else ((1L << (hi - lo)) - 1) << lo
-          (b, ph & mask, id, ph)
-        }
-      }
-      .toDF("blk", "blkval", "id", "phash")
-    val a = blocks.select(col("blk"), col("blkval"),
-      col("id").as("id1"), col("phash").as("h1"))
-    val b = blocks.select(col("blk"), col("blkval"),
-      col("id").as("id2"), col("phash").as("h2"))
-    a.join(b, Seq("blk", "blkval"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        bit_count(col("h1").bitwiseXOR(col("h2"))).cast("int").as("hamming"))
-      .filter(col("hamming") <= maxDist)
-      .distinct()
+    cosinePairs(
+      a.join(b, col("id1") < col("id2"))
+        .select(col("id1"), col("id2"), col("v1"), col("v2")),
+      threshold)
   }
 
   /** SemDeDup-style semantic dup pairs (Abbas et al. 2023, "SemDeDup:
@@ -737,15 +705,11 @@ object Dedup {
       .toDF("id", "vec", "cell")
     val a = assigned.select(col("cell"), col("id").as("id1"), col("vec").as("v1"))
     val b = assigned.select(col("cell"), col("id").as("id2"), col("vec").as("v2"))
-    a.join(b, Seq("cell"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"), col("v1"), col("v2"))
-      .as[(Long, Long, Array[Float], Array[Float])]
-      .flatMap { case (i1, i2, v1, v2) =>
-        VectorSearch.finiteRoundedCosine(v1, v2).map(c => (i1, i2, c))
-      }
-      .toDF("id1", "id2", "cos_sim")
-      .filter(col("cos_sim") >= threshold)
+    cosinePairs(
+      a.join(b, Seq("cell"))
+        .filter(col("id1") < col("id2"))
+        .select(col("id1"), col("id2"), col("v1"), col("v2")),
+      threshold)
   }
 
   /** Scale path: signed-random-projection LSH with `tables` independent
@@ -780,24 +744,7 @@ object Dedup {
       .toDF("id", "vec", "sigs")
       .select(col("id"), col("vec"),
         posexplode(col("sigs")).as(Seq("table", "bucket")))
-    val l = banded.select(col("table"), col("bucket"), col("id").as("id1"))
-    val r = banded.select(col("table"), col("bucket"), col("id").as("id2"))
-    // dedup candidates on ids ONLY (distinct over vector payloads would
-    // shuffle the vectors once per table), then join the vectors back
-    val candidates = l.join(r, Seq("table", "bucket"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
-      .distinct()
-    candidates
-      .join(vecs.select(col("id").as("id1"), col("vec").as("v1")), "id1")
-      .join(vecs.select(col("id").as("id2"), col("vec").as("v2")), "id2")
-      .select(col("id1"), col("id2"), col("v1"), col("v2"))
-      .as[(Long, Long, Array[Float], Array[Float])]
-      .flatMap { case (i1, i2, v1, v2) =>
-        VectorSearch.finiteRoundedCosine(v1, v2).map(c => (i1, i2, c))
-      }
-      .toDF("id1", "id2", "cos_sim")
-      .filter(col("cos_sim") >= threshold)
+    cosinePairs(bucketCandidates(banded, "table", vecs), threshold)
   }
 
   // -------------------------------------------------------------- SimHash
@@ -823,10 +770,47 @@ object Dedup {
     out
   }
 
-  /** Near-dup pairs with Hamming distance <= maxDist via the pigeonhole
-    * trick: split the 64-bit hash into maxDist+1 blocks; any pair within
-    * distance must agree on >= 1 block, so candidates are an equi-join on
-    * (blockIndex, blockValue).
+  /** Generic Hamming-distance pairing over 64-bit fingerprints by
+    * pigeonhole blocking: the bits split into `maxDist + 1` blocks, two
+    * hashes within distance k must agree on ≥ 1 whole block, so
+    * candidates come from a bucket-local equi-join on (block index,
+    * block value) — never a quadratic scan — and each is verified with
+    * an exact popcount. The blocks are one Column `posexplode`, inside
+    * whole-stage codegen, and the 8-byte hash rides along in the join
+    * rather than being joined back. Shared by SimHash text dedup
+    * ([[simhashPairs]]) and, through `Multimodal.hashDupPairs`,
+    * perceptual-hash image dedup and audio-fingerprint dedup; input is
+    * any `(id: long, hash: long)` frame.
+    */
+  def hammingPairs(hashes: DataFrame, maxDist: Int,
+      idCol: String = "id", hashCol: String = "hash"): DataFrame = {
+    require(maxDist >= 0 && maxDist < 64, s"bad maxDist $maxDist")
+    val nBlocks = maxDist + 1
+    val width = 64 / nBlocks
+    val h = col(hashCol).cast("long")
+    val blocks = hashes.select(col(idCol).cast("long").as("id"), h.as("h"),
+      posexplode(array((0 until nBlocks).map { b =>
+        // top block keeps the remaining high bits
+        val lo = b * width
+        val w = if (b == nBlocks - 1) 64 - lo else width
+        shiftrightunsigned(h, lo)
+          .bitwiseAND(lit(if (w == 64) -1L else (1L << w) - 1L))
+      }: _*)).as(Seq("blk", "blkval")))
+    val l = blocks.select(col("blk"), col("blkval"),
+      col("id").as("id1"), col("h").as("h1"))
+    val r = blocks.select(col("blk"), col("blkval"),
+      col("id").as("id2"), col("h").as("h2"))
+    l.join(r, Seq("blk", "blkval"))
+      .filter(col("id1") < col("id2"))
+      .select(col("id1"), col("id2"),
+        bit_count(col("h1").bitwiseXOR(col("h2"))).as("hamming"))
+      .filter(col("hamming") <= maxDist)
+      .distinct()
+  }
+
+  /** Near-dup pairs with SimHash Hamming distance <= maxDist: the
+    * [[simhash64]] signature of each doc's whitespace tokens, paired by
+    * [[hammingPairs]].
     */
   def simhashPairs(
       docs: DataFrame,
@@ -835,38 +819,17 @@ object Dedup {
       idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val nBlocks = maxDist + 1
-    val width = 64 / nBlocks
-
-    val hashes = docs
+    // the parallelism floor of bandedBuckets: a no-op on an input that
+    // already has enough partitions
+    val sigs = graft.util.Spread.cpuBound(docs
       .select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
+      .as[(Long, String)])
       .map { case (id, t) =>
         // null behaves like the empty doc, as in shingles(null) ==
         // shingles("") — every dedup family treats null text uniformly
         (id, simhash64((if (t == null) "" else t).trim.split("\\s+").toSeq))
       }
-      .toDF("id", "sh")
-
-    val blocks = hashes.select(col("id"), col("sh"), posexplode(
-      array((0 until nBlocks).map { b =>
-        // top block keeps the remaining high bits
-        val lo = b * width
-        val w = if (b == nBlocks - 1) 64 - lo else width
-        (shiftrightunsigned(col("sh"), lo)
-          .bitwiseAND(lit(if (w == 64) -1L else (1L << w) - 1L)))
-      }: _*)).as(Seq("blk", "blkval")))
-
-    val l = blocks.select(col("blk"), col("blkval"),
-      col("id").as("id1"), col("sh").as("sh1"))
-    val r = blocks.select(col("blk"), col("blkval"),
-      col("id").as("id2"), col("sh").as("sh2"))
-    l.join(r, Seq("blk", "blkval"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        bit_count(col("sh1").bitwiseXOR(col("sh2"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
+      .toDF("id", "hash")
+    hammingPairs(sigs, maxDist)
   }
 }

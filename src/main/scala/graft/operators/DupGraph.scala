@@ -35,6 +35,17 @@ import graft.util.{CacheRelease, Ids}
   */
 object DupGraph {
 
+  /** Canonical undirected edge list (u < v), distinct, self-loops and
+    * nulls dropped; ids go through the fail-fast cast — a non-numeric id
+    * nulling out would silently KEEP its near-dup cluster (see Ids.longId)
+    */
+  private def canonicalEdges(pairs: DataFrame, id1Col: String,
+      id2Col: String): DataFrame = pairs
+    .select(Ids.longId(id1Col).as("a"), Ids.longId(id2Col).as("b"))
+    .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
+    .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
+    .distinct()
+
   /** (id, component) for every node that appears in `pairs`, where
     * `component` is the minimum id reachable in the undirected graph.
     * Docs with no near-dup pair are absent (each is its own singleton
@@ -48,15 +59,7 @@ object DupGraph {
     val spark = pairs.sparkSession
     import spark.implicits._
 
-    // canonical undirected edge list (u < v), self-loops dropped; ids go
-    // through the fail-fast cast — a non-numeric id nulling out would
-    // silently KEEP its near-dup cluster (see Ids.longId)
-    var edges: Dataset[(Long, Long)] = pairs
-      .select(Ids.longId(id1Col).as("a"), Ids.longId(id2Col).as("b"))
-      .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-      .as[(Long, Long)]
+    var edges = canonicalEdges(pairs, id1Col, id2Col).as[(Long, Long)]
       .localCheckpoint(false) // lazy: the first fingerprint materializes it
 
     // cheap order-independent fingerprint for the convergence test: the
@@ -198,12 +201,7 @@ object DupGraph {
     require(iterations >= 0 && dampingPct >= 0 && dampingPct <= 100)
     val spark = pairs.sparkSession
     import spark.implicits._
-    val canon = pairs
-      .select(Ids.longId(id1Col).as("a"), Ids.longId(id2Col).as("b"))
-      .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .select(least(col("a"), col("b")).as("u"),
-        greatest(col("a"), col("b")).as("v"))
-      .distinct()
+    val canon = canonicalEdges(pairs, id1Col, id2Col)
     // partitioned by u ONCE before the checkpoint (guide §2.4): the
     // degree agg, and every iteration's rank join AND degree join, are
     // then co-partitioned with it — localCheckpoint preserves the
