@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import scala.util.hashing.MurmurHash3
 
-import graft.util.Ids
+import graft.util.{CacheRelease, Ids}
 
 /** Deduplication operators for LLM training-data pipelines, each designed
   * as shuffle-bounded relational plans that survive a 100 TB corpus:
@@ -274,7 +274,7 @@ object Dedup {
       ngram: Int = 1): DataFrame = {
     val words = blockedWords(docs, lenBucket, textCol, idCol, ngram)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.util.CacheRelease.afterFirstAction(
+    CacheRelease.afterFirstAction(
       candidatesFromProfiles(
         profilesFromWords(words, dfTable(words), threshold), threshold),
       Seq(words))
@@ -302,17 +302,24 @@ object Dedup {
     *
     * Both paths compute the identical exact result, so routing never
     * changes output — only the plan. Blocks are (lang × length-bucket),
-    * a bounded-cardinality key, so the routing table broadcasts.
+    * a bounded-cardinality key, so the per-block volume table is
+    * collected on the driver: the call runs that one bounded collect,
+    * plans only the routes that received blocks, and picks each route's
+    * blocks with a literal filter on the collected keys (no filter at
+    * all when one route takes every block). A doc with a null `lang` or
+    * `n_chars` is in no block and pairs with nothing.
     *
-    * The token table, df table, and PPJoin profile table are persisted
-    * for the duration of the FIRST action on the returned frame and
-    * released by [[graft.util.CacheRelease]] when it completes;
-    * re-executing the same frame afterwards recomputes them.
+    * The collect materializes the token and df tables at call time.
+    * They, and the PPJoin profile table, stay persisted until the FIRST
+    * action on the returned frame completes and are then released by
+    * [[graft.util.CacheRelease]] (the df table at once when no block
+    * takes the prefix route); re-executing the same frame afterwards
+    * recomputes them.
     *
     * `idCol` must be castable to long — like [[minhashPairs]] and
     * [[simhashPairs]], ids are compared and emitted as longs. A lossy
-    * cast (non-numeric string id) raises an error at scan time rather
-    * than silently dropping the doc's pairs.
+    * cast (non-numeric string id) raises an error rather than silently
+    * dropping the doc's pairs.
     */
   def jaccardPairs(
       docs: DataFrame,
@@ -322,34 +329,51 @@ object Dedup {
       idCol: String = "doc_id",
       ngram: Int = 1,
       naiveBlockVolume: Long = DefaultNaiveBlockVolume): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // persisted: tokenization feeds the df agg, the routing split, and
-    // (on each route) the pair joins — without it the (flatMap)
-    // tokenization would run once per consumer
+    // persisted: tokenization feeds the df agg and (on each route) the
+    // pair joins — without it the (flatMap) tokenization would run once
+    // per consumer
     val words = blockedWords(docs, lenBucket, textCol, idCol, ngram)
       .persist(mem)
     val df = dfTable(words).persist(mem)
-    // (lang, blk) keys routed to the prefix path; bounded cardinality
-    // (languages × length buckets), so both route filters broadcast.
-    // Volume in double, not long: a ubiquitous token's df can reach 1e9+
-    // at corpus scale, df² approaches Long.MaxValue and a long sum would
-    // silently wrap negative — routing exactly the quadratic-killer
-    // blocks AWAY from the prefix path. Double loses precision past 2^53
-    // but never sign; routing only needs magnitude.
-    val ppBlocks = df.groupBy("lang", "blk")
-      .agg(sum(col("df").cast("double") * col("df")).as("__vol"))
-      .filter(col("__vol") > lit(naiveBlockVolume.toDouble))
-      .select("lang", "blk")
-    val naive = naivePairs(
-      words.join(broadcast(ppBlocks), Seq("lang", "blk"), "left_anti"),
-      threshold)
-    val profiles = profilesFromWords(
-      words.join(broadcast(ppBlocks), Seq("lang", "blk"), "left_semi"),
-      df, threshold)
-      .persist(mem)
-    graft.util.CacheRelease.afterFirstAction(
-      naive.unionByName(verifyFromProfiles(profiles, threshold)),
-      Seq(words, df, profiles))
+    // (lang, blk, naive volume Σ df²) per block, null keys dropped (they
+    // join nothing). Volume in double, not long: a ubiquitous token's df
+    // can reach 1e9+ at corpus scale, df² approaches Long.MaxValue and a
+    // long sum would silently wrap negative — routing exactly the
+    // quadratic-killer blocks AWAY from the prefix path. Double loses
+    // precision past 2^53 but never sign; routing only needs magnitude.
+    val (ppBlocks, naiveBlocks) =
+      try df.where(col("lang").isNotNull && col("blk").isNotNull)
+        .groupBy("lang", "blk")
+        .agg(sum(col("df").cast("double") * col("df")))
+        .as[(String, Long, Double)].collect().toSeq
+        .partition(_._3 > naiveBlockVolume.toDouble)
+      catch { case e: Throwable =>
+        CacheRelease.release(words, df)
+        throw e
+      }
+    // one route's tokens: all of them when it takes every block
+    def routed(blocks: Seq[(String, Long, Double)], others: Seq[_]) =
+      if (others.isEmpty) words
+      else words.where(blocks.groupBy(_._1).map { case (lang, bs) =>
+        col("lang") === lang && col("blk").isin(bs.map(_._2): _*)
+      }.reduce(_ || _))
+    val profiles =
+      if (ppBlocks.isEmpty) None
+      else Some(profilesFromWords(routed(ppBlocks, naiveBlocks), df,
+        threshold).persist(mem))
+    // the df table feeds only the profiles from here on
+    if (profiles.isEmpty) CacheRelease.release(df)
+    // an input with no block at all plans the (cheap) naive route
+    val naive =
+      if (naiveBlocks.isEmpty && profiles.nonEmpty) None
+      else Some(naivePairs(routed(naiveBlocks, ppBlocks), threshold))
+    CacheRelease.afterFirstAction(
+      (naive ++ profiles.map(verifyFromProfiles(_, threshold)))
+        .reduce(_ unionByName _),
+      words +: profiles.toSeq.flatMap(p => Seq(df, p)))
   }
 
   // ----------------------------------------------------------- MinHash LSH

@@ -29,6 +29,15 @@ import graft.util.{CacheRelease, Ids}
   * round N doesn't re-analyze N stacked joins (on a real cluster a
   * reliable checkpoint dir serves the same purpose).
   *
+  * The stop rule reads the star forest directly: one per-node aggregate
+  * over the current edges (degree and minimum endpoint) shows whether
+  * every node with a smaller neighbour is a leaf with exactly one edge.
+  * Then no node has two roots and none is both a root and a leaf: a
+  * forest of stars rooted at their minima, the algorithm's exact fixed
+  * point. No confirming round runs, and the same table is the label
+  * table. A pair graph that is already a star forest (disjoint twins,
+  * the common near-dup shape) runs zero star rounds.
+  *
   * Scale shape: never collects, never broadcasts the graph; state is the
   * (shrinking) edge list, partitioned by node — 100 TB of docs with a
   * bounded dup rate keeps edges ≪ docs.
@@ -50,9 +59,16 @@ object DupGraph {
     * `component` is the minimum id reachable in the undirected graph.
     * Docs with no near-dup pair are absent (each is its own singleton
     * cluster by definition — callers join with a coalesce, see
-    * [[dropNearDups]]). Each round frees the previous round's checkpoint;
-    * the final round's backs the returned frame and is the one block set
-    * left resident.
+    * [[dropNearDups]]).
+    *
+    * Each step checks the current edges with one action over their node
+    * table ([[nodeTable]]) and stops at the first star forest; otherwise
+    * it runs one large-star + small-star round. `maxIter` bounds the
+    * star rounds run: an input that needs more throws. The returned
+    * labels are a projection of the final node table, whose checkpoint
+    * is the one block set left resident; every edge checkpoint, and on
+    * failure every node table too, is freed before returning or
+    * throwing.
     */
   def components(pairs: DataFrame, id1Col: String = "id1",
       id2Col: String = "id2", maxIter: Int = 30): DataFrame = {
@@ -60,53 +76,60 @@ object DupGraph {
     import spark.implicits._
 
     var edges = canonicalEdges(pairs, id1Col, id2Col).as[(Long, Long)]
-      .localCheckpoint(false) // lazy: the first fingerprint materializes it
-
-    // cheap order-independent fingerprint for the convergence test: the
-    // star rounds are monotone (edge multiset only moves toward the
-    // fixed point), so count+hashsum equality means the fixed point
-    def fingerprint(e: Dataset[(Long, Long)]): (Long, Long) =
-      e.toDF("u", "v")
-        // bit_xor: order-independent and overflow-free under ANSI mode
-        // (a SUM of full-range xxhash64 values overflows Long)
-        .agg(count(lit(1)),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)))
-        .as[(Long, Long)].head()
-
-    var fp = fingerprint(edges)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      // LAZY checkpoint: the fingerprint action below is the round's
-      // first job over `next`, so it materializes the checkpoint AND
-      // computes the convergence agg in ONE pass — an eager checkpoint
-      // would spend a second job per round on the same scan
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
-      val nfp = fingerprint(next)
-      converged = nfp == fp
-      if (converged) {
-        // the fingerprint is a 64-bit hash: a collision between two
-        // DIFFERENT edge sets would declare false convergence and emit
-        // silently wrong cluster labels. Confirm the fixed point exactly
-        // ONCE (both sides are distinct sets of equal count, so an empty
-        // difference means set equality) — one extra set-difference job
-        // per components() call, only ever at the fixed point.
-        converged = next.toDF("u", "v").except(edges.toDF("u", "v")).isEmpty
+      .localCheckpoint(false) // lazy: the first star-forest check materializes it
+    var nodes: DataFrame = null
+    var ok = false
+    try {
+      nodes = nodeTable(edges)
+      var forest = starForest(nodes)
+      var rounds = 0
+      while (!forest) {
+        require(rounds < maxIter,
+          s"star rounds did not reach a star forest in $maxIter rounds")
+        CacheRelease.release(nodes)
+        val prev = edges
+        // the check materializes this round's edges from `prev`'s
+        // blocks, so `prev` is freed after it, on success or failure
+        try {
+          edges = smallStar(largeStar(prev)).localCheckpoint(false)
+          nodes = nodeTable(edges)
+          forest = starForest(nodes)
+        } finally CacheRelease.release(prev)
+        rounds += 1
       }
+      ok = true
+      nodes.select(col("id"), col("component"))
+    } finally {
       CacheRelease.release(edges)
-      edges = next
-      fp = nfp
-      it += 1
+      if (!ok && nodes != null) CacheRelease.release(nodes)
     }
-    require(converged, s"star rounds did not converge in $maxIter iterations")
-
-    // fixed point is a set of stars (root, leaf): every leaf labels to
-    // its root, every root to itself
-    val star = edges.toDF("u", "v")
-    star.select(col("v").as("id"), col("u").as("component"))
-      .unionByName(star.select(col("u").as("id"), col("u").as("component")))
-      .groupBy("id").agg(min("component").as("component"))
   }
+
+  /** (id, deg, component) per node of a canonical edge list (u < v):
+    * its edge count and its minimum endpoint min(Γ(id) ∪ {id}), so
+    * `component < id` exactly when the node has a smaller neighbour.
+    * Lazily checkpointed: [[starForest]] materializes it.
+    */
+  private def nodeTable(edges: Dataset[(Long, Long)]): DataFrame = {
+    val e = edges.toDF("u", "v")
+    e.select(col("v").as("id"), col("u").as("m"))
+      .unionByName(e.select(col("u").as("id"), col("u").as("m")))
+      .groupBy("id")
+      .agg(count(lit(1)).as("deg"), min("m").as("component"))
+      .localCheckpoint(false)
+  }
+
+  /** Whether a node table is a forest of stars rooted at their minima:
+    * every node with a smaller neighbour (a leaf) has no other edge, so
+    * no node has two roots and none is both a root and a leaf. That is
+    * the large-star/small-star fixed point, and then each node's
+    * component is its root. An RDD count, not a Dataset aggregate: one
+    * job over every partition, so the call materializes the table's
+    * checkpoint without a second job for a global aggregate's exchange.
+    */
+  private def starForest(nodes: DataFrame): Boolean =
+    nodes.where(col("component") < col("id") && col("deg") > 1)
+      .rdd.count() == 0L
 
   /** One large-star pass: every strictly larger neighbor of u hangs off
     * m = min(Γ(u) ∪ {u}). m <= u < v keeps the output canonical.

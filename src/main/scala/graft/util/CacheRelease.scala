@@ -25,14 +25,15 @@ import java.util.concurrent.atomic.AtomicBoolean
   * soon as ANY action whose analyzed plan contains the returned plan
   * completes (success or failure), then unregisters itself.
   *
-  * If the caller never runs an action, nothing was ever materialized
-  * (persist is lazy), so no cached DATA leaks — but the listener itself
-  * would otherwise stay registered for the session's lifetime, paying a
-  * full `sameResult` tree comparison on every subsequent query. The
-  * target plan is therefore held only WEAKLY: once the caller drops the
-  * un-actioned frame and it is collected, no future action can match
-  * anyway, so the next query event unregisters the listener (and clears
-  * the empty cache-manager entries).
+  * If the caller never runs an action, the listener would otherwise
+  * stay registered for the session's lifetime, paying a full
+  * `sameResult` tree comparison on every subsequent query, and keep
+  * whatever the operator already materialized: usually nothing (persist
+  * is lazy), but `Dedup.jaccardPairs` fills its token and df tables at
+  * call time to collect its routing table. The target plan is therefore
+  * held only WEAKLY: once the caller drops the un-actioned frame and it
+  * is collected, no future action can match anyway, so the next query
+  * event unregisters the listener and releases the cache entries.
   */
 object CacheRelease {
 

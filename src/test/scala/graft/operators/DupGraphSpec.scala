@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Ledger
+
 /** Alternating-star connected components vs a driver-side union-find
   * reference, including the path-graph shape that defeats naive min-label
   * propagation (round count = diameter) but must converge for the star
@@ -47,6 +49,38 @@ class DupGraphSpec extends AnyFunSuite {
     assert(got == reference(edges))
     assert(got(13L) == 0L) // transitive across the bridge
     assert(got(101L) == 100L)
+  }
+
+  /** Labels of `edges`, and whether a star round ran: read from a ledger
+    * region around the whole call, where a round shows as the
+    * large-star aggregate by u or the small-star aggregate by v, each an
+    * exchange of (key, min) partial rows.
+    */
+  private def runTraced(edges: Seq[(Long, Long)]): (Map[Long, Long], Boolean) = {
+    var got = Map.empty[Long, Long]
+    val region = new Ledger(spark).region("components") { got = run(edges) }
+    val outputs = region.allActions.flatMap(Ledger.exchanges).map(_.output)
+    (got, outputs.exists(o => o == Seq("u", "min") || o == Seq("v", "min")))
+  }
+
+  test("a star forest is labelled with no star round") {
+    // disjoint twins plus one star rooted at its minimum
+    val twins = Seq((10L, 11L), (21L, 20L), (30L, 31L))
+    val star = Seq((1L, 2L), (1L, 3L), (4L, 1L), (1L, 5L))
+    val (got, round) = runTraced(twins ++ star)
+    assert(got == reference(twins ++ star))
+    assert(!round, "a star round ran on a star forest")
+  }
+
+  test("two roots, or a root that is also a leaf, force a star round") {
+    val twins = Seq((10L, 11L), (20L, 21L))
+    for (shape <- Seq(
+        Seq((1L, 5L), (2L, 5L)),    // 5 hangs off two roots
+        Seq((1L, 2L), (2L, 3L)))) { // 2 is 1's leaf and 3's root
+      val (got, round) = runTraced(twins ++ shape)
+      assert(got == reference(twins ++ shape), s"shape=$shape")
+      assert(round, s"no star round ran on $shape")
+    }
   }
 
   test("200-node path graph: components correct, star rounds converge") {

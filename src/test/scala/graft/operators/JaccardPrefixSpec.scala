@@ -1,6 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, PosExplode}
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -103,6 +110,85 @@ class JaccardPrefixSpec extends AnyFunSuite {
       Thread.sleep(50)
     assert(leftover.isEmpty,
       s"cached intermediates survived the action: $leftover")
+  }
+
+  /** Every operator of an executed plan, through AQE's query stages and
+    * subqueries; cached tables count as their scan only.
+    */
+  private def operators(p: SparkPlan): Seq[SparkPlan] = {
+    val inner = p match {
+      case q: QueryStageExec => operators(q.plan)
+      case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
+      case _ => Nil
+    }
+    p +: (inner ++ p.children.flatMap(operators) ++
+      p.subqueries.flatMap(operators))
+  }
+
+  /** (naive route planned, PPJoin route planned, a join against a
+    * routing table planned) in `df`'s executed plan. The naive route
+    * counts shared words per (id1, id2) pair; the PPJoin route
+    * posexplodes prefixes and verifies with array_intersect.
+    */
+  private def routesIn(df: DataFrame): (Boolean, Boolean, Boolean) = {
+    val ops = operators(df.queryExecution.executedPlan)
+    val naive = ops.exists {
+      case a: BaseAggregateExec =>
+        a.groupingExpressions.map(_.name) == Seq("id1", "id2") &&
+          a.aggregateExpressions.nonEmpty
+      case _ => false
+    }
+    val ppjoin = ops.exists(_.expressions.exists(_.exists(e =>
+      e.isInstanceOf[ArrayIntersect] || e.isInstanceOf[PosExplode])))
+    val routing = ops.exists {
+      case j: BaseJoinExec =>
+        j.joinType == LeftAnti || j.joinType == LeftSemi ||
+          j.leftKeys.flatMap(_.references.map(_.name)).toSet ==
+            Set("lang", "blk")
+      case _ => false
+    }
+    (naive, ppjoin, routing)
+  }
+
+  test("each route plans only its own operators, releases its tables, and skips null blocks") {
+    import spark.implicits._
+    // blk 0: a dense block (tiny shared vocabulary, volume ~200); blk 1:
+    // shared stopwords, otherwise unique, plus one twin (volume ~11,000);
+    // then docs with a null lang or a null n_chars, each a verbatim twin
+    // of another doc — the equi-joined blocking key pairs none of them
+    val dense = (0 until 8).map(i => (s"alpha beta gamma w$i", "en", 50L))
+    val sparse = (0 until 60).map(i => (s"the of and u${i}a u${i}b", "en", 150L)) :+
+      (("the of and u0a u0b", "en", 150L))
+    val keyless = Seq(("alpha beta gamma w0", null, 50L),
+      ("alpha beta gamma w0", null, 50L), ("the of and u1a u1b", "en", -1L),
+      ("the of and u1a u1b", "en", -1L))
+    val docs = (dense ++ sparse ++ keyless).zipWithIndex
+      .map { case ((t, lang, nc), i) =>
+        (i.toLong, t, lang, if (nc < 0) None else Some(nc)) }
+      .toDF("doc_id", "text", "lang", "n_chars")
+    val n = dense.size + sparse.size
+    val expected = naivePairs(dense.map(_._1), 0.5) ++
+      naivePairs(sparse.map(_._1), 0.5).map { case (a, b, j) =>
+        (a + dense.size, b + dense.size, j) }
+    assert(expected.exists(_._1 >= dense.size)) // the sparse twin
+    // (route, limit, naive planned, PPJoin planned)
+    for ((route, vol, naive, ppjoin) <- Seq(
+        ("naive", Long.MaxValue, true, false),
+        ("ppjoin", -1L, false, true),
+        ("hybrid", 2000L, true, true))) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val pairs = Dedup.jaccardPairs(docs, threshold = 0.5,
+        naiveBlockVolume = vol)
+      val got = pairs.as[(Long, Long, Double)].collect().toSet
+      assert(got == expected, s"route=$route")
+      assert(got.forall(_._2 < n), s"route=$route paired a keyless doc")
+      assert(routesIn(pairs) == ((naive, ppjoin, false)), s"route=$route")
+      val deadline = System.nanoTime() + 10e9.toLong
+      def leftover = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      while (leftover.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(leftover.isEmpty, s"route=$route left $leftover")
+    }
   }
 
   test("null and empty texts flow through every dedup family") {

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source rules for the near-duplicate pair family: each step of the
   * candidate-and-verify pipeline (pigeonhole Hamming pairing, shingle
   * Jaccard verify, cosine verify, the Jaccard ratio column, the
-  * canonical edge list) is written once.
+  * canonical edge list, the components convergence test) is written
+  * once.
   */
 class NearDupIdiomSpec extends AnyFunSuite {
 
@@ -52,6 +53,12 @@ class NearDupIdiomSpec extends AnyFunSuite {
 
   test("Dedup calls Ids.longId directly") {
     assert(hits(Seq(dedup), "def longId").isEmpty)
+  }
+
+  test("DupGraph keeps one convergence test: the star-forest check") {
+    for (p <- Seq("bit_xor(", ".except("))
+      assert(hits(Seq(dupGraph), p).isEmpty,
+        s"components stops on its node table, not on `$p`")
   }
 
   test("DupGraph builds its canonical edge list in one place") {

@@ -177,4 +177,14 @@ class ResidueSpec extends AnyFunSuite {
       assert(residue(before, allowed = 1).size == 1)
     }
   }
+
+  test("DupGraph.components frees every checkpoint when it does not converge") {
+    import spark.implicits._
+    // an 8-node path is no star forest after one round
+    val path = (0L until 7L).map(i => (i, i + 1)).toDF("id1", "id2")
+    checkEager(intercept[IllegalArgumentException] {
+      DupGraph.components(path, maxIter = 1)
+    })
+    assert(DupGraph.components(path).count() == 8L)
+  }
 }
