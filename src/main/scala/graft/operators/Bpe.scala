@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.util.Rounds
+
 /** Distributed byte-pair-encoding merge training (Sennrich et al. 2016,
   * "Neural Machine Translation of Rare Words with Subword Units") — the
   * tokenizer-training step of an LLM data pipeline, as iterative
@@ -57,64 +59,54 @@ object Bpe {
     graft.text.SqlText.codePoints(w)
       .map(cp => new String(Character.toChars(cp)))
 
+  /** `(l, r, pair_count)`: every adjacent symbol pair of a word
+    * histogram, weighted by its word's frequency, one partial-aggregated
+    * count. The pair statistic of every merge round, here and in
+    * [[WordPiece]].
+    */
+  private[operators] def pairCounts(hist: Dataset[(Array[String], Long)]): DataFrame = {
+    import hist.sparkSession.implicits._
+    hist
+      .flatMap { case (syms, f) =>
+        syms.iterator.sliding(2).withPartial(false)
+          .map(p => (p.head, p(1), f))
+      }
+      .toDF("l", "r", "f")
+      .groupBy("l", "r")
+      .agg(sum("f").as("pair_count"))
+  }
+
+  /** Train `nMerges` merges over the corpus word histogram
+    * ([[Unigram.wordHistogram]]), one [[graft.util.Rounds]] round per
+    * merge: the round's argmax collect fills its histogram checkpoint.
+    */
   def trainMerges(docs: DataFrame, nMerges: Int,
       textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-
-    var hist: Dataset[(Array[String], Long)] = docs
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("word")
-      .agg(count(lit(1)).as("freq"))
-      .as[(String, Long)]
-      .map { case (w, f) => (initialSyms(w) :+ EndMark, f) }
-      .localCheckpoint(true)
-
     val merges = Seq.newBuilder[(Int, String, String, Long)]
-    // the lazily-checkpointed round k histogram materializes during
-    // round k+1's argmax job, READING round k-1's blocks — so round
-    // k-1 can only be freed after that argmax returns (freeing it at
-    // creation time races the materialization and loses blocks)
-    var prev: Dataset[(Array[String], Long)] = null
-    var rank = 0
-    var exhausted = false
-    while (rank < nMerges && !exhausted) {
-      val top = hist
-        .flatMap { case (syms, f) =>
-          syms.iterator.sliding(2).withPartial(false)
-            .map(p => (p.head, p(1), f))
+    Rounds.run { rounds =>
+      val words = Unigram.wordHistogram(docs, textCol).as[(String, Long)]
+      val first = rounds.eagerly(
+        words.map { case (w, f) => (initialSyms(w) :+ EndMark, f) })
+      rounds.iterate(first) { (hist, rank) =>
+        val top =
+          if (rank >= nMerges) None
+          else pairCounts(hist)
+            .orderBy(desc("pair_count"), asc("l"), asc("r"))
+            .limit(1)
+            .as[(String, String, Long)]
+            .collect().headOption
+        top match {
+          // no pair left: every word is one symbol already
+          case None =>
+            Left(merges.result().toDF("rank", "left", "right", "pair_count"))
+          case Some((l, r, c)) =>
+            merges += ((rank, l, r, c))
+            Right(rounds.lazily(hist.map { case (syms, f) => (mergePair(syms, l, r), f) }))
         }
-        .toDF("l", "r", "f")
-        .groupBy("l", "r")
-        .agg(sum("f").as("pair_count"))
-        .orderBy(desc("pair_count"), asc("l"), asc("r"))
-        .limit(1)
-        .as[(String, String, Long)]
-        .collect() // materializes `hist`'s lazy checkpoint
-      // free the grandparent checkpoint (CacheRelease.release unpersists
-      // the RDD behind it) or every merge round leaks its histogram into
-      // storage memory
-      if (prev != null) { graft.util.CacheRelease.release(prev); prev = null }
-      top.headOption match {
-        case None => exhausted = true // every word is one symbol already
-        case Some((l, r, c)) =>
-          merges += ((rank, l, r, c))
-          // LAZY checkpoint: the next round's argmax collect is the
-          // first action over this Dataset and materializes the
-          // checkpoint in the same job — eager would add a full extra
-          // pass per merge round
-          val next = hist
-            .map { case (syms, f) => (mergePair(syms, l, r), f) }
-            .localCheckpoint(false)
-          prev = hist
-          hist = next
-          rank += 1
       }
     }
-    if (prev != null) graft.util.CacheRelease.release(prev)
-    graft.util.CacheRelease.release(hist)
-    merges.result().toDF("rank", "left", "right", "pair_count")
   }
 
   /** Greedy segmentation of one word with a trained merge table (merges

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.util.{CacheRelease, Ids}
+import graft.util.{Ids, Rounds}
 
 /** Connected components over a near-duplicate pair graph: the step that
   * turns pairwise dedup output (q32/q33/q34/q45 emit PAIRS) into the
@@ -25,9 +25,8 @@ import graft.util.{CacheRelease, Ids}
   * minima, converging in O(log²) rounds even on path graphs — unlike
   * naive min-label propagation, whose round count is the graph DIAMETER
   * (a 1e6-doc near-dup chain would need 1e6 rounds; the star algorithm
-  * needs ~40). Per-round `localCheckpoint` truncates the logical plan so
-  * round N doesn't re-analyze N stacked joins (on a real cluster a
-  * reliable checkpoint dir serves the same purpose).
+  * needs ~40). [[graft.util.Rounds]] truncates each round's lineage, so
+  * round N doesn't re-analyze N stacked joins.
   *
   * The stop rule reads the star forest directly: one per-node aggregate
   * over the current edges (degree and minimum endpoint) shows whether
@@ -64,51 +63,33 @@ object DupGraph {
     * Each step checks the current edges with one action over their node
     * table ([[nodeTable]]) and stops at the first star forest; otherwise
     * it runs one large-star + small-star round. `maxIter` bounds the
-    * star rounds run: an input that needs more throws. The returned
-    * labels are a projection of the final node table, whose checkpoint
-    * is the one block set left resident; every edge checkpoint, and on
-    * failure every node table too, is freed before returning or
-    * throwing.
+    * star rounds run: an input that needs more throws. Edges and node
+    * table are checkpointed lazily per round; the returned labels are a
+    * projection of the final node table, the one block set left resident.
     */
   def components(pairs: DataFrame, id1Col: String = "id1",
       id2Col: String = "id2", maxIter: Int = 30): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-
-    var edges = canonicalEdges(pairs, id1Col, id2Col).as[(Long, Long)]
-      .localCheckpoint(false) // lazy: the first star-forest check materializes it
-    var nodes: DataFrame = null
-    var ok = false
-    try {
-      nodes = nodeTable(edges)
-      var forest = starForest(nodes)
-      var rounds = 0
-      while (!forest) {
-        require(rounds < maxIter,
-          s"star rounds did not reach a star forest in $maxIter rounds")
-        CacheRelease.release(nodes)
-        val prev = edges
-        // the check materializes this round's edges from `prev`'s
-        // blocks, so `prev` is freed after it, on success or failure
-        try {
-          edges = smallStar(largeStar(prev)).localCheckpoint(false)
-          nodes = nodeTable(edges)
-          forest = starForest(nodes)
-        } finally CacheRelease.release(prev)
-        rounds += 1
+    Rounds.run { rounds =>
+      val first = rounds.lazily(canonicalEdges(pairs, id1Col, id2Col).as[(Long, Long)])
+      rounds.iterate((first, rounds.lazily(nodeTable(first)))) {
+        case ((edges, nodes), round) =>
+          // the check fills this round's edge and node checkpoints
+          if (starForest(nodes)) Left(nodes.select(col("id"), col("component")))
+          else {
+            require(round < maxIter,
+              s"star rounds did not reach a star forest in $maxIter rounds")
+            val next = rounds.lazily(smallStar(largeStar(edges)))
+            Right((next, rounds.lazily(nodeTable(next))))
+          }
       }
-      ok = true
-      nodes.select(col("id"), col("component"))
-    } finally {
-      CacheRelease.release(edges)
-      if (!ok && nodes != null) CacheRelease.release(nodes)
     }
   }
 
   /** (id, deg, component) per node of a canonical edge list (u < v):
     * its edge count and its minimum endpoint min(Γ(id) ∪ {id}), so
     * `component < id` exactly when the node has a smaller neighbour.
-    * Lazily checkpointed: [[starForest]] materializes it.
     */
   private def nodeTable(edges: Dataset[(Long, Long)]): DataFrame = {
     val e = edges.toDF("u", "v")
@@ -116,7 +97,6 @@ object DupGraph {
       .unionByName(e.select(col("u").as("id"), col("u").as("m")))
       .groupBy("id")
       .agg(count(lit(1)).as("deg"), min("m").as("component"))
-      .localCheckpoint(false)
   }
 
   /** Whether a node table is a forest of stars rooted at their minima:
@@ -208,9 +188,12 @@ object DupGraph {
     *
     * Shape per iteration: one equi-join rank⋈edges (shuffles on node
     * id), one partial-aggregated sum by destination — the classic
-    * power-iteration MapReduce shape. The rank vector (|V| rows, 16 B)
-    * is localCheckpoint'ed per round to stop plan growth; the edge list
-    * and degree table are checkpointed once and reused. A fixed
+    * power-iteration MapReduce shape. The edge list and degree table are
+    * checkpointed once for the whole call; the rank vector (|V| rows,
+    * 16 B) is checkpointed eagerly after every second iteration (and the
+    * last), one [[graft.util.Rounds]] round per two iterations: the
+    * checkpoint is the round's only job, so two iterations per round
+    * halve the jobs while the plan stays two iterations deep. A fixed
     * `iterations` count (not a convergence test) keeps the oracle
     * expressible as unrolled SQL.
     *
@@ -222,8 +205,6 @@ object DupGraph {
       id1Col: String = "id1", id2Col: String = "id2",
       scale: Long = 1000000000000L, dampingPct: Int = 85): DataFrame = {
     require(iterations >= 0 && dampingPct >= 0 && dampingPct <= 100)
-    val spark = pairs.sparkSession
-    import spark.implicits._
     val canon = canonicalEdges(pairs, id1Col, id2Col)
     // partitioned by u ONCE before the checkpoint (guide §2.4): the
     // degree agg, and every iteration's rank join AND degree join, are
@@ -232,54 +213,35 @@ object DupGraph {
     // the contribution sum by destination (whose hash(id) output in turn
     // co-partitions the base left-join). Previously each iteration paid
     // exchanges for both join sides plus the agg.
-    val edges = canon
-      .unionByName(canon.select(col("v").as("u"), col("u").as("v")))
-      .repartition(col("u"))
-      .localCheckpoint(true)
-    val deg = edges.groupBy(col("u").as("id"))
-      .agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    val n = deg.agg(count(lit(1)).as("n"))
-    val base = deg.select("id").crossJoin(broadcast(n))
-    var pr = base
-      .select(col("id"), expr(s"CAST($scale DIV n AS BIGINT)").as("rank"))
-      .localCheckpoint(true)
-    var sinceCkpt = 0
-    var lastCkpt = pr
-    for (i <- 1 to iterations) {
-      val contrib = edges
-        .join(pr.select(col("id").as("u"), col("rank").as("r")), "u")
-        .join(deg.select(col("id").as("u"), col("deg")), "u")
-        .groupBy(col("v").as("id"))
-        .agg(sum(expr("r DIV deg")).as("contrib"))
-      val next = base
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          expr(s"""CAST(((100 - $dampingPct) * ($scale DIV n)) DIV 100
-                   + ($dampingPct * COALESCE(contrib, 0)) DIV 100 AS BIGINT)""")
-            .as("rank"))
-      // checkpoint every SECOND iteration (and the last): the eager
-      // checkpoint is one Spark job, so batching two power-iteration
-      // steps per materialization halves the job count while the plan
-      // stays two iterations deep — same fixpoint arithmetic, fewer
-      // fixed per-job latencies (the dedup-graph cadence cost VERDICT
-      // r18 #3 names)
-      sinceCkpt += 1
-      if (sinceCkpt == 2 || i == iterations) {
-        // materialize FIRST (its lineage reads the previous checkpoint's
-        // blocks), then free that previous checkpoint — only ever a
-        // frame that localCheckpoint actually produced
-        val ck = next.localCheckpoint(true)
-        CacheRelease.release(lastCkpt)
-        lastCkpt = ck
-        pr = ck
-        sinceCkpt = 0
-      } else pr = next
+    Rounds.run { rounds =>
+      val edges = rounds.shared(canon
+        .unionByName(canon.select(col("v").as("u"), col("u").as("v")))
+        .repartition(col("u")))
+      val deg = rounds.shared(edges.groupBy(col("u").as("id"))
+        .agg(count(lit(1)).as("deg")))
+      val n = deg.agg(count(lit(1)).as("n"))
+      val base = deg.select("id").crossJoin(broadcast(n))
+      def power(pr: DataFrame): DataFrame = {
+        val contrib = edges
+          .join(pr.select(col("id").as("u"), col("rank").as("r")), "u")
+          .join(deg.select(col("id").as("u"), col("deg")), "u")
+          .groupBy(col("v").as("id"))
+          .agg(sum(expr("r DIV deg")).as("contrib"))
+        base
+          .join(contrib, Seq("id"), "left")
+          .select(col("id"),
+            expr(s"""CAST(((100 - $dampingPct) * ($scale DIV n)) DIV 100
+                     + ($dampingPct * COALESCE(contrib, 0)) DIV 100 AS BIGINT)""")
+              .as("rank"))
+      }
+      val pr0 = rounds.eagerly(base
+        .select(col("id"), expr(s"CAST($scale DIV n AS BIGINT)").as("rank")))
+      rounds.iterate(pr0) { (pr, round) =>
+        val left = iterations - 2L * round
+        if (left <= 0) Left(pr)
+        else Right(rounds.eagerly(if (left == 1) power(pr) else power(power(pr))))
+      }
     }
-    // pr is an eager checkpoint: nothing reads the edge and degree
-    // tables any more, so its blocks are the one set left resident
-    CacheRelease.release(edges, deg)
-    pr
   }
 
   /** [[dropNearDups]] for pipelines that already ran [[components]] —

@@ -227,6 +227,30 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** The standard media schema every media table has: `(doc_id,
+    * payload, meta)`, `meta` the payload's media type, byte length and
+    * md5 digest.
+    */
+  private def withMeta(media: DataFrame, mediaType: String): DataFrame =
+    media.select(col("doc_id"), col("payload"), struct(
+      lit(mediaType).as("media_type"),
+      octet_length(col("payload")).cast("long").as("n_bytes"),
+      md5(col("payload")).as("digest")).as("meta"))
+
+  /** A synthetic media table: one `encode(doc_id)` payload per doc,
+    * spread across cores (encoding is the CPU-bound part).
+    */
+  private def synthesize(docs: DataFrame, idCol: String, mediaType: String)(
+      encode: Long => Array[Byte]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    withMeta(graft.util.Spread.cpuBound(docs
+      .select(col(idCol).cast("long").as("doc_id"))
+      .as[Long])
+      .mapPartitions(_.map(id => (id, encode(id))))
+      .toDF("doc_id", "payload"), mediaType)
+  }
+
   /** Deterministic real-WAV media table derived from the fixture docs:
     * per doc, a square wave whose frame count and amplitude are
     * closed-form functions of doc_id (n = 800 + id%800 frames at 8 kHz,
@@ -234,28 +258,12 @@ object Multimodal {
     * audio twin of [[syntheticPngTable]], so a SQL oracle can recompute
     * everything the real decoder must report.
     */
-  def syntheticWavTable(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.util.Spread.cpuBound(docs
-      .select(col(idCol).cast("long").as("doc_id"))
-      .as[Long])
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val n = 800 + (id % 800).toInt
-          val a = 1 + (id % 30000).toInt
-          (id, encodeWav(n, a))
-        }
-      }
-      .toDF("doc_id", "payload")
-      .select(
-        col("doc_id"),
-        col("payload"),
-        struct(
-          lit("audio/wav").as("media_type"),
-          octet_length(col("payload")).cast("long").as("n_bytes"),
-          md5(col("payload")).as("digest")).as("meta"))
-  }
+  def syntheticWavTable(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    synthesize(docs, idCol, "audio/wav") { id =>
+      val n = 800 + (id % 800).toInt
+      val a = 1 + (id % 30000).toInt
+      encodeWav(n, a)
+    }
 
   /** Partition-batched audio decode: one codec context per partition,
     * rows streamed through the real [[decodeAudio]] path. `duration_ms`
@@ -347,29 +355,13 @@ object Multimodal {
     * gray makes mean luminance exactly the gray level, so a SQL oracle
     * can recompute everything the real decoder must report.
     */
-  def syntheticPngTable(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.util.Spread.cpuBound(docs
-      .select(col(idCol).cast("long").as("doc_id"))
-      .as[Long])
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 16 + (id % 48).toInt
-          val h = 16 + (id % 31).toInt
-          val g = (id % 256).toInt
-          (id, encodePng(w, h, g))
-        }
-      }
-      .toDF("doc_id", "payload")
-      .select(
-        col("doc_id"),
-        col("payload"),
-        struct(
-          lit("image/png").as("media_type"),
-          octet_length(col("payload")).cast("long").as("n_bytes"),
-          md5(col("payload")).as("digest")).as("meta"))
-  }
+  def syntheticPngTable(docs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    synthesize(docs, idCol, "image/png") { id =>
+      val w = 16 + (id % 48).toInt
+      val h = 16 + (id % 31).toInt
+      val g = (id % 256).toInt
+      encodePng(w, h, g)
+    }
 
   /** Solid-gray PNG bytes via the JDK encoder (headless-safe). */
   def encodePng(width: Int, height: Int, gray: Int): Array[Byte] = {
@@ -668,20 +660,13 @@ object Multimodal {
       payloadCol: String = "payload"): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media
+    withMeta(media
       .select(col(idCol).cast("long"), col(payloadCol))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, bytes) =>
         resizeImage(bytes, targetW, targetH).map(id -> _)
       })
-      .toDF("doc_id", "payload")
-      .select(
-        col("doc_id"),
-        col("payload"),
-        struct(
-          lit("image/png").as("media_type"),
-          octet_length(col("payload")).cast("long").as("n_bytes"),
-          md5(col("payload")).as("digest")).as("meta"))
+      .toDF("doc_id", "payload"), "image/png")
   }
 
   // ------------------------------------------------------------------
@@ -765,35 +750,19 @@ object Multimodal {
     * oracle can recompute everything the frame sampler must report.
     */
   def syntheticVideoTable(docs: DataFrame,
-      idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.util.Spread.cpuBound(docs
-      .select(col(idCol).cast("long").as("doc_id"))
-      .as[Long])
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 16 + (id % 16).toInt
-          val h = 16 + (id % 8).toInt
-          val nf = 8 + (id % 8).toInt
-          val frames = (0 until nf).map { f =>
-            val g = ((id + 7L * f) % 256).toByte
-            val a = new Array[Byte](w * h)
-            java.util.Arrays.fill(a, g)
-            a
-          }
-          (id, encodeRawVideo(w, h, frames))
-        }
+      idCol: String = "doc_id"): DataFrame =
+    synthesize(docs, idCol, "video/grv") { id =>
+      val w = 16 + (id % 16).toInt
+      val h = 16 + (id % 8).toInt
+      val nf = 8 + (id % 8).toInt
+      val frames = (0 until nf).map { f =>
+        val g = ((id + 7L * f) % 256).toByte
+        val a = new Array[Byte](w * h)
+        java.util.Arrays.fill(a, g)
+        a
       }
-      .toDF("doc_id", "payload")
-      .select(
-        col("doc_id"),
-        col("payload"),
-        struct(
-          lit("video/grv").as("media_type"),
-          octet_length(col("payload")).cast("long").as("n_bytes"),
-          md5(col("payload")).as("digest")).as("meta"))
-  }
+      encodeRawVideo(w, h, frames)
+    }
 
   /** Real video frame sampling: parse the GRV1 container and emit every
     * `stride`-th frame (indices 0, stride, 2·stride, …) with its exact
@@ -805,7 +774,31 @@ object Multimodal {
     */
   def videoFrameSample(media: DataFrame, stride: Int = 3,
       idCol: String = "doc_id",
-      payloadCol: String = "payload"): DataFrame = {
+      payloadCol: String = "payload"): DataFrame =
+    sampleFrames(media, stride, idCol, payloadCol) { bytes =>
+      decodeVideoHeader(bytes).iterator.flatMap { hd =>
+        val frameLen = hd.width * hd.height
+        (0 until hd.nFrames by stride).iterator.map { f =>
+          val off = 16 + f * frameLen
+          var sum = 0L
+          var i = off
+          while (i < off + frameLen) {
+            sum += bytes(i) & 0xff
+            i += 1
+          }
+          (f, hd.width, hd.height, hd.nFrames, (sum / frameLen).toInt)
+        }
+      }
+    }
+
+  /** The body the three frame samplers share: one flatMap whose fan-out
+    * per clip is bounded by nFrames/stride. `frames` decodes one payload
+    * to its kept `(frame_idx, width, height, n_frames, mean_luma)`, or to
+    * nothing for a payload it rejects.
+    */
+  private def sampleFrames(media: DataFrame, stride: Int, idCol: String,
+      payloadCol: String)(
+      frames: Array[Byte] => Iterator[(Int, Int, Int, Int, Int)]): DataFrame = {
     require(stride > 0, s"stride must be positive: $stride")
     val spark = media.sparkSession
     import spark.implicits._
@@ -813,20 +806,7 @@ object Multimodal {
       .select(col(idCol).cast("long"), col(payloadCol))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, bytes) =>
-        decodeVideoHeader(bytes).iterator.flatMap { hd =>
-          val frameLen = hd.width * hd.height
-          (0 until hd.nFrames by stride).iterator.map { f =>
-            val off = 16 + f * frameLen
-            var sum = 0L
-            var i = off
-            while (i < off + frameLen) {
-              sum += bytes(i) & 0xff
-              i += 1
-            }
-            (id, f, hd.width, hd.height, hd.nFrames,
-              (sum / frameLen).toInt)
-          }
-        }
+        frames(bytes).map { case (f, w, h, n, luma) => (id, f, w, h, n, luma) }
       })
       .toDF("doc_id", "frame_idx", "width", "height", "n_frames",
         "mean_luma")
@@ -932,30 +912,14 @@ object Multimodal {
     * container.
     */
   def syntheticGifTable(docs: DataFrame,
-      idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.util.Spread.cpuBound(docs
-      .select(col(idCol).cast("long").as("doc_id"))
-      .as[Long])
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 16 + (id % 16).toInt
-          val h = 16 + (id % 8).toInt
-          val nf = 8 + (id % 8).toInt
-          val grays = (0 until nf).map(f => ((id + 7L * f) % 256).toInt)
-          (id, encodeAnimatedGif(w, h, grays))
-        }
-      }
-      .toDF("doc_id", "payload")
-      .select(
-        col("doc_id"),
-        col("payload"),
-        struct(
-          lit("image/gif").as("media_type"),
-          octet_length(col("payload")).cast("long").as("n_bytes"),
-          md5(col("payload")).as("digest")).as("meta"))
-  }
+      idCol: String = "doc_id"): DataFrame =
+    synthesize(docs, idCol, "image/gif") { id =>
+      val w = 16 + (id % 16).toInt
+      val h = 16 + (id % 8).toInt
+      val nf = 8 + (id % 8).toInt
+      val grays = (0 until nf).map(f => ((id + 7L * f) % 256).toInt)
+      encodeAnimatedGif(w, h, grays)
+    }
 
   /** [[videoFrameSample]] over animated GIFs: decode through the public
     * ImageIO codec, emitting ONLY every `stride`-th frame (skipped
@@ -965,24 +929,12 @@ object Multimodal {
     */
   def gifFrameSample(media: DataFrame, stride: Int = 3,
       idCol: String = "doc_id",
-      payloadCol: String = "payload"): DataFrame = {
-    require(stride > 0, s"stride must be positive: $stride")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media
-      .select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) =>
-        decodeGifFramesStrided(bytes, stride).iterator.flatMap {
-          case (nf, kept) =>
-            kept.iterator.map { case (f, d) =>
-              (id, f, d.width, d.height, nf, d.mean_luma)
-            }
-        }
-      })
-      .toDF("doc_id", "frame_idx", "width", "height", "n_frames",
-        "mean_luma")
-  }
+      payloadCol: String = "payload"): DataFrame =
+    sampleFrames(media, stride, idCol, payloadCol) { bytes =>
+      decodeGifFramesStrided(bytes, stride).iterator.flatMap { case (nf, kept) =>
+        kept.iterator.map { case (f, d) => (f, d.width, d.height, nf, d.mean_luma) }
+      }
+    }
 
   // ------------------------------------------------------------------
   // RIFF/AVI container (round 13, VERDICT r12 #6): uncompressed 8-bit
@@ -1293,35 +1245,19 @@ object Multimodal {
     * encoded as standard RIFF AVI payloads any external tool can read.
     */
   def syntheticAviTable(docs: DataFrame,
-      idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.util.Spread.cpuBound(docs
-      .select(col(idCol).cast("long").as("doc_id"))
-      .as[Long])
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 16 + (id % 16).toInt
-          val h = 16 + (id % 8).toInt
-          val nf = 8 + (id % 8).toInt
-          val frames = (0 until nf).map { f =>
-            val g = ((id + 7L * f) % 256).toByte
-            val a = new Array[Byte](w * h)
-            java.util.Arrays.fill(a, g)
-            a
-          }
-          (id, encodeAvi(w, h, frames))
-        }
+      idCol: String = "doc_id"): DataFrame =
+    synthesize(docs, idCol, "video/x-msvideo") { id =>
+      val w = 16 + (id % 16).toInt
+      val h = 16 + (id % 8).toInt
+      val nf = 8 + (id % 8).toInt
+      val frames = (0 until nf).map { f =>
+        val g = ((id + 7L * f) % 256).toByte
+        val a = new Array[Byte](w * h)
+        java.util.Arrays.fill(a, g)
+        a
       }
-      .toDF("doc_id", "payload")
-      .select(
-        col("doc_id"),
-        col("payload"),
-        struct(
-          lit("video/x-msvideo").as("media_type"),
-          octet_length(col("payload")).cast("long").as("n_bytes"),
-          md5(col("payload")).as("digest")).as("meta"))
-  }
+      encodeAvi(w, h, frames)
+    }
 
   /** [[videoFrameSample]] over standard AVI payloads: parse the RIFF
     * grammar, decode and emit ONLY every `stride`-th frame (skipped
@@ -1331,30 +1267,21 @@ object Multimodal {
     */
   def aviFrameSample(media: DataFrame, stride: Int = 3,
       idCol: String = "doc_id",
-      payloadCol: String = "payload"): DataFrame = {
-    require(stride > 0, s"stride must be positive: $stride")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media
-      .select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) =>
-        parseAvi(bytes).iterator.flatMap { clip =>
-          // all-or-nothing per clip: a kept MJPG frame the codec
-          // rejects drops the whole payload, never a silently shorter
-          // sample (DIB decodes never fail post-validation)
-          val kept = (0 until clip.nFrames by stride)
-            .map(f => (f, decodeAviFrameOpt(bytes, clip, f)))
-          if (kept.exists(_._2.isEmpty)) Iterator.empty
-          else kept.iterator.map { case (f, d0) =>
-            val d = d0.get
-            (id, f, d.width, d.height, clip.nFrames, d.mean_luma)
-          }
+      payloadCol: String = "payload"): DataFrame =
+    sampleFrames(media, stride, idCol, payloadCol) { bytes =>
+      parseAvi(bytes).iterator.flatMap { clip =>
+        // all-or-nothing per clip: a kept MJPG frame the codec
+        // rejects drops the whole payload, never a silently shorter
+        // sample (DIB decodes never fail post-validation)
+        val kept = (0 until clip.nFrames by stride)
+          .map(f => (f, decodeAviFrameOpt(bytes, clip, f)))
+        if (kept.exists(_._2.isEmpty)) Iterator.empty
+        else kept.iterator.map { case (f, d0) =>
+          val d = d0.get
+          (f, d.width, d.height, clip.nFrames, d.mean_luma)
         }
-      })
-      .toDF("doc_id", "frame_idx", "width", "height", "n_frames",
-        "mean_luma")
-  }
+      }
+    }
 
   /** Encode JPEG frames (each a complete SOI..EOI image) as a standard
     * Motion-JPEG AVI: the [[encodeAvi]] container layout with
@@ -1472,30 +1399,14 @@ object Multimodal {
     * the q139 oracle covers this table verbatim (q165).
     */
   def syntheticMjpegAviTable(docs: DataFrame,
-      idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.util.Spread.cpuBound(docs
-      .select(col(idCol).cast("long").as("doc_id"))
-      .as[Long])
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = 16 + (id % 16).toInt
-          val h = 16 + (id % 8).toInt
-          val nf = 8 + (id % 8).toInt
-          val frames = (0 until nf).map { f =>
-            encodeJpegGray(w, h, ((id + 7L * f) % 256).toInt)
-          }
-          (id, encodeAviMjpeg(w, h, frames))
-        }
+      idCol: String = "doc_id"): DataFrame =
+    synthesize(docs, idCol, "video/x-msvideo") { id =>
+      val w = 16 + (id % 16).toInt
+      val h = 16 + (id % 8).toInt
+      val nf = 8 + (id % 8).toInt
+      val frames = (0 until nf).map { f =>
+        encodeJpegGray(w, h, ((id + 7L * f) % 256).toInt)
       }
-      .toDF("doc_id", "payload")
-      .select(
-        col("doc_id"),
-        col("payload"),
-        struct(
-          lit("video/x-msvideo").as("media_type"),
-          octet_length(col("payload")).cast("long").as("n_bytes"),
-          md5(col("payload")).as("digest")).as("meta"))
-  }
+      encodeAviMjpeg(w, h, frames)
+    }
 }

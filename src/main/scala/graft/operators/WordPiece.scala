@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.util.Rounds
 
 /** Distributed WordPiece tokenizer training + runtime (Schuster &
   * Nakajima 2012; the BERT tokenizer of Devlin et al. 2019) — the third
@@ -72,7 +74,8 @@ object WordPiece {
     out.result()
   }
 
-  /** Train `nMerges` WordPiece merges over the corpus word histogram.
+  /** Train `nMerges` WordPiece merges over the corpus word histogram,
+    * with [[Bpe.trainMerges]]'s histogram, pair count and rounds.
     * Output rows `(rank, left, right, merged, pair_count)` in training
     * order.
     */
@@ -80,69 +83,45 @@ object WordPiece {
       textCol: String = "text"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-
-    var hist: Dataset[(Array[String], Long)] = docs
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("word"))
-      .filter(col("word") =!= "")
-      .groupBy("word")
-      .agg(count(lit(1)).as("freq"))
-      .as[(String, Long)]
-      .map { case (w, f) => (symbols(w), f) }
-      .localCheckpoint(true)
-
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
-    // same lazy-checkpoint lifecycle as Bpe.trainMerges: round k's
-    // blocks materialize during round k+1's argmax, so the grandparent
-    // is freed only after that argmax returns
-    var prev: Dataset[(Array[String], Long)] = null
-    var rank = 0
-    var exhausted = false
-    while (rank < nMerges && !exhausted) {
-      val pairs = hist
-        .flatMap { case (syms, f) =>
-          syms.iterator.sliding(2).withPartial(false)
-            .map(p => (p.head, p(1), f))
+    Rounds.run { rounds =>
+      val words = Unigram.wordHistogram(docs, textCol).as[(String, Long)]
+      val first = rounds.eagerly(words.map { case (w, f) => (symbols(w), f) })
+      rounds.iterate(first) { (hist, rank) =>
+        val top =
+          if (rank >= nMerges) None
+          else {
+            val syms = hist
+              .flatMap { case (ss, f) => ss.iterator.map(s => (s, f)) }
+              .toDF("s", "f")
+              .groupBy("s")
+              .agg(sum("f").as("sym_count"))
+            // the WordPiece score: exact-long division done once in double —
+            // pair_count / (count(l) * count(r)); higher is a bigger
+            // likelihood gain for merging
+            Bpe.pairCounts(hist)
+              .join(syms.withColumnRenamed("s", "l")
+                .withColumnRenamed("sym_count", "lc"), Seq("l"))
+              .join(syms.withColumnRenamed("s", "r")
+                .withColumnRenamed("sym_count", "rc"), Seq("r"))
+              .withColumn("score",
+                col("pair_count").cast("double") /
+                  (col("lc").cast("double") * col("rc").cast("double")))
+              .orderBy(desc("score"), asc("l"), asc("r"))
+              .limit(1)
+              .select("l", "r", "pair_count")
+              .as[(String, String, Long)]
+              .collect().headOption
+          }
+        top match {
+          case None =>
+            Left(merges.result().toDF("rank", "left", "right", "merged", "pair_count"))
+          case Some((l, r, c)) =>
+            merges += ((rank, l, r, mergedName(l, r), c))
+            Right(rounds.lazily(hist.map { case (ss, f) => (replacePair(ss, l, r), f) }))
         }
-        .toDF("l", "r", "f")
-        .groupBy("l", "r")
-        .agg(sum("f").as("pair_count"))
-      val syms = hist
-        .flatMap { case (ss, f) => ss.iterator.map(s => (s, f)) }
-        .toDF("s", "f")
-        .groupBy("s")
-        .agg(sum("f").as("sym_count"))
-      // the WordPiece score: exact-long division done once in double —
-      // pair_count / (count(l) * count(r)); higher is a bigger
-      // likelihood gain for merging
-      val top = pairs
-        .join(syms.withColumnRenamed("s", "l")
-          .withColumnRenamed("sym_count", "lc"), Seq("l"))
-        .join(syms.withColumnRenamed("s", "r")
-          .withColumnRenamed("sym_count", "rc"), Seq("r"))
-        .withColumn("score",
-          col("pair_count").cast("double") /
-            (col("lc").cast("double") * col("rc").cast("double")))
-        .orderBy(desc("score"), asc("l"), asc("r"))
-        .limit(1)
-        .select("l", "r", "pair_count")
-        .as[(String, String, Long)]
-        .collect() // materializes hist's lazy checkpoint
-      if (prev != null) { graft.util.CacheRelease.release(prev); prev = null }
-      top.headOption match {
-        case None => exhausted = true
-        case Some((l, r, c)) =>
-          merges += ((rank, l, r, mergedName(l, r), c))
-          val next = hist
-            .map { case (ss, f) => (replacePair(ss, l, r), f) }
-            .localCheckpoint(false)
-          prev = hist
-          hist = next
-          rank += 1
       }
     }
-    if (prev != null) graft.util.CacheRelease.release(prev)
-    graft.util.CacheRelease.release(hist)
-    merges.result().toDF("rank", "left", "right", "merged", "pair_count")
   }
 
   /** Sequential reference of [[trainMerges]] over a word histogram —

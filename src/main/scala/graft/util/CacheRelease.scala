@@ -15,9 +15,11 @@ import java.util.concurrent.atomic.AtomicBoolean
   *   - an EAGER function frees what it materialized with [[release]] in
   *     a `finally`, on success and on failure;
   *   - `localCheckpoint` stays only where lineage truncation is the
-  *     point (iterative operators; the merge changelog pinned so a
-  *     non-deterministic plan is evaluated once). The final round behind
-  *     an iterative operator's returned frame is the one leftover.
+  *     point: iterative operators truncate through [[Rounds]], which
+  *     frees each round once a later one is filled and every round on
+  *     failure (the final round behind a returned frame is the one
+  *     leftover); the merge changelog is pinned so a non-deterministic
+  *     plan is evaluated once.
   *
   * Several branches of ONE returned plan consume the intermediates, so
   * the operator cannot release them before returning. [[afterFirstAction]]

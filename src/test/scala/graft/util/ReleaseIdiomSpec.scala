@@ -5,15 +5,14 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source rules for the one release idiom ([[CacheRelease]]):
-  * `localCheckpoint` is confined to the operators where lineage
-  * truncation is the point, and nothing names the retired checkpoint
-  * helper.
+  * `localCheckpoint` is confined to where lineage truncation is the
+  * point ([[Rounds]] for the iterative operators), and nothing names the
+  * retired checkpoint helper.
   */
 class ReleaseIdiomSpec extends AnyFunSuite {
 
-  private val checkpointOwners = Set("DupGraph.scala", "Bpe.scala",
-    "WordPiece.scala", "DirtIncremental.scala", "CommitLog.scala",
-    "Bench.scala")
+  private val checkpointOwners = Set("Rounds.scala", "DirtIncremental.scala",
+    "CommitLog.scala", "Bench.scala")
 
   private def scalaFiles(dir: String): Seq[Path] = {
     val root = Paths.get(dir)

@@ -1,8 +1,10 @@
 package graft.util
 
-import graft.operators.{DupGraph, GraftTable, Multimodal}
+import graft.operators.{Bpe, DupGraph, GraftTable, Multimodal, WordPiece}
 import graft.pipeline.DirtPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -186,5 +188,84 @@ class ResidueSpec extends AnyFunSuite {
       DupGraph.components(path, maxIter = 1)
     })
     assert(DupGraph.components(path).count() == 8L)
+  }
+
+  /** Whether `e` or one of its causes has `text` in its message. */
+  private def thrownFor(e: Throwable, text: String): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(text))
+
+  test("Rounds frees every checkpoint when round 2 throws, lazy or eager") {
+    for (eager <- Seq(false, true)) {
+      checkEager(assert(thrownFor(intercept[Exception] {
+        Rounds.run { rounds =>
+          def checkpoint(df: DataFrame) =
+            if (eager) rounds.eagerly(df) else rounds.lazily(df)
+          val ids = rounds.shared(spark.range(40).toDF("id"))
+          rounds.iterate(checkpoint(ids)) { (df, k) =>
+            assert(df.count() == 40L) // round k's action
+            val next = df.select((col("id") + 1).as("id"))
+            // round 2's rows raise: its eager fill, or the lazy round's
+            // action in step 2, throws
+            Right(checkpoint(if (k == 0) next
+              else next.select(raise_error(lit("injected: round 2")).as("id"))))
+          }
+        }
+      }, "injected: round 2")))
+    }
+  }
+
+  test("DupGraph.pageRank frees every checkpoint when a later round overflows") {
+    import spark.implicits._
+    // an 8-clique with a 3-node tail on every member: at this scale the
+    // clique's contribution sum first exceeds 2^63 / 85 in iteration 3,
+    // so round 1 (iterations 1-2) succeeds and round 2 overflows
+    val clique = for (a <- 0L until 8L; b <- a + 1 until 8L) yield (a, b)
+    val tails = for (a <- 0L until 8L; k <- 0L until 3L)
+      yield (if (k == 0) a else 8 + 3 * a + k - 1, 8 + 3 * a + k)
+    val graph = (clique ++ tails).toDF("id1", "id2")
+    val scale = 2200000000000000000L
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val before = persistent
+      assert(DupGraph.pageRank(graph, iterations = 2, scale = scale).count() == 32L)
+      assert(residue(before, allowed = 1).size == 1)
+      checkEager(assert(thrownFor(intercept[Exception] {
+        DupGraph.pageRank(graph, iterations = 4, scale = scale).collect()
+      }, "ARITHMETIC_OVERFLOW")))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  /** Runs `body` with the `n`-th query it plans that holds a limit (a
+    * merge round's argmax collect) throwing in the optimizer.
+    */
+  private def failingArgmax[T](n: Int)(body: => T): T = {
+    var seen = 0
+    val failNth = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (plan.exists(_.isInstanceOf[GlobalLimit])) {
+          seen += 1
+          if (seen == n) throw new IllegalStateException(s"injected: argmax $n")
+        }
+        plan
+      }
+    }
+    spark.experimental.extraOptimizations = Seq(failNth)
+    try body
+    finally spark.experimental.extraOptimizations = Nil
+  }
+
+  test("Bpe and WordPiece merge training free every round, on success and when round 2 throws") {
+    import spark.implicits._
+    val docs = Seq("low lower lowest", "newer newest wider", "low new wide")
+      .toDF("text")
+    for (train <- Seq[Int => DataFrame](Bpe.trainMerges(docs, _),
+        WordPiece.trainMerges(docs, _))) {
+      checkEager(assert(train(4).count() == 4L))
+      checkEager(intercept[IllegalStateException] {
+        failingArgmax(3)(train(4))
+      })
+    }
   }
 }
