@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, input_file_name, max => fmax, min => fmin}
 import org.apache.spark.sql.types.StructType
-import graft.util.CacheRelease
+import graft.util.{CacheRelease, Rounds}
 
 /** Minimal transactional table format: a versioned commit log over
   * plain parquet — snapshot isolation, time-travel reads, ACID MERGE,
@@ -1410,10 +1410,10 @@ object GraftTable {
     import org.apache.spark.sql.functions.lit
     // materialized once: the merge snapshot and the change feed are
     // separate jobs over this frame (see [[merge]]'s scaladoc)
-    val changes = (opCol match {
+    val changes = Rounds.pin(opCol match {
       case Some(_) => batch0
       case None => batch0.withColumn(op, lit("U"))
-    }).localCheckpoint(true)
+    })
     val stamp = (p: Pending) => p.stamped(appId, batchId)
     try {
       var attempts = 0
@@ -1725,7 +1725,7 @@ object GraftTable {
     val spark = changes.sparkSession
     val parent = readManifest(spark, root, expectedVersion)
     val base = snapshotOf(spark, root, parent)
-    val staged = changes.localCheckpoint(true)
+    val staged = Rounds.pin(changes)
     try {
       val merged = Cdc.latestWinsMerge(base, staged, key, ordering, op)
       commit(merged, root, mod(Pending.inherit("MERGE", parent).rewriting
@@ -1798,7 +1798,7 @@ object GraftTable {
     // feed are FOUR jobs over the changelog — a non-deterministic plan
     // re-evaluated per job could prune against one key set and merge
     // another (see [[merge]]'s scaladoc)
-    val changes = changes0.localCheckpoint(true)
+    val changes = Rounds.pin(changes0)
     try {
       val bounds = changes.agg(fmin(col(key)).cast("long"),
         fmax(col(key)).cast("long")).head()

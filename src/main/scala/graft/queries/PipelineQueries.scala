@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.{Decontamination, Dedup, Multimodal, TextAnalysis, TfIdf, VectorSearch}
 import graft.pipeline.DirtPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** LLM-training-data pipeline operators (dedup, text analysis, similarity
@@ -171,10 +171,10 @@ object PipelineQueries {
   // Round 12: hash-oracled — `HashSql.minhashPairs` replays murmur3
   // string hashing, the 128-permutation signature, band-slice candidate
   // join and exact-Jaccard verify in DuckDB from the same constants.
-  val q33 = Q.checked("q33_dedup_minhash", HashSql.minhashPairs) { (s, d) =>
+  val q33 = Q.gated("q33_dedup_minhash", HashSql.minhashPairs) { (s, d, g) =>
     import s.implicits._
-    val got = Dedup.minhashPairs(dupCorpus(s, d), threshold = 0.7,
-      bands = 8, rowsPerBand = 16).persist()
+    val got = g.hold(Dedup.minhashPairs(dupCorpus(s, d), threshold = 0.7,
+      bands = 8, rowsPerBand = 16))
     val slice = dupSlice(s, d)
     val exactHigh = slice.select(col("id").as("id1"), col("text").as("t1"))
       .join(slice.select(col("id").as("id2"), col("text").as("t2")),
@@ -191,14 +191,13 @@ object PipelineQueries {
       }
       .toDF("id1", "id2", "j")
       .filter(col("j") >= 0.9)
-    val nHigh = exactHigh.count()
-    require(nHigh >= 50,
-      s"property oracle vacuous: only $nHigh exact slice pairs at J>=0.9")
-    val missed = exactHigh.join(got, Seq("id1", "id2"), "left_anti").count()
-    require(missed == 0,
-      s"MinHash LSH missed $missed of $nHigh exact slice pairs at J>=0.9")
-    graft.util.CacheRelease.afterFirstAction(
-      got.orderBy("id1", "id2"), Seq(got))
+    g.check(Q.against(exactHigh, got, "id1", "id2"))(
+      "exact_pairs" -> count(lit(1)), "missed" -> count_if(!col("hit")))(
+      "property oracle non-vacuous: >= 50 exact slice pairs at J>=0.9" ->
+        (col("exact_pairs") >= 50),
+      "MinHash LSH finds every exact slice pair at J>=0.9" ->
+        (col("missed") === 0))
+    got.orderBy("id1", "id2")
   }
 
   // SimHash pigeonhole Hamming<=3 pairs — rows-only for the same reason.
@@ -210,11 +209,10 @@ object PipelineQueries {
   // output, planted twins (distance 0) included.
   // Round 12: hash-oracled — `HashSql.simhashPairs` replays murmur3,
   // the per-bit vote, the pigeonhole block join and the Hamming verify.
-  val q34 = Q.checked("q34_dedup_simhash", HashSql.simhashPairs) { (s, d) =>
+  val q34 = Q.gated("q34_dedup_simhash", HashSql.simhashPairs) { (s, d, g) =>
     import s.implicits._
-    val got = Dedup.simhashPairs(dupCorpus(s, d), maxDist = 3).persist()
-    val slice = dupSlice(s, d)
-    val hashed = slice
+    val got = g.hold(Dedup.simhashPairs(dupCorpus(s, d), maxDist = 3))
+    val hashed = dupSlice(s, d)
       .as[(Long, String)]
       .map { case (id, t) =>
         (id, Dedup.simhash64((if (t == null) "" else t).trim.split("\\s+").toSeq))
@@ -225,15 +223,13 @@ object PipelineQueries {
         col("id1") < col("id2"))
       .filter(bit_count(col("h1").bitwiseXOR(col("h2"))) <= 3)
       .select("id1", "id2")
-    val nClose = exactClose.count()
-    require(nClose >= 50,
-      s"property oracle vacuous: only $nClose exact slice pairs at dist<=3")
-    val missed = exactClose.join(got, Seq("id1", "id2"), "left_anti").count()
-    require(missed == 0,
-      s"SimHash pigeonhole missed $missed of $nClose exact slice pairs — " +
-        "the block-agreement theorem was violated")
-    graft.util.CacheRelease.afterFirstAction(
-      got.orderBy("id1", "id2"), Seq(got))
+    g.check(Q.against(exactClose, got, "id1", "id2"))(
+      "exact_pairs" -> count(lit(1)), "missed" -> count_if(!col("hit")))(
+      "property oracle non-vacuous: >= 50 exact slice pairs at dist<=3" ->
+        (col("exact_pairs") >= 50),
+      "SimHash pigeonhole finds every exact slice pair at dist<=3 " +
+        "(the block-agreement theorem)" -> (col("missed") === 0))
+    got.orderBy("id1", "id2")
   }
 
   // Embedding-cosine near-dup, exact variant — the oracle-checked
@@ -302,10 +298,10 @@ object PipelineQueries {
   // Round 12: hash-oracled — seeded hyperplanes interpolated into the
   // `AnnSql.srpPairs` twin (signature, bucket join, rounded-cosine
   // verify all replayed in DuckDB); the recall-floor gate stays.
-  val q46 = Q.checked("q46_dedup_embedding_lsh", AnnSql.srpPairs) { (s, d) =>
+  val q46 = Q.gated("q46_dedup_embedding_lsh", AnnSql.srpPairs) { (s, d, g) =>
     graft.functions.GraftFunctions.register(s)
-    val got = Dedup.embeddingPairsLsh(Tables.embeddings(s, d),
-      threshold = 0.4, nBits = 2, tables = 4).persist()
+    val got = g.hold(Dedup.embeddingPairsLsh(Tables.embeddings(s, d),
+      threshold = 0.4, nBits = 2, tables = 4))
     val emb = Tables.embeddings(s, d).filter(col("vec_id") < 1000)
     val exact = emb.select(col("vec_id").as("id1"), col("embedding").as("v1"))
       .join(emb.select(col("vec_id").as("id2"), col("embedding").as("v2")),
@@ -316,14 +312,11 @@ object PipelineQueries {
           .as("cos_sim"))
       .filter(!isnan(col("cos_sim")) && col("cos_sim") >= 0.4)
       .select("id1", "id2")
-    val nExact = exact.count()
-    val hit = exact
-      .join(got.select("id1", "id2"), Seq("id1", "id2"), "left_semi")
-      .count()
-    require(nExact > 0 && hit.toDouble / nExact >= 0.8,
-      s"embedding-LSH recall $hit/$nExact below 0.8 on the exact slice")
-    graft.util.CacheRelease.afterFirstAction(
-      got.orderBy("id1", "id2"), Seq(got))
+    g.check(Q.against(exact, got, "id1", "id2"))(
+      "exact_pairs" -> count(lit(1)), "hit" -> count_if(col("hit")))(
+      "embedding-LSH recall >= 0.8 on the exact slice" ->
+        (col("exact_pairs") > 0 && col("hit") >= col("exact_pairs") * 0.8))
+    got.orderBy("id1", "id2")
   }
 
   // Exact brute-force cosine top-k against DuckDB's list_cosine_similarity
@@ -394,23 +387,17 @@ object PipelineQueries {
   // as the q35 baseline every ANN variant is graded against). All the
   // approximate paths are RNG-free/seeded, so measured recall is
   // deterministic and a floor is a real gate, not a coin flip.
-  private def requireAnnRecall(s: SparkSession, d: String, got0: DataFrame,
-      floor: Double, label: String): DataFrame = {
-    // the ANN result feeds both the recall gate (an action here) and
-    // the caller's output action: persist it so the operator runs once,
-    // released after the caller's first action (the q78 pattern)
-    val got = got0.persist()
+  private def gatedTopK(g: Gate, s: SparkSession, d: String,
+      approx: DataFrame, floor: Double, label: String): DataFrame = {
+    val got = g.hold(approx)
     val exact = VectorSearch.cosineTopK(Tables.embeddings(s, d),
       queryIds = 0L to 9L, k = 5)
-      .select("query_id", "neighbor_id")
-    val nExact = exact.count()
-    val hit = exact
-      .join(got.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"), "left_semi")
-      .count()
-    require(nExact > 0 && hit.toDouble / nExact >= floor,
-      s"$label recall $hit/$nExact below floor $floor vs the exact top-k")
-    graft.util.CacheRelease.afterFirstAction(got, Seq(got))
+    g.check(Q.against(exact, got, "query_id", "neighbor_id"))(
+      "exact_pairs" -> count(lit(1)), "hit" -> count_if(col("hit")))(
+      s"$label recall >= $floor of the exact top-k" ->
+        (col("exact_pairs") > 0 && col("hit") >= col("exact_pairs") * floor))
+    got.withColumn("rank", col("rank").cast("long"))
+      .orderBy("query_id", "neighbor_id")
   }
 
   /** Frozen per-fixture quantizer artifacts with a live-training
@@ -504,13 +491,11 @@ object PipelineQueries {
   // Round 12: hash-oracled — the hyperplanes are a pure function of the
   // committed seeds, so `AnnSql.srpTopK` interpolates them and DuckDB
   // replays signature, bucket probe and exact ranking bit-for-bit.
-  val q36 = Q.checked("q36_ann_srp_topk", AnnSql.srpTopK) { (s, d) =>
-    requireAnnRecall(s, d,
+  val q36 = Q.gated("q36_ann_srp_topk", AnnSql.srpTopK) { (s, d, g) =>
+    gatedTopK(g, s, d,
       VectorSearch.srpTopK(Tables.embeddings(s, d), queryIds = 0L to 9L,
         k = 5, nBits = 4, tables = 16),
       floor = 0.5, label = "SRP-LSH")
-      .withColumn("rank", col("rank").cast("long"))
-      .orderBy("query_id", "neighbor_id")
   }
 
   // IVF coarse-quantized ANN over the FROZEN 16-cell quantizer
@@ -519,13 +504,11 @@ object PipelineQueries {
   // centroids (`AnnSql.ivfTopK`), so the driver hash-compares the whole
   // search. Training stays live elsewhere: drift-gated in
   // FrozenCentroidsSpec, recall-gated at sf0.1 by the bench require.
-  val q44 = Q.checked("q44_ann_ivf_topk", AnnSql.ivfTopK) { (s, d) =>
-    requireAnnRecall(s, d,
+  val q44 = Q.gated("q44_ann_ivf_topk", AnnSql.ivfTopK) { (s, d, g) =>
+    gatedTopK(g, s, d,
       graft.operators.Ivf.ivfTopKFrom(Tables.embeddings(s, d),
         frozenCoarse(s, d), queryIds = 0L to 9L, k = 5, nProbe = 6),
       floor = 0.9, label = "IVF")
-      .withColumn("rank", col("rank").cast("long"))
-      .orderBy("query_id", "neighbor_id")
   }
 
   // Product-quantization ADC ANN — 8 subspaces × 16 codes over the
@@ -534,13 +517,11 @@ object PipelineQueries {
   // committed artifacts, so encode + ADC + shortlist + exact re-rank
   // hash-match the DuckDB twin (`AnnSql.pqTopK`); training drift-gated
   // in FrozenCentroidsSpec, reconstruction-cosine identity in PqSpec.
-  val q85 = Q.checked("q85_ann_pq_topk", AnnSql.pqTopK) { (s, d) =>
-    requireAnnRecall(s, d,
+  val q85 = Q.gated("q85_ann_pq_topk", AnnSql.pqTopK) { (s, d, g) =>
+    gatedTopK(g, s, d,
       graft.operators.Pq.pqTopKFrom(Tables.embeddings(s, d),
         frozenCodebooks(s, d), queryIds = 0L to 9L, k = 5, rerank = 50),
       floor = 0.6, label = "PQ/ADC")
-      .withColumn("rank", col("rank").cast("long"))
-      .orderBy("query_id", "neighbor_id")
   }
 
   // SemDeDup semantic near-dup pairs: k-means clusters bound the
@@ -1004,8 +985,8 @@ object PipelineQueries {
   // require-fails — float treeAggregate reduce order is the only
   // slack tolerated, a recipe change is a driver-visible failure.
   // Unknown corpora (scale probes) fall back to live float scoring.
-  val q99 = Q.checked("q99_classifier_quality",
-    ClassifierSql.quantizedScores) { (s, d) =>
+  val q99 = Q.gated("q99_classifier_quality",
+    ClassifierSql.quantizedScores) { (s, d, g) =>
     import graft.operators.FrozenClassifier
     val docs = Tables.documents(s, d)
       .withColumn("label",
@@ -1030,14 +1011,13 @@ object PipelineQueries {
       case None =>
         graft.operators.Classifier.score(docs, w, binary = true)
     }
-    val joined = scored.join(
+    val joined = g.hold(scored.join(
       docs.select(col("doc_id").cast("long").as("doc_id"), col("label")),
-      "doc_id")
-    val n = joined.count().toDouble
-    val correct = joined
-      .filter((col("p") > 0.5) === (col("label") === 1.0)).count()
-    require(correct / n >= 0.9,
-      f"classifier training accuracy ${correct / n}%.3f below 0.9")
+      "doc_id"))
+    g.check(joined)("docs" -> count(lit(1)),
+      "correct" -> count_if((col("p") > 0.5) === (col("label") === 1.0)))(
+      "classifier training accuracy >= 0.9" ->
+        (col("correct") >= col("docs") * 0.9))
     joined
       .select(col("doc_id"), round(col("p"), 6).as("p"), col("label"))
       .orderBy("doc_id")
@@ -1139,8 +1119,8 @@ object PipelineQueries {
   // every aHash as pure integer arithmetic and brute-forces the
   // Hamming pairs; a codec bug Spark-side changes its hashes and
   // fails the compare.
-  val q106 = Q.checked("q106_multimodal_image_dedup", MediaSql.imageDedup) {
-    (s, d) =>
+  val q106 = Q.gated("q106_multimodal_image_dedup", MediaSql.imageDedup) {
+    (s, d, g) =>
     import s.implicits._
     val ids = graft.util.Spread.cpuBound(
       Tables.documents(s, d).select(col("doc_id").cast("long")).as[Long])
@@ -1154,12 +1134,10 @@ object PipelineQueries {
           graft.operators.Multimodal.encodePatternPng(32, 32, a, b, noise = true)))
       else Iterator(base)
     }).toDF("doc_id", "payload")
-    val pairs = graft.operators.Multimodal.imageDupPairs(media, maxDist = 6)
-    val planted = pairs
-      .filter(col("id2") === col("id1") + DupOffset && col("id1") < 50)
-      .count()
-    require(planted == 50,
-      s"expected all 50 planted twins within Hamming 6, found $planted")
+    val pairs = g.hold(graft.operators.Multimodal.imageDupPairs(media, maxDist = 6))
+    g.check(pairs)("planted" -> count_if(
+      col("id2") === col("id1") + DupOffset && col("id1") < 50))(
+      "all 50 planted twins pair within Hamming 6" -> (col("planted") === 50))
     pairs.orderBy("id1", "id2")
   }
 
@@ -1173,8 +1151,8 @@ object PipelineQueries {
   // rows-only; distances pinned in MultimodalPhashSpec.
   // Round 12: hash-oracled — `MediaSql.audioDedup`, the audio twin of
   // the q106 promotion (closed-form envelope, lossless PCM).
-  val q107 = Q.checked("q107_multimodal_audio_dedup", MediaSql.audioDedup) {
-    (s, d) =>
+  val q107 = Q.gated("q107_multimodal_audio_dedup", MediaSql.audioDedup) {
+    (s, d, g) =>
     import s.implicits._
     val ids = graft.util.Spread.cpuBound(
       Tables.documents(s, d).select(col("doc_id").cast("long")).as[Long])
@@ -1188,12 +1166,10 @@ object PipelineQueries {
           graft.operators.Multimodal.encodeEnvelopeWav(a, b, noise = true)))
       else Iterator(base)
     }).toDF("doc_id", "payload")
-    val pairs = graft.operators.Multimodal.audioDupPairs(media, maxDist = 6)
-    val planted = pairs
-      .filter(col("id2") === col("id1") + DupOffset && col("id1") < 50)
-      .count()
-    require(planted == 50,
-      s"expected all 50 planted audio twins within Hamming 6, found $planted")
+    val pairs = g.hold(graft.operators.Multimodal.audioDupPairs(media, maxDist = 6))
+    g.check(pairs)("planted" -> count_if(
+      col("id2") === col("id1") + DupOffset && col("id1") < 50))(
+      "all 50 planted audio twins pair within Hamming 6" -> (col("planted") === 50))
     pairs.orderBy("id1", "id2")
   }
 
@@ -1204,42 +1180,32 @@ object PipelineQueries {
   // frozen quantizer makes the whole composition hash-match the DuckDB
   // twin (`AnnSql.kmeansDrop` — pairs + recursive-CTE closure + min-id
   // keeper, the q68/q69 oracle pattern).
-  val q108 = Q.checked("q108_dedup_semantic_drop", AnnSql.kmeansDrop) {
-    (s, d) =>
+  val q108 = Q.gated("q108_dedup_semantic_drop", AnnSql.kmeansDrop) {
+    (s, d, g) =>
     val emb = Tables.embeddings(s, d)
     val pairs = Dedup.embeddingPairsKmeansFrom(emb,
       frozenCoarse(s, d), threshold = 0.4)
-    // cached: the label table feeds THREE consumers (the node/component
-    // gate agg, the keeper-drop anti-join, and nothing else) — without
-    // the cache each action re-runs the labeling aggregation over the
-    // checkpointed fixed-point edges (guide §1.2: don't recompute what
-    // you already have)
-    val comps = graft.operators.DupGraph.components(pairs).persist()
-    val kept = graft.operators.DupGraph
+    def kept(comps: DataFrame) = graft.operators.DupGraph
       .dropNearDupsByComponents(emb, comps, idCol = "vec_id")
       .select(col("vec_id").cast("long").as("vec_id"))
+    // the labels feed the check and the returned keeper-drop
+    val comps = g.hold(graft.operators.DupGraph.components(pairs))
     // structural invariant, NOT a fixture-tuned band: keeper-drop keeps
     // exactly one vec per near-dup component plus every singleton, so
     // kept == n − (pair-graph nodes − components) — derived from the
     // pair graph itself, it holds at any SF and any threshold.
-    // One agg job computes both graph counts (was two separate counts).
-    // a failed gate releases the labels before rethrowing; otherwise the
-    // returned frame's anti-join still reads them, so the cache is
-    // released after the caller's first action (q136 idiom)
-    try {
-      val n = emb.count()
-      val k = kept.count()
-      val g = comps.agg(count(lit(1)), countDistinct(col("component"))).head()
-      val (nodes, nComp) = (g.getLong(0), g.getLong(1))
-      require(nodes > nComp,
-        s"semantic pair graph is edgeless ($nodes nodes, $nComp components)")
-      require(k == n - (nodes - nComp),
-        s"keeper-drop broke the component invariant: kept $k of $n, " +
-          s"graph $nodes nodes in $nComp components")
-    } catch {
-      case e: Throwable => graft.util.CacheRelease.release(comps); throw e
-    }
-    graft.util.CacheRelease.afterFirstAction(kept.orderBy("vec_id"), Seq(comps))
+    def rows(df: DataFrame, kind: String, component: Column) =
+      df.select(lit(kind).as("kind"), component.cast("long").as("component"))
+    val tagged = rows(emb, "vec", lit(null))
+      .unionByName(rows(kept(comps), "kept", lit(null)))
+      .unionByName(rows(comps, "node", col("component")))
+    def n(kind: String) = count_if(col("kind") === kind)
+    g.check(tagged)("vecs" -> n("vec"), "kept" -> n("kept"), "nodes" -> n("node"),
+      "components" -> count_distinct(col("component")))(
+      "semantic pair graph has an edge" -> (col("nodes") > col("components")),
+      "keeper-drop keeps one vec per component" ->
+        (col("kept") === col("vecs") - (col("nodes") - col("components"))))
+    kept(comps).orderBy("vec_id")
   }
 
   // IVF-PQ (FAISS's IVFADC-R layout): coarse cells bound the candidate
@@ -1247,14 +1213,12 @@ object PipelineQueries {
   // recall. Round 12: BOTH frozen quantizers, so probe + encode + ADC +
   // re-rank hash-match the DuckDB twin (`AnnSql.ivfPqTopK`); recall vs
   // the exact search stays require-gated in-query and specced in PqSpec.
-  val q109 = Q.checked("q109_ann_ivfpq_topk", AnnSql.ivfPqTopK) { (s, d) =>
-    requireAnnRecall(s, d,
+  val q109 = Q.gated("q109_ann_ivfpq_topk", AnnSql.ivfPqTopK) { (s, d, g) =>
+    gatedTopK(g, s, d,
       graft.operators.Pq.ivfPqTopKFrom(Tables.embeddings(s, d),
         frozenCoarse(s, d), frozenCodebooks(s, d),
         queryIds = 0L to 9L, k = 5, nProbe = 6, rerank = 50),
       floor = 0.6, label = "IVF-PQ")
-      .withColumn("rank", col("rank").cast("long"))
-      .orderBy("query_id", "neighbor_id")
   }
 
   // Text-analysis projection (all-Column, UDF-free) — the closed-form
@@ -1278,19 +1242,17 @@ object PipelineQueries {
   // fp(pad + text + pad) <= fp(text) for every doc long enough to have
   // a window. A wrong window slide/boundary term breaks this
   // containment invariant immediately.
-  val q38 = Q.checked("q38_text_fingerprint", FingerprintSql.sql) { (s, d) =>
+  val q38 = Q.gated("q38_text_fingerprint", FingerprintSql.sql) { (s, d, g) =>
     graft.functions.GraftFunctions.register(s)
     val fpr = graft.functions.GraftFunctions.rollingFingerprint _
-    val violations = Tables.documents(s, d)
+    val windows = Tables.documents(s, d)
       .filter(length(col("text")) >= TextAnalysis.FingerprintK)
       .select(
         fpr(col("text")).as("fp"),
         fpr(concat(lit("zzpadzz "), col("text"), lit(" zzpadzz")))
           .as("fp_wide"))
-      .filter(col("fp_wide") > col("fp"))
-      .count()
-    require(violations == 0,
-      s"window-containment invariant violated for $violations docs")
+    g.none(windows, "window-containment: fp(pad + text + pad) <= fp(text)")(
+      col("fp_wide") > col("fp"))
     TextAnalysis.analyze(Tables.documents(s, d))
       .select("doc_id", "fingerprint")
       .orderBy("doc_id")
@@ -1935,10 +1897,10 @@ object PipelineQueries {
   // q66, q70, q63, q55); the composition catches interface drift between
   // them. The near-dup pair graph and its transitive closure are computed
   // ONCE and shared between labeling and dropping (dropNearDupsByComponents),
-  // and the expensive stage outputs (c1, c2) are persisted for the single
-  // action and released after it (CacheRelease), so no stage re-scans the
+  // and the expensive stage outputs (c1, c2) are held for the single
+  // action and released after it (Q.gated), so no stage re-scans the
   // corpus prefix.
-  val q78 = Q.checked(
+  val q78 = Q.gated(
     "q78_curate_corpus_pipeline", {
       val Seq((emailRe, _), (ipRe, _), (phoneRe, _)) =
         graft.operators.Curation.PiiPatterns
@@ -2023,17 +1985,14 @@ object PipelineQueries {
                 CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
          FROM b GROUP BY source, shard, bin
          ORDER BY source, shard, bin"""
-    }) { (s, d) =>
-    import org.apache.spark.storage.StorageLevel
-    val c1 = Dedup.dropExactDups(dupCorpus(s, d))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    }) { (s, d, g) =>
+    val c1 = g.hold(Dedup.dropExactDups(dupCorpus(s, d)))
     // pair graph + transitive closure computed ONCE, shared between the
     // (implicit) labeling and the drop — the dropNearDupsByComponents
     // path the round-7 verdict asked for
     val comps = graft.operators.DupGraph
       .components(Dedup.jaccardPairs(c1, threshold = 0.5))
-    val c2 = graft.operators.DupGraph.dropNearDupsByComponents(c1, comps)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val c2 = g.hold(graft.operators.DupGraph.dropNearDupsByComponents(c1, comps))
     val bench = Tables.documents(s, d).filter(col("doc_id") % 37 === 0)
     // 8-gram contamination (vs q66's trigrams): the fixture's shared
     // synthetic vocabulary makes trigram overlap near-universal (it kept
@@ -2053,10 +2012,10 @@ object PipelineQueries {
     val c5 = graft.operators.Curation.mixtureSample(c4,
       fractions = Map("src0" -> 0.8, "src1" -> 0.5, "src2" -> 0.2),
       defaultFraction = 0.1)
-    val out = graft.operators.Curation.packBins(c5)
+    graft.operators.Curation.packBins(c5)
       .orderBy("source", "shard", "bin")
-    graft.util.CacheRelease.afterFirstAction(out, Seq(c1, c2))
   }
+
 
   // Unigram-LM quality score (CCNet-style filtering signal): every doc
   // scored by the arithmetic-mean add-1-smoothed probability of its
@@ -2252,32 +2211,31 @@ object PipelineQueries {
   // algebra (triples, margins, N, ln-MI + 0.001 threshold, SumMI, pair
   // intersection, Lin geometric mean) in DuckDB; the closed-form family
   // requires stay as the non-oracle-scale gates.
-  val q40 = Q.checked("q40_dirt_similarity", DirtSql.plantedSimilarity) {
-    (s, _) =>
+  val q40 = Q.gated("q40_dirt_similarity", DirtSql.plantedSimilarity) {
+    (s, _, g) =>
     import s.implicits._
-    val scored = DirtPipeline.run(s,
+    val scored = g.hold(DirtPipeline.run(s,
       s.createDataset(PlantedBiarc.lines),
-      PlantedBiarc.testSet).persist()
-    def family(tag: String) = scored.filter(col("path1").contains(tag))
-    val twinN = family("vtw").count()
-    val twinOff = family("vtw")
-      .filter(abs(col("score") - 1.0) > 1e-9).count()
-    require(twinN == 50 && twinOff == 0,
-      s"twin pairs: $twinN scored, $twinOff off the closed-form 1.0")
-    val djN = family("vdj").count()
-    val djOff = family("vdj").filter(col("score") =!= 0.0).count()
-    require(djN == 25 && djOff == 0,
-      s"disjoint pairs: $djN scored, $djOff off the closed-form 0.0")
-    val ptN = family("vpt").count()
-    val ptOff = family("vpt")
-      .filter(col("score") <= 0.0 || col("score") >= 1.0).count()
-    require(ptN == 25 && ptOff == 0,
-      s"partial pairs: $ptN scored, $ptOff outside (0, 1)")
-    graft.util.CacheRelease.afterFirstAction(
-      scored
-        .select(col("path1"), col("path2"), round(col("score"), 6).as("score"))
-        .orderBy("path1", "path2"),
-      Seq(scored))
+      PlantedBiarc.testSet))
+    def family(tag: String) = col("path1").contains(tag)
+    val (twin, disjoint, partial) = (family("vtw"), family("vdj"), family("vpt"))
+    val score = col("score")
+    g.check(scored)(
+      "twins" -> count_if(twin),
+      "twins_off" -> count_if(twin && abs(score - 1.0) > 1e-9),
+      "disjoint" -> count_if(disjoint),
+      "disjoint_off" -> count_if(disjoint && score =!= 0.0),
+      "partial" -> count_if(partial),
+      "partial_off" -> count_if(partial && (score <= 0.0 || score >= 1.0)))(
+      "50 twin pairs score the closed-form 1.0" ->
+        (col("twins") === 50 && col("twins_off") === 0),
+      "25 disjoint pairs score the closed-form 0.0" ->
+        (col("disjoint") === 25 && col("disjoint_off") === 0),
+      "25 partial pairs score inside (0, 1)" ->
+        (col("partial") === 25 && col("partial_off") === 0))
+    scored
+      .select(col("path1"), col("path2"), round(score, 6).as("score"))
+      .orderBy("path1", "path2")
   }
 
   // Record linkage: every customer-name pair within edit distance 1,
@@ -2417,30 +2375,25 @@ object PipelineQueries {
   // lossless roundtrip stays required IN-QUERY — stripping the </w>
   // markers must reproduce the whitespace-normalized input for EVERY
   // document (the property that makes n_subwords a true token count).
-  val q114 = Q.checked("q114_bpe_encode", BpeEncodeSql.sql) { (s, d) =>
+  val q114 = Q.gated("q114_bpe_encode", BpeEncodeSql.sql) { (s, d, g) =>
     import s.implicits._
     val docs = Tables.documents(s, d)
     val merges = graft.operators.FrozenVocab.bpeMerges.zipWithIndex
       .map { case ((l, r), i) => (i, l, r) }
       .toDF("rank", "left", "right")
-    val enc = graft.operators.Bpe.encodeDocs(docs, merges).persist()
-    val broken = enc
-      .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .filter(
-        trim(regexp_replace(
-          regexp_replace(col("subword_text"), lit(" "), lit("")),
-          lit(java.util.regex.Pattern.quote(graft.operators.Bpe.EndMark)),
-          lit(" "))) =!=
-          // non-empty-token join (round 14): trim+collapse kept an edge
-          // control char's phantom '' token as a stray space, firing
-          // this gate on adversarial input the kernel handles correctly
-          concat_ws(" ", filter(split(col("text"), "\\s+"),
-            t => length(t) > 0)))
-      .count()
-    require(broken == 0, s"BPE roundtrip broke on $broken docs")
-    graft.util.CacheRelease.afterFirstAction(
-      enc.select("doc_id", "n_words", "n_subwords").orderBy("doc_id"),
-      Seq(enc))
+    val enc = g.hold(graft.operators.Bpe.encodeDocs(docs, merges))
+    g.none(enc.join(docs.select("doc_id", "text"), "doc_id"),
+      "BPE roundtrip is lossless for every doc")(
+      trim(regexp_replace(
+        regexp_replace(col("subword_text"), lit(" "), lit("")),
+        lit(java.util.regex.Pattern.quote(graft.operators.Bpe.EndMark)),
+        lit(" "))) =!=
+        // non-empty-token join (round 14): trim+collapse kept an edge
+        // control char's phantom '' token as a stray space, firing
+        // this gate on adversarial input the kernel handles correctly
+        concat_ws(" ", filter(split(col("text"), "\\s+"),
+          t => length(t) > 0)))
+    enc.select("doc_id", "n_words", "n_subwords").orderBy("doc_id")
   }
 
   /** CDC latest-wins snapshot merge (q116): MERGE semantics over plain
@@ -2563,13 +2516,13 @@ object PipelineQueries {
     * document (concatenated pieces == whitespace-stripped input),
     * which is what makes `n_pieces` a true token count.
     */
-  val q119 = Q.checked("q119_unigram_encode", UnigramEncodeSql.sql) { (s, d) =>
+  val q119 = Q.gated("q119_unigram_encode", UnigramEncodeSql.sql) { (s, d, g) =>
     import s.implicits._
     val docs = Tables.documents(s, d)
     val slice = docs.filter(col("doc_id") % 5 === 0)
-    val table = graft.operators.Unigram
+    val table = g.hold(graft.operators.Unigram
       .train(slice, vocabSize = 120, iters = 2, maxPieceLen = 4,
-        seedSize = 300).persist()
+        seedSize = 300))
     val hist = graft.operators.Unigram.wordHistogram(slice)
       .as[(String, Long)].collect().toSeq
     val want = graft.operators.Unigram
@@ -2579,17 +2532,12 @@ object PipelineQueries {
     require(gotTable == want,
       s"distributed unigram train diverges from the sequential reference " +
         s"(|got|=${gotTable.size} |want|=${want.size})")
-    val enc = graft.operators.Unigram.encodeDocs(docs, table).persist()
-    val broken = enc
-      .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .filter(
-        regexp_replace(col("piece_text"), lit(" "), lit("")) =!=
-          regexp_replace(trim(col("text")), lit("\\s+"), lit("")))
-      .count()
-    require(broken == 0, s"unigram roundtrip broke on $broken docs")
-    graft.util.CacheRelease.afterFirstAction(
-      enc.select("doc_id", "n_words", "n_pieces").orderBy("doc_id"),
-      Seq(enc, table))
+    val enc = g.hold(graft.operators.Unigram.encodeDocs(docs, table))
+    g.none(enc.join(docs.select("doc_id", "text"), "doc_id"),
+      "unigram roundtrip is lossless for every doc")(
+      regexp_replace(col("piece_text"), lit(" "), lit("")) =!=
+        regexp_replace(trim(col("text")), lit("\\s+"), lit("")))
+    enc.select("doc_id", "n_words", "n_pieces").orderBy("doc_id")
   }
 
   /** Within-document repeated-bigram span removal (q120) — C4's
@@ -2659,7 +2607,7 @@ object PipelineQueries {
   // FROZEN committed components (drift-gated equal to this live fit by
   // FrozenCentroidsSpec), so the moment pass, Jacobi eigensolver and
   // projection all hash-compare; outputs round to 6 on both engines.
-  val q121 = Q.checked("q121_pca_project", AnnSql.pcaProject) { (s, d) =>
+  val q121 = Q.gated("q121_pca_project", AnnSql.pcaProject) { (s, d, g) =>
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val comps = graft.operators.Pca.fitTopK(emb, k = 4)
@@ -2688,20 +2636,18 @@ object PipelineQueries {
     val maxCoordVar = (0 until dd).map(i => cov(i * dd + i)).max
     require(rows(0)._2 >= maxCoordVar - 1e-9,
       s"top eigenvalue ${rows(0)._2} below max coordinate variance $maxCoordVar")
-    val proj = graft.operators.Pca.project(emb, comps).persist()
-    val varRow = proj.agg(
-      avg(col("pc0") * col("pc0")), avg(col("pc1") * col("pc1")),
-      avg(col("pc2") * col("pc2")), avg(col("pc3") * col("pc3"))).head()
-    for (i <- 0 until 4) {
+    val proj = g.hold(graft.operators.Pca.project(emb, comps))
+    val pcs = 0 until 4
+    g.check(proj)(pcs.map(i =>
+      s"var_pc$i" -> avg(col(s"pc$i") * col(s"pc$i"))): _*)(pcs.map { i =>
       val lam = rows(i)._2
-      require(math.abs(varRow.getDouble(i) - lam) <= 1e-6 * math.max(1.0, lam),
-        s"projected variance ${varRow.getDouble(i)} != lambda $lam for pc$i")
-    }
-    graft.util.CacheRelease.afterFirstAction(
-      proj.select(col("vec_id"),
-        round(col("pc0"), 6).as("pc0"), round(col("pc1"), 6).as("pc1"),
-        round(col("pc2"), 6).as("pc2"), round(col("pc3"), 6).as("pc3"))
-        .orderBy("vec_id"), Seq(proj))
+      s"projected variance of pc$i == lambda $lam" ->
+        (abs(col(s"var_pc$i") - lam) <= 1e-6 * math.max(1.0, lam))
+    }: _*)
+    proj.select(col("vec_id"),
+      round(col("pc0"), 6).as("pc0"), round(col("pc1"), 6).as("pc1"),
+      round(col("pc2"), 6).as("pc2"), round(col("pc3"), 6).as("pc3"))
+      .orderBy("vec_id")
   }
 
   /** Weighted sampling without replacement (q122, Efraimidis–Spirakis):
@@ -2787,11 +2733,11 @@ object PipelineQueries {
     * the float totals: a two-term merged sum may differ from the
     * one-pass sum in the last ulp).
     */
-  val q125 = Q.checked(
+  val q125 = Q.gated(
     "q125_incremental_agg_merge",
     """SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS cnt,
               round(sum(o_totalprice), 2) AS total
-       FROM orders GROUP BY 1 ORDER BY 1""") { (s, d) =>
+       FROM orders GROUP BY 1 ORDER BY 1""") { (s, d, g) =>
     val orders = Tables.orders(s, d)
     val cutoff = "1997-01-01"
     val snap = orders.filter(col("o_orderdate") < lit(cutoff))
@@ -2799,22 +2745,17 @@ object PipelineQueries {
       .agg(count(lit(1)).as("cnt"), sum("o_totalprice").as("total"))
     val delta = orders.filter(col("o_orderdate") >= lit(cutoff))
       .select(col("o_custkey").as("k"), col("o_totalprice"))
-    val merged = graft.operators.Cdc
-      .mergeAggDelta(snap, delta, "k", "o_totalprice").persist()
+    val merged = g.hold(graft.operators.Cdc
+      .mergeAggDelta(snap, delta, "k", "o_totalprice"))
     val full = orders.groupBy(col("o_custkey").as("k"))
       .agg(count(lit(1)).as("cnt"), sum("o_totalprice").as("total"))
-    val bad = merged.alias("m")
-      .join(full.alias("f"), Seq("k"), "full_outer")
-      .filter(col("m.cnt").isNull || col("f.cnt").isNull ||
+    g.none(merged.alias("m").join(full.alias("f"), Seq("k"), "full_outer"),
+      "incremental merge equals the full recompute on every key")(
+      col("m.cnt").isNull || col("f.cnt").isNull ||
         col("m.cnt") =!= col("f.cnt") ||
         abs(col("m.total") - col("f.total")) > 1e-6)
-      .count()
-    require(bad == 0,
-      s"incremental merge diverges from full recompute on $bad keys")
-    graft.util.CacheRelease.afterFirstAction(
-      merged.select(col("k"), col("cnt"),
-        round(col("total"), 2).as("total")).orderBy("k"),
-      Seq(merged))
+    merged.select(col("k"), col("cnt"),
+      round(col("total"), 2).as("total")).orderBy("k")
   }
 
   /** Sequence packing with position ids (q126): concat-then-split to
@@ -2824,7 +2765,7 @@ object PipelineQueries {
     * sequence but each shard's last holds exactly 128 tokens (the
     * packing invariant).
     */
-  val q126 = Q.checked(
+  val q126 = Q.gated(
     "q126_pack_sequences",
     """WITH d AS (SELECT doc_id,
                     ('0x' || substr(md5('graft' || text), 1, 8))::BIGINT
@@ -2846,19 +2787,16 @@ object PipelineQueries {
               greatest(g_start, seq_id * 128) - g_start AS pos_start,
               least(g_start + n_toks, (seq_id + 1) * 128)
                 - greatest(g_start, seq_id * 128) AS span_toks
-       FROM sp ORDER BY shard, seq_id, seq_off""") { (s, d) =>
-    val packed = graft.operators.Curation
-      .packSequences(Tables.documents(s, d), seqLen = 128, nShards = 8)
-      .persist()
+       FROM sp ORDER BY shard, seq_id, seq_off""") { (s, d, g) =>
+    val packed = g.hold(graft.operators.Curation
+      .packSequences(Tables.documents(s, d), seqLen = 128, nShards = 8))
     val lastSeq = packed.groupBy("shard").agg(max("seq_id").as("last_seq"))
-    val notFull = packed.groupBy("shard", "seq_id")
+    val perSeq = packed.groupBy("shard", "seq_id")
       .agg(sum("span_toks").as("toks"))
       .join(lastSeq, Seq("shard"))
-      .filter(col("seq_id") < col("last_seq") && col("toks") =!= 128)
-      .count()
-    require(notFull == 0, s"$notFull non-final sequences not exactly full")
-    graft.util.CacheRelease.afterFirstAction(
-      packed.orderBy("shard", "seq_id", "seq_off"), Seq(packed))
+    g.none(perSeq, "every non-final sequence holds exactly 128 tokens")(
+      col("seq_id") < col("last_seq") && col("toks") =!= 128)
+    packed.orderBy("shard", "seq_id", "seq_off")
   }
 
   /** Unicode normalization (q128): NFC composition (native codegen
@@ -2869,7 +2807,7 @@ object PipelineQueries {
     * ASCII); the in-query require checks every normalized text ends
     * with the PRECOMPOSED form.
     */
-  val q128 = Q.checked(
+  val q128 = Q.gated(
     "q128_text_nfc_normalize",
     """SELECT doc_id,
               trim(regexp_replace(regexp_replace(
@@ -2884,15 +2822,15 @@ object PipelineQueries {
                       || ' ' || chr(7)),
                     '[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]', '', 'g'),
                     '[\s\x0B]+', ' ', 'g'))) AS BIGINT) AS removed_chars
-       FROM documents ORDER BY doc_id""") { (s, d) =>
+       FROM documents ORDER BY doc_id""") { (s, d, g) =>
     graft.functions.GraftFunctions.register(s)
     val planted = Tables.documents(s, d).select(col("doc_id"),
       concat(col("text"), lit(" caf"), lit("e\u0301"), lit(" \u0007"))
         .as("text"))
-    val out = graft.operators.TextAnalysis.normalizeText(planted).persist()
-    val bad = out.filter(!col("norm_text").endsWith(" caf\u00e9")).count()
-    require(bad == 0, s"$bad rows missing the composed café suffix")
-    graft.util.CacheRelease.afterFirstAction(out.orderBy("doc_id"), Seq(out))
+    val out = g.hold(graft.operators.TextAnalysis.normalizeText(planted))
+    g.none(out, "every row ends with the composed café suffix")(
+      !col("norm_text").endsWith(" caf\u00e9"))
+    out.orderBy("doc_id")
   }
 
   /** Hard-negative mining (q129): per query vector, the exact top-5
@@ -3073,7 +3011,7 @@ object PipelineQueries {
     * come back `exact_dup` pointing at its origin, every +2e6
     * tail-append `near_dup`, every +3e6 reversal `new`.
     */
-  val q136 = Q.checked(
+  val q136 = Q.gated(
     "q136_incremental_ingest",
     s"""WITH batch AS (SELECT * FROM $incrBatchSql AS b),
        digests AS (SELECT md5(text) AS digest, min(doc_id) AS dup_of
@@ -3107,28 +3045,21 @@ object PipelineQueries {
                    ELSE 'new' END AS label,
               coalesce(ex.exact_of, near.near_of) AS dup_of
        FROM ex LEFT JOIN near ON near.doc_id = ex.doc_id
-       ORDER BY ex.doc_id""") { (s, d) =>
-    val out = Dedup.incrementalLabel(
-      Tables.documents(s, d), incrBatch(s, d), threshold = 0.7).persist()
-    val wrongExact = out
-      .filter(col("doc_id").between(1000000L, 1999999L) &&
+       ORDER BY ex.doc_id""") { (s, d, g) =>
+    val out = g.hold(Dedup.incrementalLabel(
+      Tables.documents(s, d), incrBatch(s, d), threshold = 0.7))
+    g.check(out)(
+      "wrong_exact" -> count_if(col("doc_id").between(1000000L, 1999999L) &&
         (col("label") =!= "exact_dup" ||
-          col("dup_of") =!= col("doc_id") - 1000000L))
-      .count()
-    require(wrongExact == 0,
-      s"$wrongExact planted exact copies not labeled exact_dup@origin")
-    val wrongNear = out
-      .filter(col("doc_id").between(2000000L, 2999999L) &&
-        col("label") =!= "near_dup")
-      .count()
-    require(wrongNear == 0,
-      s"$wrongNear planted tail-appended docs not labeled near_dup")
-    val wrongNew = out
-      .filter(col("doc_id") >= 3000000L && col("label") =!= "new")
-      .count()
-    require(wrongNew == 0,
-      s"$wrongNew reversed docs not labeled new")
-    graft.util.CacheRelease.afterFirstAction(out.orderBy("doc_id"), Seq(out))
+          col("dup_of") =!= col("doc_id") - 1000000L)),
+      "wrong_near" -> count_if(col("doc_id").between(2000000L, 2999999L) &&
+        col("label") =!= "near_dup"),
+      "wrong_new" -> count_if(col("doc_id") >= 3000000L &&
+        col("label") =!= "new"))(
+      "planted exact copies are exact_dup@origin" -> (col("wrong_exact") === 0),
+      "planted tail-appended docs are near_dup" -> (col("wrong_near") === 0),
+      "reversed docs are new" -> (col("wrong_new") === 0))
+    out.orderBy("doc_id")
   }
 
   /** Cluster-balanced diversity sampling (q137): an exact per-k-means-cell
@@ -3140,26 +3071,22 @@ object PipelineQueries {
     * from 1, never above the quota, one rank per id) and the spec pins
     * exact per-cell counts against an independent assignment.
     */
-  val q137 = Q.checked("q137_cluster_diversity_sample",
-    AnnSql.diversitySample) { (s, d) =>
-    val out = graft.operators.ClusterSample
+  val q137 = Q.gated("q137_cluster_diversity_sample",
+    AnnSql.diversitySample) { (s, d, g) =>
+    val out = g.hold(graft.operators.ClusterSample
       .diversitySampleFrom(Tables.embeddings(s, d),
-        frozenCoarse(s, d), nPerCluster = 5)
-      .persist()
-    val overQuota = out.groupBy("cell").count()
-      .filter(col("count") > 5).count()
-    require(overQuota == 0, s"$overQuota cells exceed the quota")
-    // ranks are dense 1..k(cell): max rank == cell count, no duplicates
-    val badRanks = out.groupBy("cell")
+        frozenCoarse(s, d), nPerCluster = 5))
+    val perCell = out.groupBy("cell")
       .agg(max("rn").as("mx"), count(lit(1)).as("n"),
         countDistinct("rn").as("nd"))
-      .filter(col("mx") =!= col("n") || col("nd") =!= col("n"))
-      .count()
-    require(badRanks == 0, s"$badRanks cells with non-dense ranks")
-    val cells = out.select("cell").distinct().count()
-    require(cells >= 8, s"only $cells of 16 cells represented")
-    graft.util.CacheRelease.afterFirstAction(
-      out.orderBy("cell", "rn"), Seq(out))
+    g.check(perCell)("over_quota" -> count_if(col("n") > 5),
+      // ranks are dense 1..k(cell): max rank == cell count, no duplicates
+      "bad_ranks" -> count_if(col("mx") =!= col("n") || col("nd") =!= col("n")),
+      "cells" -> count(lit(1)))(
+      "no cell exceeds the quota of 5" -> (col("over_quota") === 0),
+      "ranks are dense in every cell" -> (col("bad_ranks") === 0),
+      ">= 8 of 16 cells represented" -> (col("cells") >= 8))
+    out.orderBy("cell", "rn")
   }
 
   /** Image resize (q138): exact integer area-average downscale of the
@@ -3484,25 +3411,21 @@ object PipelineQueries {
     * (register loss, batch double-count) lands far outside the band at
     * any scale; a plausible drift trips the pin.
     */
-  val q147 = Q.checked("q147_hll_distinct_sketch",
-    FrozenSketchSql.q147) { (s, d) =>
+  val q147 = Q.gated("q147_hll_distinct_sketch",
+    FrozenSketchSql.q147) { (s, d, g) =>
     val lgK = 12
     // raw single-split read: the frozen HLL estimates are HIP
     // (stream-order) dependent — see Tables.raw
-    val out = graft.operators.DistinctSketch
+    val out = g.hold(graft.operators.DistinctSketch
       .bySource(Tables.raw(s, d, "documents"), lgK = lgK)
       .select(col("source"), col("n_exact"),
         col("est_whole").cast("long").as("est_whole"),
-        col("est_merged").cast("long").as("est_merged"))
-      .orderBy("source")
+        col("est_merged").cast("long").as("est_merged")))
     val band = 4.0 * graft.operators.DistinctSketch.rsd(lgK)
-    val bad = out.filter(
+    g.none(out, "every HLL estimate within 4·rsd of exact")(
       abs(col("est_whole") - col("n_exact")) > col("n_exact") * band ||
         abs(col("est_merged") - col("n_exact")) > col("n_exact") * band)
-      .count()
-    require(bad == 0L,
-      s"$bad sources have an HLL estimate outside the 4·rsd band of exact")
-    out
+    out.orderBy("source")
   }
 
   // Duplicate-span REMOVAL (q149): the Lee et al. span surgery that
@@ -3561,24 +3484,19 @@ object PipelineQueries {
     * makes `n_pieces` a true token count at sf0.1 too, where the
     * corpus contains words the sf0.01-trained table never saw.
     */
-  val q150 = Q.checked("q150_unigram_encode_frozen", UnigramEncodeSql.sql) {
-    (s, d) =>
+  val q150 = Q.gated("q150_unigram_encode_frozen", UnigramEncodeSql.sql) {
+    (s, d, g) =>
       import s.implicits._
       val docs = Tables.documents(s, d)
       val table = graft.operators.FrozenVocab.unigramTable
         .toDF("piece", "logp")
-      val enc = graft.operators.Unigram
-        .encodeDocs(docs, table, maxPieceLen = 4).persist()
-      val broken = enc
-        .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
-        .filter(
-          regexp_replace(col("piece_text"), lit(" "), lit("")) =!=
-            regexp_replace(trim(col("text")), lit("\\s+"), lit("")))
-        .count()
-      require(broken == 0, s"frozen unigram roundtrip broke on $broken docs")
-      graft.util.CacheRelease.afterFirstAction(
-        enc.select("doc_id", "n_words", "n_pieces").orderBy("doc_id"),
-        Seq(enc))
+      val enc = g.hold(graft.operators.Unigram
+        .encodeDocs(docs, table, maxPieceLen = 4))
+      g.none(enc.join(docs.select("doc_id", "text"), "doc_id"),
+        "frozen unigram roundtrip is lossless for every doc")(
+        regexp_replace(col("piece_text"), lit(" "), lit("")) =!=
+          regexp_replace(trim(col("text")), lit("\\s+"), lit("")))
+      enc.select("doc_id", "n_words", "n_pieces").orderBy("doc_id")
   }
 
   /** Per-source training-token accounting (q153): encode the corpus
@@ -3709,26 +3627,21 @@ object PipelineQueries {
     * input (with a frozen vocabulary, zero-UNK is a corpus property the
     * ORACLE now checks via n_unk rather than a hard require).
     */
-  val q148 = Q.checked("q148_wordpiece_encode", WordPieceEncodeSql.sql) {
-    (s, d) =>
+  val q148 = Q.gated("q148_wordpiece_encode", WordPieceEncodeSql.sql) {
+    (s, d, g) =>
       val docs = Tables.documents(s, d)
       val wp = graft.operators.WordPiece
-      val enc = wp.encodeDocs(docs,
-        graft.operators.FrozenVocab.wordPieceVocab.toSet).persist()
-      val broken = enc
-        .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
-        .filter(
-          regexp_replace(col("subword_text"), lit(" ##"), lit("")) =!=
-            // non-empty-token join (round 14) — see the q114 gate
-            concat_ws(" ", filter(split(col("text"), "\\s+"),
-              t => length(t) > 0)) &&
-            col("n_unk") === 0)
-        .count()
-      require(broken == 0, s"WordPiece roundtrip broke on $broken docs")
-      graft.util.CacheRelease.afterFirstAction(
-        enc.select("doc_id", "n_words", "n_subwords", "n_unk")
-          .orderBy("doc_id"),
-        Seq(enc))
+      val enc = g.hold(wp.encodeDocs(docs,
+        graft.operators.FrozenVocab.wordPieceVocab.toSet))
+      g.none(enc.join(docs.select("doc_id", "text"), "doc_id"),
+        "WordPiece roundtrip is lossless for every n_unk = 0 doc")(
+        regexp_replace(col("subword_text"), lit(" ##"), lit("")) =!=
+          // non-empty-token join (round 14) — see the q114 gate
+          concat_ws(" ", filter(split(col("text"), "\\s+"),
+            t => length(t) > 0)) &&
+          col("n_unk") === 0)
+      enc.select("doc_id", "n_words", "n_subwords", "n_unk")
+        .orderBy("doc_id")
   }
 
   // Output manifest (q142): per-(lang, source) order-independent
@@ -3774,19 +3687,15 @@ object PipelineQueries {
     * would localize poorly: script leakage (no `var t` may survive) and
     * the entity decode (every doc's h1 must yield a literal ` & `).
     */
-  val q154 = Q.checked(
-    "q154_html_extract_text", HtmlSql.extractTextSql) { (s, d) =>
+  val q154 = Q.gated(
+    "q154_html_extract_text", HtmlSql.extractTextSql) { (s, d, g) =>
     val docs = Tables.documents(s, d)
-    val res = graft.operators.HtmlExtract
-      .extractText(docs.withColumn("html", syntheticHtml))
-      .persist()
-    val leaked = res.filter(
+    val res = g.hold(graft.operators.HtmlExtract
+      .extractText(docs.withColumn("html", syntheticHtml)))
+    g.none(res, "no script leaks and every entity decodes")(
       col("clean_text").contains("var t") ||
-        !col("clean_text").contains(" & ")).count()
-    require(leaked == 0,
-      s"q154: script leaked or entity undecoded in $leaked docs")
-    graft.util.CacheRelease.afterFirstAction(
-      res.orderBy("doc_id"), Seq(res))
+        !col("clean_text").contains(" & "))
+    res.orderBy("doc_id")
   }
 
   /** jusText-lite boilerplate-block filter (q155): segment on
@@ -3798,18 +3707,15 @@ object PipelineQueries {
     * path; the in-query gate pins the boilerplate actually being
     * dropped (every doc loses at least the nav and title blocks).
     */
-  val q155 = Q.checked(
-    "q155_html_boilerplate_blocks", HtmlSql.extractBlocksSql) { (s, d) =>
+  val q155 = Q.gated(
+    "q155_html_boilerplate_blocks", HtmlSql.extractBlocksSql) { (s, d, g) =>
     val docs = Tables.documents(s, d)
-    val res = graft.operators.HtmlExtract
-      .extractBlocks(docs.withColumn("html", syntheticHtml))
-      .persist()
-    val bad = res.filter(
+    val res = g.hold(graft.operators.HtmlExtract
+      .extractBlocks(docs.withColumn("html", syntheticHtml)))
+    g.none(res, "every doc drops its boilerplate blocks")(
       col("n_blocks") === 0 || col("n_dropped") < 2 ||
-        col("clean_text").contains("Home About Contact")).count()
-    require(bad == 0, s"q155: boilerplate survived in $bad docs")
-    graft.util.CacheRelease.afterFirstAction(
-      res.orderBy("doc_id"), Seq(res))
+        col("clean_text").contains("Home About Contact"))
+    res.orderBy("doc_id")
   }
 
   /** WARC record parsing (q156): the CommonCrawl container grammar —
@@ -3821,7 +3727,7 @@ object PipelineQueries {
     * payload round-trips as an md5 digest so the hash compare certifies
     * byte-exact payload extraction without shipping the text twice.
     */
-  val q156 = Q.checked(
+  val q156 = Q.gated(
     "q156_warc_parse",
     """WITH r AS (SELECT doc_id,
          'WARC/1.0' || chr(13) || chr(10) ||
@@ -3852,7 +3758,7 @@ object PipelineQueries {
               CAST(length(payload) AS BIGINT) AS payload_len,
               content_length = CAST(length(payload) AS BIGINT) AS len_ok,
               md5(payload) AS payload_md5
-       FROM x ORDER BY doc_id""") { (s, d) =>
+       FROM x ORDER BY doc_id""") { (s, d, g) =>
     val crlf = lit("\r\n")
     val record = concat(
       lit("WARC/1.0"), crlf,
@@ -3864,14 +3770,11 @@ object PipelineQueries {
       col("doc_id").cast("string"), crlf,
       lit("Content-Length: "), length(col("text")).cast("string"),
       crlf, crlf, col("text"))
-    val res = graft.operators.Warc
-      .parseRecords(Tables.documents(s, d).withColumn("record", record))
-      .persist()
-    val bad = res.filter(!col("len_ok") ||
-      col("warc_type") =!= "response").count()
-    require(bad == 0, s"q156: $bad truncated or mistyped records")
-    graft.util.CacheRelease.afterFirstAction(
-      res.orderBy("doc_id"), Seq(res))
+    val res = g.hold(graft.operators.Warc
+      .parseRecords(Tables.documents(s, d).withColumn("record", record)))
+    g.none(res, "no truncated or mistyped records")(
+      !col("len_ok") || col("warc_type") =!= "response")
+    res.orderBy("doc_id")
   }
 
   /** CCNet perplexity bucketing (q157): the Wenzek et al. 2020
@@ -3950,8 +3853,8 @@ object PipelineQueries {
     * stage, sharing the q155 block CTEs verbatim; the in-query gate
     * pins the WARC round-trip (`len_ok` for every record).
     */
-  val q158 = Q.checked(
-    "q158_ingest_pipeline", HtmlSql.ingestPipelineSql) { (s, d) =>
+  val q158 = Q.gated(
+    "q158_ingest_pipeline", HtmlSql.ingestPipelineSql) { (s, d, g) =>
     val docs = Tables.documents(s, d)
     val withHtml = docs.withColumn("html", syntheticHtml)
     val crlf = lit("\r\n")
@@ -3963,9 +3866,8 @@ object PipelineQueries {
       col("doc_id").cast("string"), crlf,
       lit("Content-Length: "), length(col("html")).cast("string"),
       crlf, crlf, col("html")))
-    val truncated = graft.operators.Warc.parseRecords(recs)
-      .filter(!col("len_ok")).count()
-    require(truncated == 0, s"q158: $truncated records failed round-trip")
+    g.none(graft.operators.Warc.parseRecords(recs),
+      "every WARC record round-trips its payload")(!col("len_ok"))
     val rehtml = recs.select(col("doc_id"),
       graft.operators.Warc.payload(col("record")).as("html"))
     val perdoc = graft.operators.HtmlExtract.extractBlocks(rehtml)
@@ -3993,7 +3895,7 @@ object PipelineQueries {
     * verbatim. The in-query gate pins match soundness: every reported
     * prefix must literally prefix its path.
     */
-  val q159 = Q.checked(
+  val q159 = Q.gated(
     "q159_prefix_match_join",
     """WITH p AS (SELECT doc_id,
             '/page/' || CAST(doc_id % 13 AS VARCHAR) || '/sec/' ||
@@ -4017,7 +3919,7 @@ object PipelineQueries {
               CAST(coalesce(length(matched_prefix), 0) AS BIGINT)
                 AS match_len
        FROM p LEFT JOIN m USING (doc_id)
-       ORDER BY p.doc_id""") { (s, d) =>
+       ORDER BY p.doc_id""") { (s, d, g) =>
     import s.implicits._
     val docs = Tables.documents(s, d)
     val items = docs.select(col("doc_id"),
@@ -4026,14 +3928,12 @@ object PipelineQueries {
     val rules = ((0 until 7).map(i => s"/page/$i") ++
       (for (i <- 0 until 3; j <- 0 until 2)
         yield s"/page/$i/sec/$j")).toDF("prefix")
-    val res = graft.operators.PrefixJoin
-      .longestPrefixMatch(items, rules).persist()
-    val unsound = res.filter(col("match_len") > 0 &&
-      col("path").substr(lit(1), col("match_len"))
-        =!= col("matched_prefix")).count()
-    require(unsound == 0, s"q159: $unsound matches are not path prefixes")
-    graft.util.CacheRelease.afterFirstAction(
-      res.orderBy("doc_id"), Seq(res))
+    val res = g.hold(graft.operators.PrefixJoin
+      .longestPrefixMatch(items, rules))
+    g.none(res, "every match is a path prefix")(
+      col("match_len") > 0 &&
+        col("path").substr(lit(1), col("match_len")) =!= col("matched_prefix"))
+    res.orderBy("doc_id")
   }
 
   /** Content-defined chunk dedup (q160): rsync/FastCDC-family boundaries
@@ -4047,10 +3947,10 @@ object PipelineQueries {
     * chunk lengths sum to the text length) and the copy property (every
     * augmented copy has n_dup_chunks == n_chunks).
     */
-  val q160 = Q.checked("q160_dedup_cdc_chunks", CdcChunkSql.sql) { (s, d) =>
+  val q160 = Q.gated("q160_dedup_cdc_chunks", CdcChunkSql.sql) { (s, d, g) =>
     val corpus = dupCorpus(s, d)
-    val chunks = graft.operators.Chunking
-      .contentDefinedChunks(corpus).persist()
+    val chunks = g.hold(graft.operators.Chunking
+      .contentDefinedChunks(corpus))
     val dig = chunks.select(col("id"),
       md5(col("chunk").cast("binary")).as("dg"),
       length(col("chunk")).cast("long").as("clen"))
@@ -4066,7 +3966,7 @@ object PipelineQueries {
         sum("clen").as("sum_len"),
         max("clen").as("max_len"))
       .withColumnRenamed("id", "doc_id")
-    val res = corpus
+    val res = g.hold(corpus
       .select(col("doc_id"), length(col("text")).cast("long").as("tlen"))
       .join(perdoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -4074,17 +3974,15 @@ object PipelineQueries {
         coalesce(col("n_dup_chunks"), lit(0L)).as("n_dup_chunks"),
         coalesce(col("sum_len"), lit(0L)).as("sum_len"),
         coalesce(col("max_len"), lit(0L)).as("max_len"),
-        coalesce(col("tlen"), lit(0L)).as("tlen"))
-      .persist()
-    val lost = res.filter(col("sum_len") =!= col("tlen")).count()
-    require(lost == 0, s"q160: chunking lost characters in $lost docs")
-    val copies = res.filter(col("doc_id") >= 100000 &&
-      col("n_dup_chunks") =!= col("n_chunks")).count()
-    require(copies == 0, s"q160: $copies augmented copies not fully duplicated")
-    graft.util.CacheRelease.afterFirstAction(
-      res.select("doc_id", "n_chunks", "n_dup_chunks", "sum_len", "max_len")
-        .orderBy("doc_id"),
-      Seq(chunks, res))
+        coalesce(col("tlen"), lit(0L)).as("tlen")))
+    g.check(res)("lost" -> count_if(col("sum_len") =!= col("tlen")),
+      "copies_not_dup" -> count_if(col("doc_id") >= 100000 &&
+        col("n_dup_chunks") =!= col("n_chunks")))(
+      "chunk lengths sum to the text length in every doc" -> (col("lost") === 0),
+      "every augmented copy is fully duplicated" ->
+        (col("copies_not_dup") === 0))
+    res.select("doc_id", "n_chunks", "n_dup_chunks", "sum_len", "max_len")
+      .orderBy("doc_id")
   }
 
   /** Per-registrable-domain crawl cap (q161): the RefinedWeb/C4 budget
@@ -4096,7 +3994,7 @@ object PipelineQueries {
     * oracle replays domain extraction and the md5-rank row_number cut;
     * the in-query gate pins the cap itself (no domain exceeds it).
     */
-  val q161 = Q.checked(
+  val q161 = Q.gated(
     "q161_domain_cap",
     """WITH u AS (
          SELECT doc_id,
@@ -4131,19 +4029,17 @@ object PipelineQueries {
                                      ORDER BY rk, doc_id) AS rn
                 FROM ranked)
        SELECT doc_id, domain FROM keep WHERE rn <= 60
-       ORDER BY doc_id""") { (s, d) =>
+       ORDER BY doc_id""") { (s, d, g) =>
     val docs = Tables.documents(s, d)
       .withColumn("url", syntheticUrl)
       .withColumn("domain",
         graft.operators.Curation.registrableDomain(col("url")))
-    val kept = graft.operators.Curation
+    val kept = g.hold(graft.operators.Curation
       .sourceCap(docs, maxPerSource = 60, sourceCol = "domain")
-      .select("doc_id", "domain").persist()
-    val over = kept.groupBy("domain").agg(count(lit(1)).as("n"))
-      .filter(col("n") > 60).count()
-    require(over == 0, s"q161: $over domains exceed the cap")
-    graft.util.CacheRelease.afterFirstAction(
-      kept.orderBy("doc_id"), Seq(kept))
+      .select("doc_id", "domain"))
+    g.none(kept.groupBy("domain").agg(count(lit(1)).as("n")),
+      "no domain exceeds the cap of 60")(col("n") > 60)
+    kept.orderBy("doc_id")
   }
 
   /** Trained language ID (q162, VERDICT r12 #3): the hashed-char-n-gram

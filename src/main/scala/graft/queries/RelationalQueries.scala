@@ -1144,23 +1144,24 @@ object RelationalQueries {
     * reduced the probe side, so a degraded (fpp→1) filter fails loudly
     * instead of silently running the unreduced join.
     */
-  val q131 = Q.checked(
+  val q131 = Q.gated(
     "q131_bloom_prefilter_join",
     """SELECT l.l_orderkey, l.l_linenumber, o.o_orderpriority,
               round(l.l_extendedprice, 2) AS price
        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
        WHERE o.o_orderpriority = '1-URGENT'
-       ORDER BY l.l_orderkey, l.l_linenumber, price""") { (s, d) =>
+       ORDER BY l.l_orderkey, l.l_linenumber, price""") { (s, d, g) =>
     val urgent = Tables.orders(s, d)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey", "o_orderpriority")
     val li = Tables.lineitem(s, d)
-    val pre = graft.operators.BloomJoin.prefilterProbe(
-      li, urgent, probeKey = "l_orderkey", buildKey = "o_orderkey")
-    val kept = pre.count()
-    val total = li.count()
-    require(kept < total,
-      s"bloom prefilter kept $kept of $total probe rows — no reduction")
+    val pre = g.hold(graft.operators.BloomJoin.prefilterProbe(
+      li, urgent, probeKey = "l_orderkey", buildKey = "o_orderkey"))
+    val tagged = pre.select(lit(true).as("kept"))
+      .unionByName(li.select(lit(false).as("kept")))
+    g.check(tagged)("kept" -> count_if(col("kept")),
+      "total" -> count_if(!col("kept")))(
+      "bloom prefilter reduces the probe side" -> (col("kept") < col("total")))
     pre.join(urgent, col("l_orderkey") === col("o_orderkey"))
       .select(col("l_orderkey"), col("l_linenumber"), col("o_orderpriority"),
         round(col("l_extendedprice"), 2).as("price"))
@@ -1174,7 +1175,7 @@ object RelationalQueries {
     * integer quantile pick; the require checks the sketch's declared
     * value-error bound (one bin width) against the exact percentile.
     */
-  val q134 = Q.checked(
+  val q134 = Q.gated(
     "q134_histogram_quantiles",
     """WITH b AS (SELECT CAST(least(greatest(floor(l_extendedprice / 100.0),
                                              0), 1099) AS BIGINT) AS bin
@@ -1191,21 +1192,21 @@ object RelationalQueries {
               round(min(c.bin) * 100.0, 6) AS est
        FROM q JOIN c ON c.cum >= (c.total * q.q_permille + 999) // 1000
        GROUP BY q.q_permille
-       ORDER BY q.q_permille""") { (s, d) =>
-    import s.implicits._
+       ORDER BY q.q_permille""") { (s, d, g) =>
     val li = Tables.lineitem(s, d)
-    val out = graft.operators.HistogramSketch.quantiles(
-        li, valueCol = "l_extendedprice", lo = 0.0, hi = 110000.0,
-        nBins = 1100, qsPermille = Seq(250, 500, 900, 990))
-      .orderBy("q_permille")
+    val qs = Seq(250, 500, 900, 990)
+    val out = g.hold(graft.operators.HistogramSketch.quantiles(
+      li, valueCol = "l_extendedprice", lo = 0.0, hi = 110000.0,
+      nBins = 1100, qsPermille = qs))
     // declared guarantee: each estimate (bin lower edge) sits within one
     // bin width of the exact percentile
-    val exact = li.agg(
-        expr("percentile(l_extendedprice, array(0.25, 0.5, 0.9, 0.99))"))
-      .as[Seq[Double]].head()
-    val ests = out.select("est").as[Double].collect()
-    val bad = ests.zip(exact).filter { case (e, x) => math.abs(e - x) > 100.0 }
-    require(bad.isEmpty, s"sketch outside one-bin bound: ${bad.toSeq}")
-    out
+    val exact = li.agg(expr("percentile(l_extendedprice, " +
+      s"array(${qs.map(_ / 1000.0).mkString(", ")}))").as("exact"))
+    val exactOf = element_at(col("exact"),
+      array_position(typedLit(qs), col("q_permille")).cast("int"))
+    g.none(out.crossJoin(exact),
+      "every estimate within one bin width of the exact percentile")(
+      abs(col("est") - exactOf) > 100.0)
+    out.orderBy("q_permille")
   }
 }

@@ -12,14 +12,16 @@ import java.util.concurrent.atomic.AtomicBoolean
   *     intermediates and hands them to [[afterFirstAction]]: the
   *     caller's first action reads the cache, a later one recomputes
   *     from lineage (a freed checkpoint could not be recomputed);
+  *     declared queries hold and check through `graft.queries.Q.gated`,
+  *     which does this for them and frees on a failed check;
   *   - an EAGER function frees what it materialized with [[release]] in
   *     a `finally`, on success and on failure;
   *   - `localCheckpoint` stays only where lineage truncation is the
   *     point: iterative operators truncate through [[Rounds]], which
   *     frees each round once a later one is filled and every round on
   *     failure (the final round behind a returned frame is the one
-  *     leftover); the merge changelog is pinned so a non-deterministic
-  *     plan is evaluated once.
+  *     leftover); the merge changelog is pinned through `Rounds.pin`
+  *     so a non-deterministic plan is evaluated once.
   *
   * Several branches of ONE returned plan consume the intermediates, so
   * the operator cannot release them before returning. [[afterFirstAction]]

@@ -33,7 +33,7 @@ final class Rounds private {
   def shared[T](ds: Dataset[T]): Dataset[T] = {
     val c = ds.localCheckpoint(false)
     whole :+= c
-    fill(c)
+    Rounds.fill(c)
   }
 
   /** This round's checkpoint, filled now. */
@@ -46,16 +46,7 @@ final class Rounds private {
     val c = ds.localCheckpoint(false)
     open :+= c
     openFilled &&= eager
-    if (eager) fill(c) else c
-  }
-
-  /** The one count `localCheckpoint(true)` runs, run once the checkpoint
-    * is held: Spark persists the RDD before that job, so a failing job
-    * would otherwise leave it registered with nothing to free it.
-    */
-  private def fill[T](c: Dataset[T]): Dataset[T] = {
-    Rounds.rdds(c).foreach(_.count())
-    c
+    if (eager) Rounds.fill(c) else c
   }
 
   /** Runs `step` from `first` until it returns `Left(result)`. Step k
@@ -88,6 +79,26 @@ object Rounds {
 
   private def rdds(d: Dataset[_]) =
     d.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+
+  /** The one count `localCheckpoint(true)` runs, run once the checkpoint
+    * is held: Spark persists the RDD before that job, so a failing job
+    * would otherwise leave it registered with nothing to free it.
+    */
+  private def fill[T](c: Dataset[T]): Dataset[T] = {
+    rdds(c).foreach(_.count())
+    c
+  }
+
+  /** An eager checkpoint outside any loop (the merge changelog, whose
+    * plan must be evaluated once), taken the way a round's is: lazily,
+    * then filled, and freed if the fill throws. The caller frees it
+    * with [[CacheRelease.release]].
+    */
+  private[graft] def pin[T](ds: Dataset[T]): Dataset[T] = {
+    val c = ds.localCheckpoint(false)
+    try fill(c)
+    catch { case e: Throwable => CacheRelease.release(c); throw e }
+  }
 
   /** Runs an iterative operator's body and returns its frame. Every
     * checkpoint the body made through the [[Rounds]] it is handed is

@@ -156,6 +156,34 @@ class ResidueSpec extends AnyFunSuite {
     })
   }
 
+  test("GraftTable merges free their changelog pin when its plan throws") {
+    import spark.implicits._
+    val base = (1L to 40L).map(i => (i, s"n$i", i * 1.0)).toDF("k", "name", "bal")
+    // on a range, not a local Seq: a projection over a local relation is
+    // evaluated while the query is planned, before the pin's RDD exists
+    val failing = spark.range(3, 5).select(col("id").as("k"),
+      raise_error(lit("injected: changelog")).cast("string").as("name"),
+      lit(0.0).as("bal"), lit("U").as("op"), lit(1L).as("seq"))
+    val plain = freshRoot()
+    GraftTable.create(base, plain)
+    checkEager(assert(thrownFor(intercept[Exception] {
+      GraftTable.merge(plain, failing, "k", Seq("seq"), 0L)
+    }, "injected: changelog")))
+    val pruned = freshRoot()
+    GraftTable.createPartitioned(base, pruned, "k", numFiles = 4)
+    checkEager(assert(thrownFor(intercept[Exception] {
+      GraftTable.mergePruned(pruned, failing, "k", Seq("seq"), 0L)
+    }, "injected: changelog")))
+    checkEager(assert(thrownFor(intercept[Exception] {
+      GraftTable.mergeBatchIdempotent(failing.select("k", "seq", "name"), 0L,
+        freshRoot(), "w", "k", Seq("seq"))
+    }, "injected: changelog")))
+  }
+
+  test("a gated declared query frees its held frames after its first action") {
+    checkLazy(graft.queries.PipelineQueries.q40.run(spark, ""))
+  }
+
   test("release frees a checkpoint root, never a checkpoint beneath a persisted frame") {
     val ck = spark.range(100).toDF("id").localCheckpoint(true)
     val ckRdd = ck.queryExecution.analyzed match { case lr: LogicalRDD => lr.rdd.id }
